@@ -254,6 +254,61 @@ ROUND-21 QUEUE (library surface built r17):
 """
 
 QUERIES: dict[str, QueryFn] = {
+    # --- [r19 window, 1-50] reproduced exactly by
+    # ``python scripts/plan_next_window.py`` (no --register/--force).
+    "media_video_frame_overlap": _mm.media_video_frame_overlap,
+    "media_video_frame_decontaminate": _mm.media_video_frame_decontaminate,
+    "media_video_frame_decontaminate_stored": (
+        _mm.media_video_frame_decontaminate_stored
+    ),
+    "media_video_clean_funnel": _pl.media_video_clean_funnel,
+    "decontaminate_audit": _pl.decontaminate_audit,
+    "media_clean_funnel": _pl.media_clean_funnel,
+    "media_image_dedup": _mm.media_image_dedup,
+    "media_audio_dedup": _mm.media_audio_dedup,
+    "contamination_check": _cu.contamination_check,
+    "bloom_pruned_join": _sk.bloom_pruned_join,
+    "lm_bigram_score": _lm.lm_bigram_score,
+    "quantile_daily_merge": _sk.quantile_daily_merge,
+    "trade_kcore": _gph.trade_kcore,
+    "trade_pagerank": _gph.trade_pagerank,
+    "pq_search_appended": _pq.pq_search_appended,
+    "dedup_incremental": _wn.dedup_incremental,
+    "events_drift_chisq": _ev.events_drift_chisq,
+    "bpe_encode_ids_stored": _bpx.bpe_encode_ids_stored,
+    "pq_search_stored": _pq.pq_search_stored,
+    "decontaminate_stored": _wn.decontaminate_stored,
+    "dataset_publish_manifest": _cx.dataset_publish_manifest,
+    "similarity_filtered_topk": _sim.similarity_filtered_topk,
+    "dedup_exact": _dd.dedup_exact,
+    "dedup_ngram_jaccard": _dd.ngram_jaccard_pairs,
+    "dedup_minhash_portable": _dd.dedup_minhash_portable,
+    "pricing_summary": _rel.pricing_summary,
+    "top_revenue_orders": _rel.top_revenue_orders,
+    "nation_revenue": _rel.nation_revenue,
+    "region_acctbal": _rel.region_acctbal,
+    "promo_revenue": _rel.promo_revenue,
+    "small_quantity_revenue": _rel.small_quantity_revenue,
+    "order_priority": _rel.order_priority,
+    "top_supplier": _rel.top_supplier,
+    "returns_rollup": _rel.returns_rollup,
+    "cross_nation_volume": _rel.cross_nation_volume,
+    "market_share": _rel.market_share,
+    "disjunctive_revenue": _rel.disjunctive_revenue,
+    "large_orders": _rel.large_orders,
+    "idle_customer_balance": _rel.idle_customer_balance,
+    "nation_profit": _rel.nation_profit,
+    "returned_customer_revenue": _rel.returned_customer_revenue,
+    "important_part_types": _rel.important_part_types,
+    "supplier_counts_by_brand": _rel.supplier_counts_by_brand,
+    "customer_order_counts": _an.customer_order_counts,
+    "customers_without_orders": _an.customers_without_orders,
+    "repeat_customers": _an.repeat_customers,
+    "top_orders_per_customer": _an.top_orders_per_customer,
+    "monthly_revenue_running": _an.monthly_revenue_running,
+    "wordcount": _wc.wordcount,
+    "grep_count": _gr.grep_count,
+    # ================ position 51+ — outside the r19 driver window =====
     # --- [r18 window, 1-23] the 23 r14-stamped deadline entries
     # (age 4 at r18 close otherwise — the hard deadline; they
     # lead by planner rule).
@@ -329,66 +384,6 @@ QUERIES: dict[str, QueryFn] = {
     "media_video_dedup": _mm.media_video_dedup,
     "media_video_decontaminate": _mm.media_video_decontaminate,
     "media_video_decontaminate_stored": _mm.media_video_decontaminate_stored,
-    # ================ position 51+ — outside the r18 driver window =====
-    # Tail ordered oldest-stamp-first (the planner's fill rule),
-    # grouped by newest-stamp round. The leading r15-stamped
-    # block is the r19 deadline and LEADS the r19 window together
-    # with the r19 registrations (see the ROUND-19 queue in the
-    # module docstring).
-    # --- newest stamp r15:
-    "media_video_frame_overlap": _mm.media_video_frame_overlap,
-    "media_video_frame_decontaminate": _mm.media_video_frame_decontaminate,
-    "media_video_frame_decontaminate_stored": (
-        _mm.media_video_frame_decontaminate_stored
-    ),
-    "media_video_clean_funnel": _pl.media_video_clean_funnel,
-    "decontaminate_audit": _pl.decontaminate_audit,
-    "media_clean_funnel": _pl.media_clean_funnel,
-    "media_image_dedup": _mm.media_image_dedup,
-    "media_audio_dedup": _mm.media_audio_dedup,
-    "contamination_check": _cu.contamination_check,
-    "bloom_pruned_join": _sk.bloom_pruned_join,
-    "lm_bigram_score": _lm.lm_bigram_score,
-    "quantile_daily_merge": _sk.quantile_daily_merge,
-    "trade_kcore": _gph.trade_kcore,
-    "trade_pagerank": _gph.trade_pagerank,
-    "pq_search_appended": _pq.pq_search_appended,
-    "dedup_incremental": _wn.dedup_incremental,
-    "events_drift_chisq": _ev.events_drift_chisq,
-    "bpe_encode_ids_stored": _bpx.bpe_encode_ids_stored,
-    "pq_search_stored": _pq.pq_search_stored,
-    "decontaminate_stored": _wn.decontaminate_stored,
-    "dataset_publish_manifest": _cx.dataset_publish_manifest,
-    "similarity_filtered_topk": _sim.similarity_filtered_topk,
-    "dedup_exact": _dd.dedup_exact,
-    "dedup_ngram_jaccard": _dd.ngram_jaccard_pairs,
-    "dedup_minhash_portable": _dd.dedup_minhash_portable,
-    "pricing_summary": _rel.pricing_summary,
-    "top_revenue_orders": _rel.top_revenue_orders,
-    # --- newest stamp r16:
-    "nation_revenue": _rel.nation_revenue,
-    "region_acctbal": _rel.region_acctbal,
-    "promo_revenue": _rel.promo_revenue,
-    "small_quantity_revenue": _rel.small_quantity_revenue,
-    "order_priority": _rel.order_priority,
-    "top_supplier": _rel.top_supplier,
-    "returns_rollup": _rel.returns_rollup,
-    "cross_nation_volume": _rel.cross_nation_volume,
-    "market_share": _rel.market_share,
-    "disjunctive_revenue": _rel.disjunctive_revenue,
-    "large_orders": _rel.large_orders,
-    "idle_customer_balance": _rel.idle_customer_balance,
-    "nation_profit": _rel.nation_profit,
-    "returned_customer_revenue": _rel.returned_customer_revenue,
-    "important_part_types": _rel.important_part_types,
-    "supplier_counts_by_brand": _rel.supplier_counts_by_brand,
-    "customer_order_counts": _an.customer_order_counts,
-    "customers_without_orders": _an.customers_without_orders,
-    "repeat_customers": _an.repeat_customers,
-    "top_orders_per_customer": _an.top_orders_per_customer,
-    "monthly_revenue_running": _an.monthly_revenue_running,
-    "wordcount": _wc.wordcount,
-    "grep_count": _gr.grep_count,
     "inverted_index": _ii.inverted_index,
     "doc_chunks": _ta.doc_chunks,
     "pack_sequences": _ta.pack_sequences,
