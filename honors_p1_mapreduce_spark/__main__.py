@@ -123,7 +123,7 @@ def main(argv: list[str] | None = None) -> None:
         finally:
             # operators persist() intermediates for their own
             # multi-consumer plans and leave cleanup to the caller
-            # that materializes the result (same contract bench.py
+            # that materializes the result (same contract perfbench
             # honors) — drop them so repeated CLI queries in one
             # session don't accumulate cached frames; reset_memos
             # also releases the build-once artifacts and the enrolled

@@ -31,7 +31,7 @@ maintained frame (invariant: untouched words contribute identical
 pairs, so counts stay exact). At a production 32 K-merge run this is
 the difference between 32 K full-vocab shuffles and 32 K
 touched-fraction-sized ones — late rounds touch a vanishing slice of
-the vocabulary (see scripts/probe_bpe_incremental.py). Below
+the vocabulary (measured in round 6, git history). Below
 ``BPE_INCREMENTAL_MIN_VOCAB`` words the trainer falls back to full
 per-round recompute: on a toy vocab the delta machinery's extra
 per-round jobs cost more than the explode they avoid, and the two
@@ -144,14 +144,14 @@ def _pair_counts(vocab: DataFrame) -> DataFrame:
 # more than just re-exploding the whole tiny vocab — measured at the
 # driver corpus's ~31-word vocab, full recompute is ~2-4x faster per
 # round, while at 100 K+ words the explode dominates and delta wins
-# (scripts/probe_bpe_incremental.py measures both corpora)
+# (both corpora measured in round 6, git history)
 BPE_INCREMENTAL_MIN_VOCAB = 4096
 
 # Sequential greedy BPE launches >= 1 Spark job per merge round (the
 # argmax's 1-row collect) — at a production 32 K merges that is 32 K
 # job launches regardless of how cheap delta maintenance made each
-# round (round-6 verdict #4; scripts/probe_bpe_merges_per_sec.py
-# records the distributed rounds/second bound). The standard fix is
+# round (round-6 verdict #4; the distributed rounds/second bound was
+# measured in round 7, git history). The standard fix is
 # the one every production trainer uses: the corpus-sized work (scan
 # + word-frequency aggregate) stays distributed, and the MERGE LOOP —
 # whose working set is only the distinct-word vocab — runs

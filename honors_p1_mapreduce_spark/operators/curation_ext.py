@@ -195,8 +195,8 @@ def token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 def budget_select_docs(feats: DataFrame) -> DataFrame:
     """The histogram-cutoff selection stage over any (doc_id, qb,
     bpe_tokens) frame -> selected (doc_id, bpe_tokens) — factored so
-    the scale A/B (scripts/probe_budget_ab.py) can drive it against a
-    naive global-window twin on synthetic frames."""
+    a scale A/B can drive it against a naive global-window twin on
+    synthetic frames (measured in round 6, git history)."""
     feats = feats.persist()
     buckets = feats.groupBy("qb").agg(
         F.sum("bpe_tokens").alias("bt"), F.count("*").alias("nd")

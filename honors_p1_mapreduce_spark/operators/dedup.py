@@ -167,7 +167,7 @@ def ngram_jaccard_pairs(
     # re-tokenizing the corpus; persisting BEFORE the df-cap keeps the
     # corpus scan to exactly one (the hot boilerplate tail it retains
     # is bounded by the same O(tokens)). Measured 4.4 -> 2.4 s at
-    # sf0.1; released by the bench's clearCache between queries.
+    # sf0.1; released by the caller's clearCache between queries.
     sh = (
         _doc_shingles(docs, n)
         .select("doc_id", F.md5("shingle").alias("sh"))
@@ -284,7 +284,7 @@ def containment_pairs_from(
     # one. The rebind below makes the handle unreachable by design:
     # the cache entry is left to LRU eviction (callers consume the
     # returned lazy frame, so eager unpersist here would defeat it);
-    # the bench's clearCache between queries releases it, and
+    # the caller's clearCache between queries releases it, and
     # long-lived sessions can spark.catalog.clearCache().
     sh = (
         _doc_shingles(docs, n)

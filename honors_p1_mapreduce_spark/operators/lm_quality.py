@@ -30,7 +30,7 @@ columnar frame (InMemoryTableScan, pinned by
 tests/test_plan_shapes.py). MEMORY_AND_DISK: at 100 TB the exploded
 occurrences (~2x corpus text) spill to local disk, the same
 disk-for-rescan trade a shuffle materialization makes. Cleanup is
-the caller's, per the repo cache policy (bench.py / CLI clearCache).
+the caller's, per the repo cache policy (perfbench / CLI clearCache).
 Shuffle volume is O(corpus bigram occurrences) for the occurrence
 join and O(|bigram vocab|) for the model build; the corpus is never
 joined to itself and nothing is collected to the driver. At 100 TB
@@ -56,7 +56,7 @@ PPM = 1_000_000  # probability fixed-point scale (parts per million)
 # fixed in r10/r11, but the r11 advisor flagged that the read path
 # still leaked one cached frame per invocation until a session-level
 # clearCache. Each read-path call enrolls its frames here and
-# ``registry.reset_memos()`` — which bench.py and the CLI invoke
+# ``registry.reset_memos()`` — which perfbench and the CLI invoke
 # after materializing each query, and the pytest session fixture
 # invokes at teardown (tests/conftest.py) — unpersists and clears
 # them, exactly like the BPE/PQ/winnow memo caches. (The alternative — eagerly localCheckpoint-ing the result —
@@ -427,7 +427,8 @@ def lm_retract_with(
     """The takedown half of :func:`lm_model_retract` against an
     already-persisted count artifact: delta-count the removed split,
     subtract, re-derive scores, score the kept corpus. Factored so
-    the bench attributes train_write vs retract+serve separately.
+    a timing run can attribute train_write vs retract+serve
+    separately.
 
     The reconciled count tables are MATERIALIZED here (eager
     localCheckpoint — they are vocab-sized, the whole point of the

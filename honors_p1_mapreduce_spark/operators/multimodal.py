@@ -2163,7 +2163,7 @@ def media_audio_neardup(
     + dual clique guards (hot-fingerprint cap + oversized-bucket
     skip) as the image family (section comment above). Library
     surface since r10; probed near output-linear at 10x data
-    (R10_SCALE_PROBE.json)."""
+    (measured in round 10, git history)."""
     from pyspark.storagelevel import StorageLevel
 
     wavs = media_real_table(spark, sf_dir).filter(
@@ -2533,7 +2533,7 @@ def media_audio_decontaminate(
     (tests/test_multimodal.py::test_media_audio_decontaminate_seeded_leak:
     planted gain twin at hamming 0 + one-swap retouch at its computed
     hamming, engine and DuckDB agreeing on both), plus the 4-worker
-    determinism check (R12_CLUSTER_CHECK.json)."""
+    determinism check (measured in round 12, git history)."""
     from .winnow import EVAL_MOD, EVAL_RESIDUE
 
     wavs = media_real_table(spark, sf_dir).filter(
@@ -2982,7 +2982,7 @@ def video_frame_fingerprints(media: DataFrame) -> DataFrame:
     tests/test_properties.py::
     test_video_frame_fingerprints_total_over_arbitrary_bytes
     (rows-or-skip over arbitrary bytes, exact kernel agreement) and
-    the 4-worker determinism check R13_VIDEO_CLUSTER_CHECK.json."""
+    the 4-worker determinism check (round 13, git history)."""
     acc = _skip_acc(media.sparkSession.sparkContext, "video")
     need = 3 * VIDEO_FRAME_FP_GRAYS
 
@@ -3370,7 +3370,7 @@ def audio_window_fingerprints(media: DataFrame) -> DataFrame:
     family's contract. Contract evidence (r13 verdict #7):
     tests/test_properties.py::
     test_audio_window_fingerprints_total_over_arbitrary_bytes and
-    the shared-join cluster check R13_VIDEO_CLUSTER_CHECK.json (the
+    the shared-join cluster check of round 13 (git history; the
     snippet tier rides the identical item_fp_overlap_pairs /
     _sub_item_decontam_flags machinery pinned there)."""
     acc = _skip_acc(media.sparkSession.sparkContext, "audio")
@@ -3587,7 +3587,7 @@ def image_tile_fingerprints(media: DataFrame) -> DataFrame:
     counts like any undecodable payload. Contract evidence (r13
     verdict #7): tests/test_properties.py::
     test_image_tile_fingerprints_total_over_arbitrary_bytes and the
-    shared-join cluster check R13_VIDEO_CLUSTER_CHECK.json."""
+    shared-join cluster check of round 13 (git history)."""
     acc = _skip_acc(media.sparkSession.sparkContext, "image")
     tile_px = IMG_TILE_ROWS * IMG_W  # 16 — the kernel width
     stride_px = IMG_TILE_STRIDE_ROWS * IMG_W  # 12

@@ -968,7 +968,7 @@ def pq_write_base_index(
 ) -> None:
     """Train codebooks on the BASE split only and persist the base
     index — the offline stage of the incremental cycle, factored out
-    of :func:`pq_search_appended` so the bench can attribute the
+    of :func:`pq_search_appended` so a timing run can attribute the
     train/write vs append vs serve stages separately (r9 verdict #7)."""
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.filter(

@@ -1,8 +1,11 @@
 """Central query registry — the engine's analytics surface.
 
 ``QUERIES`` maps name -> (spark, sf_dir) -> DataFrame; ``ORACLES``
-maps the same names to ANSI-SQL DuckDB twins (omitted for genuinely
-non-SQL-expressible ops, which get the driver's rows-only check).
+maps the same names to ANSI-SQL DuckDB twins. The five queries
+without a twin are numpy-hash or approximate fast paths; each has an
+oracle-green exact sibling and an agreement or recall test, and
+tests/test_cli.py pins that set. The order of ``QUERIES`` carries no
+meaning.
 ``__spark_entry__.py`` re-exports these to the driver.
 """
 
@@ -81,181 +84,8 @@ def reset_memos() -> None:
                     pass
         cache.clear()
 
-"""Ordering note: the driver checks exactly the FIRST 50 entries each
-round, so the window must ROTATE so no query's newest driver stamp
-ever ages past the freshness bound.
-
-FRESHNESS BOUND (r11 verdict #2 RULING): relaxed from 2 rounds to 3 —
-at any round close, every entry's newest stamp must satisfy
-stamp >= close - 3, which raises the registry's saturation cap from
-150 to 200 entries (four 50-slot windows; steady-state restamp cycle
-<= 4 rounds). Retained condition: any entry whose IMPLEMENTING CODE
-PATH changed since its newest stamp must enter the NEXT window
-regardless of age (the media_image_neardup r10->r11 precedent — even
-pinned-behavior-identical changes restamp). Pinned by
-tests/test_cli.py::test_registry_freshness_bound.
-
-Rows-only policy (round 8, unchanged by the relax): the 5 rows-only
-queries (similarity_ann_topk, embedding_neardup, dedup_minhash,
-semantic_dedup_fast — numpy hash families / numpy twin — plus
-events_winsorized_stats_fast, the approx_percentile twin added r7;
-each has an oracle-green exact/portable sibling and an
-agreement/recall pytest) normally sit at the tail so oracle slots
-aren't spent on `no_oracle` rows, but they REJOIN the window
-periodically so the driver keeps confirming they execute — their
-execution cadence shares the 3-round bound. Invariant: no rows-only
-query other than these 5 sanctioned twins may occupy a window slot —
-pinned by
-tests/test_cli.py::test_driver_window_rows_only_queries_are_sanctioned
-and tests/test_cli.py::test_sanctioned_twin_execution_cadence.
-
-STAMP/REORDER PAIRING (r12 advisor): the tripwire tests
-(test_registry_freshness_bound, test_window_covers_planner_mandatory)
-compute the building round from the NEWEST committed
-CORRECTNESS_r*.json — so the moment the driver's round-N stamp file
-lands, the round-(N+1) window becomes mandatory and the tests fail
-until this dict is reordered to match ``plan_next_window.py``. That
-failure is the work order, by design: the FIRST commit of every round
-must be the rotation commit (reorder this dict against the new stamp
-file), after which the suite is green for the rest of the round.
-Never commit a new CORRECTNESS stamp into a tree whose registry
-still carries the previous window without immediately following with
-the rotation.
-
-ROUND-18 WINDOW (this ordering — reproduced exactly by
-``python scripts/plan_next_window.py --register
-decontaminate_bloom_prefilter dedup_containment contamination_stored
---force lm_interp_score lm_score_stored lm_model_retract`` on the
-committed CORRECTNESS_r01..r17 history; rotation applied by
-scripts/rotate_registry_r18.py):
-  1-23    the 23 r14-stamped deadline entries (dedup_minhash ..
-          similarity_doc_quality_topk) — age 4 at r18 close
-          otherwise, the hard deadline; they lead by planner rule.
-  24-26   the r15-built curation trio REGISTERS (registry 173 -> 176;
-          r15 verdict #3 schedule, confirmed r16 verdict #5 and r17
-          verdict #8): decontaminate_bloom_prefilter,
-          dedup_containment, contamination_stored — details below.
-  27-29   FORCED RESTAMPS (--force, the media_image_neardup
-          precedent): lm_interp_score, lm_score_stored,
-          lm_model_retract — their code path moved when
-          _lm_count_frames was factored through _lm_count_frames_from
-          for the r17 snapshot-refresh delta passes (lm_quality.py).
-          Behavior-identical (delegation only; pinned by the full
-          suite), but the freshness rule restamps on any code path
-          move.
-  30-50   oldest-stamp-first fill: 21 of the r15-stamped block
-          (CORRECTNESS_r15 order).
-Total 50. Outside-window ages at r18 close: 50@1, 49@2, 27@3 — bound
-holds (planner output re-checked after the registrations settled;
-the r15-stamped leftovers lead the r19 deadline block).
-
-REGISTERED r18 (details; built r15, queued behind the r17
-substring-cut pair):
-  decontaminate_bloom_prefilter (curation.py) — the exact
-    contamination tier served through a CONSTANT-SIZE Bloom runtime
-    filter instead of the eval-keys broadcast; false positives cancel
-    in the shared exact tail, so CONTAMINATION_ORACLE gates both
-    paths (the bloom_pruned_join proof pattern applied to the
-    decontamination family). 10x probe: scale ratio 1.75x matches
-    the exact tier's 1.74x with row equality at both scales
-    (R15_SURFACES_PROBE.json, including the md5-vs-native probe
-    lesson).
-  dedup_containment (dedup.py:containment_pairs) — ASYMMETRIC n-gram
-    containment |A∩B|/|A|, the doc-in-doc mode Jaccard misses;
-    directional (inner_doc, outer_doc) output, its own SQL oracle,
-    same df-capped one-self-join skeleton as dedup_ngram_jaccard;
-    10x probe output-bound (936x rows at 5.5x time on the
-    rotated-copy clique corpus).
-  contamination_stored (curation.py) — the exact tier's stored
-    benchmark-registry cycle (contamination_write_index ->
-    contamination_from_index; informative-key set FROZEN at build,
-    the dedup_incremental convention), roundtrip bit-identical so
-    CONTAMINATION_ORACLE gates it too — completing exact-tier
-    lifecycle parity with the fuzzy/perceptual families; streaming
-    twin (streaming_contamination, drained store == batch, pinned).
-  Goldens + exact-equality + oracle parity green at sf0.001/sf0.01 at
-  build time (tests/test_curation.py, R15_QUEUED_PREVERIFY.json).
-  Registry 173 -> 176 at their registration, within the 200 cap.
-
-ROUND-19 FORCED RESTAMPS (the media_image_neardup precedent; code
-paths moved by the r18 optimization round, oracle-green at both SFs
-when they moved — run the r19 rotation with ``--force`` on):
-  bpe_train_merges, bpe_encode_stats — bpe.py's local trainer now
-    also memoizes the word->syms end state (_SYMS_CACHE) and the
-    encode consumers assemble the word->ids table driver-side.
-  similarity_pq_topk, similarity_pq_rerank_topk — pq.py's
-    _sq_l2_static single-expression parse + the shared query-vector
-    collect (r18 commits). (The rest of the touched set —
-    bpe_encode_ids, pack_token_ids, media_png_decode — is in the r18
-    window and restamps now; bpe_encode_ids_stored, pq_search_stored,
-    pq_search_appended, decontaminate_audit are r15-stamped and lead
-    the r19 deadline block by age anyway.)
-
-ROUND-19 QUEUE (library surfaces built r16, behind the r17/r18
-backlog; parity green at both SFs at build time and re-verified on
-the final r16 tree — R16_QUEUED_PREVERIFY.json):
-  corpus_snapshot_diff (curation_ext.py) — recrawl delta attribution:
-    added/removed/changed docs between two content-hashed corpus
-    snapshots via ONE full-outer equi-join on doc_id (unique keys, no
-    skew; bucketed snapshots make it zero-shuffle at scale), output
-    O(churn); own SQL oracle, golden + Python differential.
-  winnow_index_refresh (curation_ext.py) — the stored fingerprint
-    index maintained BY that delta instead of full rebuild:
-    removed/changed rows leave by anti-join deletion (the retract
-    shape), only added/changed docs are re-fingerprinted (O(churn)
-    extraction), union ships the refreshed index, decontamination
-    serves from it; refresh == rebuild bit-for-bit (pytest
-    frame-equality + an oracle re-deriving from the NEW snapshot) —
-    completing the index lifecycle: write/read-back (r8), append
-    (r9), retract (r10), refresh (r16).
-  winnow_index_refresh_stored (curation_ext.py, built r17 per the
-    r16 verdict #3 + advisor) — the family's *_stored twin: the OLD
-    index is a pre-shipped build-if-absent artifact and maintenance
-    is MERGE-ON-READ (tombstones + delta rows, O(churn) write;
-    winnow_refresh_write_delta / winnow_read_index_mor /
-    winnow_compact_index), so the registered number measures
-    maintenance + serve, not rebuild + maintenance + serve. Output
-    bit-identical to winnow_index_refresh — the shared oracle gates
-    both (pytest: mor == eager == rebuild, compaction equality,
-    base-reuse pin).
-  Registry 176 -> 179 at their registration, within the 200 cap
-  (feasibility: scripts/simulate_rotation_r16.py shows >= 22 free
-  slots at r19 before these; re-check with the r17 planner sim).
-
-ROUND-20 QUEUE (library surface built r17, r16 verdict #6):
-  pq_index_refresh (pq.py) — the ANN member of the snapshot-delta
-    lifecycle: retract removed/changed code rows, encode
-    added/changed vectors against the FROZEN stored codebooks (the
-    append shape — per-vector assignment, no retraining), serve
-    two-stage search from the refreshed generation over the NEW
-    snapshot. Snapshot law shared with the documents table (SNAP_*
-    constants on vec_id; 'changed' = embedding rotated one element —
-    a pure permutation, engine-portable bitwise). refresh ==
-    rebuild-with-frozen-codebooks code-for-code (pytest) and the
-    oracle re-derives the search end-to-end training on the OLD
-    snapshot CTE while encoding/serving the NEW one
-    (_pq_chain_sql train_src/encode_src split — default-args SQL
-    byte-identical to the stamped oracles). Parity green at
-    sf0.001+sf0.01 at build time.
-
-ROUND-21 QUEUE (library surface built r17):
-  lm_model_refresh (lm_quality.py) — the LM member of the
-    snapshot-delta lifecycle, completing refresh parity across all
-    three artifact families (winnow index r16-17, PQ codes r17, LM
-    counts r17): counts(new) = counts(old) - counts(leaving docs,
-    OLD text) + counts(entering docs, NEW text) — two churn-sized
-    tokenize passes plus vocab-sized joins (retract_counts + its
-    additive mirror merge_counts), score table re-derived, NEW
-    snapshot scored. refresh == retrain bit-for-bit (exact integer
-    counts; pytest pins the reconciled count frames against a
-    from-scratch recount) and the oracle retrains from the NEW
-    snapshot CTE (the winnow substitution pattern). Parity green at
-    sf0.001+sf0.01 at build time.
-"""
 
 QUERIES: dict[str, QueryFn] = {
-    # --- [r19 window, 1-50] reproduced exactly by
-    # ``python scripts/plan_next_window.py`` (no --register/--force).
     "media_video_frame_overlap": _mm.media_video_frame_overlap,
     "media_video_frame_decontaminate": _mm.media_video_frame_decontaminate,
     "media_video_frame_decontaminate_stored": (
@@ -308,10 +138,6 @@ QUERIES: dict[str, QueryFn] = {
     "monthly_revenue_running": _an.monthly_revenue_running,
     "wordcount": _wc.wordcount,
     "grep_count": _gr.grep_count,
-    # ================ position 51+ — outside the r19 driver window =====
-    # --- [r18 window, 1-23] the 23 r14-stamped deadline entries
-    # (age 4 at r18 close otherwise — the hard deadline; they
-    # lead by planner rule).
     "dedup_minhash": _dd.dedup_minhash_pairs,
     "bucketed_join_revenue": _rel.bucketed_join_revenue,
     "media_png_decode": _mm.media_png_decode,
@@ -335,34 +161,12 @@ QUERIES: dict[str, QueryFn] = {
     "importance_sample": _imp.importance_sample,
     "events_multi_rollup": _ev.events_multi_rollup,
     "similarity_doc_quality_topk": _cm.similarity_doc_quality_topk,
-    # --- [r18 window, 24-26] the r15-built curation trio
-    # REGISTERS (registry 173 -> 176, r15 verdict #3
-    # schedule / r17 verdict #8): Bloom-prefiltered exact
-    # decontamination (constant-size runtime filter, false
-    # positives cancel in the shared exact tail, so
-    # CONTAMINATION_ORACLE gates it), asymmetric n-gram
-    # containment (doc-in-doc mode Jaccard misses; own SQL
-    # oracle), and the exact tier's stored cycle
-    # (roundtrip-bit-identical, shared oracle). Parity
-    # green at sf0.001+sf0.01 at build time and re-verified
-    # on the final r16 tree (R15_QUEUED_PREVERIFY.json,
-    # R16_QUEUED_PREVERIFY.json); any driver red is
-    # regression, not design.
     "decontaminate_bloom_prefilter": _cu.decontaminate_bloom_prefilter,
     "dedup_containment": _dd.containment_pairs,
     "contamination_stored": _cu.contamination_stored,
-    # --- [r18 window, 27-29] FORCED RESTAMPS (the
-    # media_image_neardup precedent): the lm_* trio's code
-    # path moved when _lm_count_frames factored through
-    # _lm_count_frames_from (r17 snapshot-refresh delta
-    # passes, lm_quality.py). Behavior-identical
-    # (delegation only; pinned by the suite), but the
-    # freshness rule restamps on any code path move.
     "lm_interp_score": _lm.lm_interp_score,
     "lm_score_stored": _lm.lm_score_stored,
     "lm_model_retract": _lm.lm_model_retract,
-    # --- [r18 window, 30-50] oldest-stamp-first fill: 21
-    # of the r15-stamped block (CORRECTNESS_r15 order).
     "winnow_fingerprints_chunked": _wn.winnow_fingerprints_chunked,
     "decontaminate_neardup": _wn.decontaminate_neardup,
     "events_value_mad_outliers": _cx.events_value_mad_outliers,
@@ -414,7 +218,6 @@ QUERIES: dict[str, QueryFn] = {
     "events_moving_stats": _ev.events_moving_stats,
     "events_daily_pivot": _ev.events_daily_pivot,
     "hll_daily_users": _sk.hll_daily_users,
-    # --- newest stamp r17:
     "user_retention": _ev.user_retention,
     "events_value_deciles": _ev.events_value_deciles,
     "word_typo_pairs": _cx.word_typo_pairs,

@@ -21,7 +21,7 @@ def spark():
     yield s
     # release the build-once session memos and the enrolled LM
     # read-path frames (lm_quality._READ_FRAMES_CACHE) at session end
-    # — the same contract bench.py and the CLI honor per query (r12
+    # — the same contract perfbench and the CLI honor per query (r12
     # reviewer: the lm module's release comment named the test
     # session as a caller; make that true)
     from honors_p1_mapreduce_spark import registry

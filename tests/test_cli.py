@@ -51,469 +51,24 @@ def test_cli_query_list_and_run(sf_dir, spark, capsys):
     assert len(out) == 5 and all("\t" in line for line in out)
 
 
-def test_bench_line_fits_record_window():
-    """The run recorder keeps only the last 2000 bytes of bench output;
-    the printed JSON line must fit regardless of registry growth or
-    timing magnitudes (round 4's line outgrew the window and the
-    recorded bench row had parsed=null)."""
-    import json
-
-    import bench
-    from honors_p1_mapreduce_spark import registry
-
-    for magnitude in (0.001, 9.999, 12345.678):
-        timings = {n: magnitude for n in registry.QUERIES}
-        # WITH every optional line field at wide magnitudes — the r15
-        # norm_* fields pushed a real line to 1987/2000 bytes while
-        # this test built the minimal line and could not see it
-        line, full = bench.build_output(
-            timings,
-            0.1,
-            runs={n: [magnitude, magnitude] for n in timings},
-            calibration=[0.123456] * 10,
-            warm={n: magnitude for n in timings},
-            norm_calibration=[1234.5678] * 5,
-            norm_calibration_post=[2345.6789] * 3,
-            norm_timed={
-                "pre": [(float(i), 1234.5678) for i in range(5)],
-                "mid": [(600.0, 2345.6789), (605.0, 2345.6789)],
-                "end": [(1200.0, 3456.789), (1205.0, 3456.789)],
-                "window_sec": 1210.0,
-            },
-            # worst case for the r16 mover path: EVERY query is a
-            # >MOVER_RATIO mover vs the previous round — the byte
-            # budget must still hold
-            prev_timings={n: magnitude * 2 + 1 for n in timings},
-        )
-        assert len(line.encode()) < 1900, len(line)
-        parsed = json.loads(line)
-        assert parsed["metric"] == "headline_queries_total"
-        assert set(full["queries"]) == set(registry.QUERIES)
-        # minimal line still fits too
-        line2, _ = bench.build_output(timings, 0.1)
-        assert len(line2.encode()) < 1900
-
-
-def test_bench_weighted_median_normalizer():
-    """r15 verdict #5: the normalizer is the TIME-WEIGHTED median over
-    pre/mid/end sample groups — a host that is fast for the 20 s of
-    pre-sampling but slow for the rest of the suite must normalize by
-    the slow value, not the pre one; and normalizer_ok gates on
-    within-group spread only (between-group drift is what the
-    weighting absorbs)."""
-    import json
-
-    import bench
-
-    # fast pre (4.0 s), slow mid+end (5.0 s) over a 1200 s window:
-    # pre covers ~300 s of the window, mid+end ~900 s -> weighted
-    # median = 5.0 (the r15 pre-only median would read 4.0)
-    assert (
-        bench._weighted_median(
-            [(0.0, 4.0), (5.0, 4.0), (10.0, 4.0)]
-            + [(600.0, 5.0), (605.0, 5.0), (1190.0, 5.0), (1195.0, 5.0)],
-            1200.0,
-        )
-        == 5.0
-    )
-    # uniform samples -> plain median
-    assert bench._weighted_median([(0.0, 2.0), (50.0, 3.0), (100.0, 4.0)], 100.0) == 3.0
-    # empty -> 0 (defensive)
-    assert bench._weighted_median([], 100.0) == 0.0
-
-    timings = {"wordcount": 1.0, "q2": 2.0}
-    norm_timed = {
-        "pre": [(0.0, 4.0), (4.0, 4.1), (8.0, 4.0)],
-        "mid": [(600.0, 5.0), (605.0, 5.0)],
-        "end": [(1190.0, 5.0), (1195.0, 5.1)],
-        "window_sec": 1200.0,
-    }
-    line, full = bench.build_output(
-        timings,
-        0.1,
-        calibration=[0.5] * 10,
-        norm_calibration=[v for _, v in norm_timed["pre"]],
-        norm_timed=norm_timed,
-    )
-    parsed = json.loads(line)
-    # weighted median lands on the slow regime the suite actually ran in
-    assert parsed["norm_calibration_sec"] == 5.0
-    assert parsed["value_normalized"] == round(3.0 * bench.NORM_CAL_REF / 5.0, 3)
-    # within-group spreads are tiny -> ok, even though pre vs end
-    # group medians are 25 % apart (that's drift, reported separately)
-    assert parsed["normalizer_ok"] is True
-    assert parsed["norm_suite_drift_pct"] == 26.2  # (5.05-4.0)/4.0
-    assert full["norm_pre_median"] == 4.0
-    assert full["norm_group_medians"]["end"] == 5.05
-    # legacy path (no norm_timed) unchanged: pre-median normalizer
-    line2, _ = bench.build_output(
-        timings,
-        0.1,
-        calibration=[0.5] * 10,
-        norm_calibration=[4.0, 4.0, 4.1],
-    )
-    assert json.loads(line2)["norm_calibration_sec"] == 4.0
-
-
-def test_bench_line_surfaces_movers():
-    """r15 verdict #6: a FAST query whose time moved >MOVER_RATIO vs
-    the previous round's full file must appear in the printed line
-    even when the slowest-first fill would have cut it; sub-floor
-    ratio flips must not burn slots."""
-    import json
-
-    import bench
-    from honors_p1_mapreduce_spark import registry
-
-    names = sorted(registry.QUERIES)
-    # everything slow and flat except one fast regression + one
-    # sub-floor flip
-    timings = {n: 60.0 for n in names}
-    fast_mover, noise_flip = names[0], names[1]
-    timings[fast_mover] = 1.2  # was 0.4 -> 3x, above the 0.3 s floor
-    timings[noise_flip] = 0.09  # was 0.05 -> 1.8x but sub-floor
-    prev = dict(timings)
-    prev[fast_mover] = 0.4
-    prev[noise_flip] = 0.05
-    line, full = bench.build_output(timings, 0.1, prev_timings=prev)
-    parsed = json.loads(line)
-    assert fast_mover in parsed["queries"], "mover cut from the line"
-    assert noise_flip not in full["movers"], "sub-floor flip counted"
-    assert parsed["n_movers"] == 1
-    assert full["movers"] == [fast_mover]
-    # without prev the mover machinery stays silent (first round /
-    # missing full file)
-    line2, full2 = bench.build_output(timings, 0.1)
-    assert "n_movers" not in json.loads(line2)
-    assert "movers" not in full2
-
-
-def test_bench_mover_pass_requires_same_sf(tmp_path):
-    """r16 advisor: the mover comparison must be skipped when the
-    previous committed full file was produced at a different scale
-    factor — otherwise nearly every query reads as a mover."""
-    import json
-
-    import bench
-
-    p = tmp_path / "BENCH_FULL.json"
-    p.write_text(json.dumps({"sf": 0.01, "queries": {"wordcount": 0.1}}))
-    assert bench._prev_timings_for(0.1, str(p)) is None
-    p.write_text(json.dumps({"sf": 0.1, "queries": {"wordcount": 0.1}}))
-    assert bench._prev_timings_for(0.1, str(p)) == {"wordcount": 0.1}
-    # missing / unparsable file -> silently no mover pass
-    assert bench._prev_timings_for(0.1, str(tmp_path / "nope.json")) is None
-
-
-def test_bench_norm_timed_branch_keeps_post_drift_and_retries():
-    """r16 advisor: the norm_timed branch must keep emitting the
-    post-suite drift series the legacy branch recorded (main() still
-    pays the post samples' runtime); r16 verdict #4: pause-point
-    retry counts are surfaced so a retried line is auditable."""
-    import json
-
-    import bench
-
-    norm_timed = {
-        "pre": [(0.0, 4.0), (4.0, 4.0), (8.0, 4.0)],
-        "mid": [(600.0, 4.0), (605.0, 4.0)],
-        "end": [(1190.0, 4.0), (1195.0, 4.0)],
-        "window_sec": 1200.0,
-        "retries": {"mid": 1},
-    }
-    line, full = bench.build_output(
-        {"wordcount": 1.0},
-        0.1,
-        calibration=[0.5] * 10,
-        norm_calibration=[4.0, 4.0, 4.0],
-        norm_calibration_post=[4.6, 4.6, 4.6],
-        norm_timed=norm_timed,
-    )
-    parsed = json.loads(line)
-    assert full["norm_calibration_post_median"] == 4.6
-    assert full["norm_calibration_post_sec"] == [4.6, 4.6, 4.6]
-    assert parsed["norm_drift_pct"] == 15.0  # (4.6-4.0)/4.0 vs PRE
-    assert parsed["norm_retries"] == 1
-    assert full["norm_retry_counts"] == {"mid": 1}
-    # no retries -> no noise keys on the line
-    norm_timed2 = {**norm_timed, "retries": {}}
-    line2, full2 = bench.build_output(
-        {"wordcount": 1.0},
-        0.1,
-        calibration=[0.5] * 10,
-        norm_calibration=[4.0, 4.0, 4.0],
-        norm_timed=norm_timed2,
-    )
-    assert "norm_retries" not in json.loads(line2)
-    assert "norm_retry_counts" not in full2
-    assert "norm_drift_pct" not in json.loads(line2)
-
-
-def test_bench_headline_canonical_order():
-    """r11 verdict #5: bench times queries in a FIXED canonical
-    (name-sorted) order independent of the registry's window
-    rotation, so cross-round per-query deltas no longer absorb the
-    measured position effect (bench.py: winnow_index_retract 2.92 s
-    at position 1 vs 5.46 s at position ~100, zero code change)."""
-    import bench
-    from honors_p1_mapreduce_spark import registry
-
-    assert list(bench.HEADLINE) == sorted(registry.QUERIES)
-
-
-def test_bench_calibration_median_and_spread():
-    """r10 verdict #4: the cross-round normalizer must be the MEDIAN
-    of the calibration samples (robust to one GC-noisy sample) and
-    the printed line must carry the sample spread as the normalized
-    headline's error bar, with the documented bound applied."""
-    import json
-
-    import bench
-
-    timings = {"q": 10.0}
-    # one GC-pause outlier among ten samples: BOTH the median
-    # normalizer and the IQR spread must ignore it — that is the
-    # robustness the bound is calibrated for
-    cal = [0.5] * 9 + [1.0]
-    line, full = bench.build_output(timings, 0.1, calibration=cal)
-    parsed = json.loads(line)
-    assert parsed["calibration_sec"] == 0.5
-    assert parsed["value_normalized"] == 10.0  # CAL_REF/median == 1
-    assert parsed["calibration_spread_pct"] == 0.0  # IQR excludes it
-    assert parsed["calibration_ok"] is True
-    assert full["calibration_sec"] == cal  # raw samples preserved
-    assert full["calibration_median"] == 0.5
-    # genuinely wide WITHIN each pre/post window (not one outlier,
-    # not cross-window drift) must trip the bound
-    wide = [0.3, 0.75, 0.3, 0.75, 0.3, 0.75, 0.3, 0.75, 0.3, 0.75]
-    parsed2 = json.loads(bench.build_output(timings, 0.1, calibration=wide)[0])
-    assert parsed2["calibration_ok"] is False
-    assert parsed2["calibration_spread_pct"] > 30.0
-    assert parsed2["calibration_within_spread_pct"] > 30.0
-    # r17: the gate reads WITHIN-group spread (pre/post windows), the
-    # r16 normalizer-gate decision applied to the legacy gate — a
-    # host that merely changed speed BETWEEN the two windows is
-    # drift, not an invalid suite: quiet groups 30 % apart must pass
-    # the gate while the pooled spread and the drift stay reported
-    drifted = [0.5, 0.5, 0.5, 0.5, 0.5, 0.35, 0.35, 0.35, 0.35, 0.35]
-    parsed3 = json.loads(
-        bench.build_output(timings, 0.1, calibration=drifted)[0]
-    )
-    assert parsed3["calibration_ok"] is True
-    assert parsed3["calibration_within_spread_pct"] == 0.0
-    assert parsed3["calibration_drift_pct"] == 30.0
-    assert parsed3["calibration_spread_pct"] > 30.0
-
-
-def test_bench_normalizer_uses_long_calibration():
-    """r14 verdict #5: value_normalized divided by one noisy ~0.4 s
-    shuffle median — three calibration-valid runs of the same tree
-    normalized 23 % apart. The r15 protocol normalizes by the
-    compute-bound NORMALIZER workload's median, carries the
-    normalizer's OWN IQR spread + ok-bit on the line, and keeps the
-    short-shuffle fields untouched as the pre-flight/host band.
-    Without norm samples the pre-r15 computation still applies, so
-    old artifacts stay interpretable."""
-    import json
-
-    import bench
-
-    timings = {"q": 10.0}
-    # cal median 0.25 != CAL_REF: the pre-r15 path would normalize to
-    # 20.0, so the 10.0 below PROVES the long workload is the divisor
-    cal = [0.25] * 10
-    norm = [4.0] * 4 + [8.0]  # one GC outlier — median must ignore it
-    post = [4.4, 4.4, 4.4]  # degraded post-suite JVM -> drift only
-    line, full = bench.build_output(
-        timings,
-        0.1,
-        calibration=cal,
-        norm_calibration=norm,
-        norm_calibration_post=post,
-    )
-    parsed = json.loads(line)
-    # post-suite samples are a DRIFT diagnostic, never normalizer
-    # input: median(norm)=4.0 exactly despite the slower post batch
-    assert parsed["norm_drift_pct"] == 10.0
-    assert full["norm_calibration_post_median"] == 4.4
-    # normalized by the LONG workload: NORM_CAL_REF/median(norm) == 1
-    assert parsed["value_normalized"] == 10.0
-    assert parsed["norm_calibration_sec"] == 4.0
-    assert parsed["norm_calibration_spread_pct"] == 0.0
-    assert parsed["normalizer_ok"] is True
-    # the error band never reads below the measured between-run floor
-    assert parsed["normalized_band_pct"] == bench.NORM_BAND_FLOOR_PCT
-    # short-shuffle band still reported, unchanged semantics
-    assert parsed["calibration_sec"] == 0.25
-    assert parsed["calibration_ok"] is True
-    assert full["norm_calibration_sec"] == norm
-    assert full["norm_calibration_median"] == 4.0
-    # a wide normalizer distribution trips the normalizer's OWN bound
-    wide = [3.0, 3.3, 3.6, 4.0, 4.4, 4.8]
-    parsed2 = json.loads(
-        bench.build_output(timings, 0.1, calibration=cal, norm_calibration=wide)[0]
-    )
-    assert parsed2["normalizer_ok"] is False
-    assert (
-        parsed2["norm_calibration_spread_pct"] > bench.NORM_SPREAD_BOUND_PCT
-    )
-
-
-def test_bench_preflight_gate_shares_spread_definition():
-    """r13 verdict #4: the pre-flight gate and build_output must
-    apply the SAME spread definition (one helper, not two
-    near-copies), the gate's exit code must be distinct from a crash
-    (1) or bad usage (2), and --no-preflight-gate must parse — the
-    documented escape hatch for known-noisy hosts."""
-    import json
-
-    import bench
-
-    wide = [0.3, 0.35, 0.4, 0.45, 0.5, 0.55, 0.6, 0.65, 0.7, 0.75]
-    line, _ = bench.build_output({"q": 10.0}, 0.1, calibration=wide)
-    assert json.loads(line)["calibration_spread_pct"] == (
-        bench._cal_spread_pct(wide)
-    )
-    assert bench._cal_spread_pct(wide) > bench.CAL_SPREAD_BOUND_PCT
-    # one outlier among ten: IQR ignores it, the gate would pass
-    assert bench._cal_spread_pct([0.5] * 9 + [5.0]) == 0.0
-    assert bench.PREFLIGHT_EXIT_CODE not in (0, 1, 2)
-    assert bench.PREFLIGHT_ATTEMPTS >= 2
-
-
 def test_driver_window_rows_only_queries_are_sanctioned():
-    """The driver checks exactly the FIRST 50 registry entries each
-    round. Rows-only queries inside the window produce `no_oracle`
-    rows; the round-6 verdict asks the sanctioned fast twins to
-    rejoin the rotation periodically so the driver keeps confirming
-    they execute — but no OTHER query may enter the window without an
-    oracle (round-4 verdict). The set is the 4 numpy twins plus the
-    approx_percentile winsorize twin added round 7 (r7 verdict
-    "What's wrong" #3 asked for its rotation status to be decided:
-    it IS sanctioned — agreement-pinned in tests/test_events.py)."""
+    """Every registered query has a DuckDB twin except the five
+    sanctioned rows-only twins: the numpy hash/ANN families and the
+    approx_percentile winsorize twin. Each of those has an
+    oracle-green exact sibling and an agreement or recall pytest. A
+    new query cannot ship without an oracle unless it joins this set
+    here, and no oracle may name an unregistered query."""
     from honors_p1_mapreduce_spark import registry
 
     sanctioned = {
+        "dedup_minhash",
+        "embedding_neardup",
+        "events_winsorized_stats_fast",
         "semantic_dedup_fast",
         "similarity_ann_topk",
-        "embedding_neardup",
-        "dedup_minhash",
-        "events_winsorized_stats_fast",
     }
-    window = list(registry.QUERIES)[:50]
-    rows_only = {n for n in window if n not in registry.ORACLES}
-    assert rows_only <= sanctioned, (
-        f"unsanctioned rows-only queries inside the driver window: "
-        f"{rows_only - sanctioned}"
-    )
-    assert len(registry.QUERIES) >= 50
-
-
-def test_sanctioned_twin_execution_cadence():
-    """r10 verdict #7: the sanctioned rows-only twins ride on their
-    oracle-green siblings, so the driver must keep CONFIRMING they
-    execute — no twin's newest driver execution (a CORRECTNESS row
-    with spark_rows recorded, hash or no_oracle alike) may be older
-    than 3 rounds. The test reads the committed CORRECTNESS history,
-    so the cadence is pinned by arithmetic over real driver stamps,
-    not by a registry comment: a twin whose newest execution is
-    exactly 3 rounds old at the latest recorded round MUST hold a
-    slot in the CURRENT first-50 window (it executes in the round
-    being built); fresher twins may rotate out. Since the r11 verdict
-    #2 ruling the 3-round cadence coincides with the general relaxed
-    freshness bound pinned for ALL entries by
-    test_registry_freshness_bound — this test stays as the
-    twin-specific pin (twins have no oracle rows, so their evidence
-    is the execution stamp itself)."""
-    import glob
-    import json
-
-    from honors_p1_mapreduce_spark import registry
-
-    planner, repo = _planner()
-    executed: dict[str, int] = {}
-    rounds = []
-    for path in sorted(glob.glob(str(repo / "CORRECTNESS_r*.json"))):
-        rnd = planner.round_of(path)  # the one shared parse
-        if rnd is None:  # suffixed artifacts (e.g. *_r12_builder.json)
-            continue
-        rounds.append(rnd)
-        with open(path) as f:
-            data = json.load(f)
-        for name, rec in data.items():
-            if isinstance(rec, dict) and rec.get("spark_rows") is not None:
-                executed[name] = max(rnd, executed.get(name, 0))
-    assert rounds, "no CORRECTNESS history committed"
-    latest = max(rounds)
-    window = set(list(registry.QUERIES)[:50])
-    twins = sorted(set(registry.QUERIES) - set(registry.ORACLES))
-    assert twins, "sanctioned twins disappeared from the registry"
-    stale = []
-    for name in twins:
-        last = executed.get(name)
-        # age as of the round now being built (latest history + 1);
-        # a window slot counts as execution in that round.
-        age = (latest + 1) - last if last else None
-        if name in window:
-            age = 0
-        if age is None or age > 3:
-            stale.append((name, last))
-    assert not stale, (
-        "sanctioned twins past the 3-round execution cadence and not "
-        f"in the current window: {stale} (latest stamped round "
-        f"{latest})"
-    )
-
-
-def _planner():
-    """Load scripts/plan_next_window.py as a module — the single
-    implementation of the CORRECTNESS-history scan (r12 reviewer:
-    three near-copies of the glob/parse/newest-stamp loop had crept
-    in; the rotation tests now share the planner's)."""
-    import importlib.util
-    import pathlib
-
-    repo = pathlib.Path(__file__).resolve().parent.parent
-    spec = importlib.util.spec_from_file_location(
-        "plan_next_window", repo / "scripts" / "plan_next_window.py"
-    )
-    planner = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(planner)
-    return planner, repo
-
-
-def test_registry_freshness_bound():
-    """r11 verdict #2 RULING: the freshness bound is relaxed from 2
-    rounds to 3 — at any round close, every registry entry's newest
-    driver stamp must satisfy stamp >= close - 3 — and the saturation
-    cap rises from 150 to 200 entries (four 50-slot windows). This
-    test pins the bound by arithmetic over the committed CORRECTNESS
-    history, generalizing the twin-cadence pin to EVERY entry: an
-    entry whose newest stamp would be older than 3 rounds at the
-    close of the round now being built (latest history + 1) MUST hold
-    a slot in the CURRENT first-50 window, and a NEW entry with no
-    stamp at all must be in the window of the round that registers
-    it (the media_audio_neardup r11 precedent)."""
-    from honors_p1_mapreduce_spark import registry
-
-    assert len(registry.QUERIES) <= 200, "registry past the 200 cap"
-
-    planner, repo = _planner()
-    newest, latest = planner.newest_stamps(repo)
-    assert latest, "no CORRECTNESS history committed"
-    building = latest + 1
-    window = set(list(registry.QUERIES)[:50])
-    stale = []
-    for name in registry.QUERIES:
-        if name in window:
-            continue  # stamps in the round being built
-        last = newest.get(name)
-        if last is None or building - last > 3:
-            stale.append((name, last))
-    assert not stale, (
-        "entries past the 3-round freshness bound and not in the "
-        f"current window: {stale} (building round {building})"
-    )
+    assert set(registry.QUERIES) - set(registry.ORACLES) == sanctioned
+    assert set(registry.ORACLES) <= set(registry.QUERIES)
 
 
 def test_cli_query_describe(capsys):
@@ -524,47 +79,3 @@ def test_cli_query_describe(capsys):
     out = capsys.readouterr().out
     assert "token_budget_select" in out
     assert "histogram-cutoff" in out
-
-
-def test_bench_stage_splits_cover_registered_stored_cycles(spark):
-    """Every stage-split entry names a registered query (so BENCH_FULL
-    'stages' keys always join against 'queries'), and each family
-    lists at least a build stage and a serve stage."""
-    import bench
-    from honors_p1_mapreduce_spark import registry
-
-    splits = bench._stage_splits(spark, "/root/testdata/sf0.001")
-    assert set(splits) <= set(registry.QUERIES)
-    for name, stages in splits.items():
-        assert len(stages) >= 2, name
-        labels = [s for s, _ in stages]
-        assert len(labels) == len(set(labels)), name
-        assert all(callable(fn) for _, fn in stages), name
-
-
-def test_window_covers_planner_mandatory():
-    """The rotation arithmetic is executable (scripts/
-    plan_next_window.py, r12): every entry the planner derives as
-    MANDATORY from the committed CORRECTNESS history — deadline
-    entries whose newest stamp would age past the 3-round bound at
-    the close of the round being built, and registered entries with
-    no stamp at all — must hold a slot in the CURRENT first-50
-    window. (New registrations and changed-code-path forcings are
-    builder inputs the history cannot derive; they are covered by
-    test_registry_freshness_bound once their stamps land.)"""
-    from honors_p1_mapreduce_spark import registry
-
-    planner, repo = _planner()
-    newest, latest = planner.newest_stamps(repo)
-    building = latest + 1
-    names = list(registry.QUERIES)
-    mandatory = {
-        n
-        for n in names
-        if newest.get(n) is None or building - newest[n] > planner.BOUND
-    }
-    window = set(names[:50])
-    assert mandatory <= window, (
-        f"history-mandatory entries missing from the window: "
-        f"{sorted(mandatory - window)}"
-    )

@@ -757,7 +757,7 @@ def test_lm_read_path_frames_released_by_reset_memos(spark, sf_dir):
     the read path leaked one cached frame per invocation (the writer
     and retract paths were fixed in r10/r11). The frames now enroll
     in lm_quality._READ_FRAMES_CACHE and registry.reset_memos — which
-    bench.py and the CLI already call after materializing — must
+    perfbench and the CLI already call after materializing — must
     actually release the executor blocks, not just drop references."""
     import honors_p1_mapreduce_spark.operators.lm_quality as lm
     from honors_p1_mapreduce_spark import registry

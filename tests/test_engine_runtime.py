@@ -191,7 +191,8 @@ def test_task_retry_recovers_injected_failure(tmp_path):
     attempt is re-run and the job completes with the correct result.
     The default ``local[n]`` master never retries (maxFailures=1), so
     this runs in a subprocess with its own master — the same
-    attempt-aware injection as scripts/perf_straggler_cluster.py.
+    attempt-aware injection as the round-6 straggler measurement
+    (git history).
     The reference worker has no retry at all (a task failure fails
     the job); Spark's per-task attempts are the engine upgrade this
     pins."""

@@ -226,7 +226,7 @@ def test_semantic_dedup_fast_agrees_with_portable(spark):
     >= 95% identical kept flags and identical output cardinality, at
     sf0.1 (2000 vectors — 4x the default test SF; VERDICT r5 item 6;
     the round-6 probe measured agreement = 1.0 at this scale and
-    identical composed-chain outputs, scripts/probe_semdedup_chain.py)."""
+    identical composed-chain outputs; git history has the probe)."""
     from honors_p1_mapreduce_spark.operators.semdedup import (
         semantic_dedup,
         semantic_dedup_fast,
