@@ -2057,8 +2057,8 @@ MEDIA_IMAGE_DEDUP_ORACLE = _fp_dedup_oracle(_image_fp_oracle_core())
 #
 # LIBRARY SURFACE in round 10 (pytest + pre-verified oracle): the r10
 # driver window had exactly 50 slots (4 new + the 46-entry r7 block);
-# this operator is the planned occupant of round 11's single free
-# slot — see the registry rotation comment.
+# this operator was the planned occupant of round 11's single free
+# slot.
 
 
 def wav_volume_hash(content: bytes) -> int:
@@ -2230,7 +2230,7 @@ def media_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same-fingerprint cliques (the volume-variant copies of one clip)
     collapse to one node — never enumerated as pairs. Library surface
     in r10, REGISTERED r12 in the reserved window slot (r11 verdict
-    #3; see the registry rotation comment)."""
+    #3)."""
     from pyspark.storagelevel import StorageLevel
 
     wavs = media_real_table(spark, sf_dir).filter(
@@ -2346,8 +2346,7 @@ def media_decontaminate(
     dHash sits within ``max_hamming`` of any EVAL-split image's (the
     deterministic doc_id % EVAL_MOD == EVAL_RESIDUE split shared with
     the text tiers, winnow.py). Library surface in r11 with a
-    pre-verified oracle (see the registry rotation comment's
-    saturation note); the seeded-leak golden plants a retouched eval
+    pre-verified oracle; the seeded-leak golden plants a retouched eval
     twin and pins that it flags at its true hamming.
 
     The eval/train split filters the RAW image rows, not the
@@ -2519,8 +2518,8 @@ def media_audio_decontaminate(
     image tier over the audio fp core. The eval/train split filters
     the RAW wav rows before the mapInPandas barrier (the r11-advisor
     one-decode rule applied from birth). Library surface; registers
-    after the r13 backlog under the relaxed 3-round bound (registry
-    rotation comment), at which point ``decontaminate_audit`` can
+    after the r13 backlog under the relaxed 3-round bound, at
+    which point ``decontaminate_audit`` can
     fold it in as the fifth tier.
 
     Evidence note (measured r12): the driver corpora contain NO audio
@@ -2663,8 +2662,8 @@ MEDIA_AUDIO_DECONTAMINATE_STORED_ORACLE = MEDIA_AUDIO_DECONTAMINATE_ORACLE
 #
 # LIBRARY SURFACE in r13 (pytest + oracle parity at sf0.001/sf0.01):
 # the r13 driver window was planned and committed before this tier
-# landed, and the r14 window is already allocated (registry rotation
-# note) — the four registrable queries (media_video_neardup,
+# landed, and the r14 window is already allocated — the four
+# registrable queries (media_video_neardup,
 # media_video_dedup, media_video_decontaminate,
 # media_video_decontaminate_stored) queue for r15 slots, at which
 # point decontaminate_audit folds video in as the SIXTH tier (after

@@ -353,8 +353,7 @@ def media_clean_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(stage, media_type, n_items, n_bytes) per funnel stage and
     media kind — the multimodal curation capstone (section comment
     above). Library surface in r11 with a pre-verified oracle; the
-    planned occupant of an r12+ registry slot (see the registry
-    rotation comment's saturation note)."""
+    planned occupant of an r12+ registry slot."""
     from pyspark.storagelevel import StorageLevel
 
     from .multimodal import (

@@ -218,8 +218,7 @@ def dedup_substring_cut(
     corpus — AQE broadcasts the span side when the duplicated set is
     small, shuffle-joins otherwise; the rewrite itself is a map-only
     array filter (no per-token rows ever shuffle). r14 library
-    surface; queues for registration behind the r15/r16 split
-    (registry rotation note)."""
+    surface; queued for registration behind the r15/r16 split."""
     docs = load_table(spark, sf_dir, "documents", wide_scan=True).select("doc_id", "text")
     return substring_cut_from(docs, k=k, min_docs=min_docs)
 
