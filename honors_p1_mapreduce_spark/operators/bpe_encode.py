@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens_col, tokens_sql
 from ..sources.sinks import write_parquet_parallel
-from ..sources.tables import corpus_token, load_table
+from ..sources.tables import _artifact_dir, corpus_token, load_table
 from .bpe import (
     _SEP,
     _SYMS_CACHE,
@@ -753,32 +753,6 @@ def bpe_encode_ids_with(
         word_syms = _encode_word_syms(docs, merges)
         word_ids = _word_ids_table(word_syms, sym_ids, unk=UNK_ID)
     return _digest_select(_ids_stream_join(docs, word_ids))
-
-
-def _corpus_token(sf_dir: str) -> str:
-    """Deterministic short token for a corpus directory, derived from
-    the FULL normalized path (basename alone collides when two corpora
-    share a directory name, e.g. .../a/sf0.1 and .../b/sf0.1 — r8
-    advisor finding). Human-readable basename + 8-hex path hash."""
-    import hashlib
-    import os
-
-    norm = os.path.normpath(os.path.abspath(sf_dir))
-    base = os.path.basename(norm)
-    return f"{base}_{hashlib.md5(norm.encode()).hexdigest()[:8]}"
-
-
-def _artifact_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
-    """Deterministic scratch path for a registered stored-artifact
-    query: keyed by (applicationId, full-corpus-path token, kind) so
-    repeat calls within an application overwrite the same files —
-    bounded disk, and no staleness because every call REWRITES the
-    artifact before reading it back (unlike the in-session memos,
-    which assume path immutability — see bpe._MERGES_CACHE note).
-    Distinct corpora NEVER share a path, even with equal basenames
-    (:func:`_corpus_token`)."""
-    token = _corpus_token(sf_dir)
-    return f"/tmp/spark_graft_artifacts/{spark.sparkContext.applicationId}/{kind}_{token}"
 
 
 def bpe_encode_ids_stored(

@@ -364,8 +364,8 @@ def contamination_stored(
     and the SAME oracle gates both paths — completing exact-tier
     lifecycle parity with the fuzzy (decontaminate_stored) and
     perceptual (media_*_decontaminate_stored) families. Scratch:
-    per-application overwrite-in-place (``bpe_encode._artifact_dir``)."""
-    from .bpe_encode import _artifact_dir
+    per-application overwrite-in-place (``sources.tables._artifact_dir``)."""
+    from ..sources.tables import _artifact_dir
 
     d = _artifact_dir(spark, sf_dir, "contamination_eval_shingles")
     contamination_write_index(spark, sf_dir, d, n, df_cap)

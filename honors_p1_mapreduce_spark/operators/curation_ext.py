@@ -647,9 +647,9 @@ def dataset_publish_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute the identical integers).
 
     Scratch: per-application overwrite-in-place
-    (``bpe_encode._artifact_dir``), rewritten every call.
+    (``sources.tables._artifact_dir``), rewritten every call.
     """
-    from .bpe_encode import _artifact_dir
+    from ..sources.tables import _artifact_dir
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source", "n_chars"
@@ -848,7 +848,7 @@ def winnow_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-gated by the oracle, which re-derives decontamination from
     the NEW snapshot corpus — the winnow_index_retract proof pattern
     applied to the full add/remove/change lifecycle."""
-    from .bpe_encode import _artifact_dir
+    from ..sources.tables import _artifact_dir
     from .winnow import (
         decontaminate_from_index,
         winnow_fingerprints_chunked_from,
@@ -986,7 +986,7 @@ def winnow_index_refresh_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Build-if-absent is staleness-safe here, unlike for mutable
     scratch: the artifact dir is keyed by (applicationId, corpus
-    token) — see ``bpe_encode._artifact_dir`` — and the OLD-snapshot
+    token) — see ``sources.tables._artifact_dir`` — and the OLD-snapshot
     index is a pure deterministic function of the immutable corpus
     parquet, so within an application the path either holds exactly
     the right artifact or nothing.
@@ -995,7 +995,7 @@ def winnow_index_refresh_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff, same extraction, merge-on-read instead of eager
     materialization — pinned by pytest), so
     WINNOW_INDEX_REFRESH_ORACLE gates both paths."""
-    from .bpe_encode import _artifact_dir
+    from ..sources.tables import _artifact_dir
     from .winnow import (
         CONTAM_MIN_SHARED,
         _decontaminate_from_fps,

@@ -299,8 +299,8 @@ def lm_score_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
     write/read-back path — the same registered-cycle pattern as
     bpe_encode_ids_stored / pq_search_stored / decontaminate_stored.
     Scratch: per-application overwrite-in-place
-    (``bpe_encode._artifact_dir``), rewritten every call."""
-    from .bpe_encode import _artifact_dir
+    (``sources.tables._artifact_dir``), rewritten every call."""
+    from ..sources.tables import _artifact_dir
 
     d = _artifact_dir(spark, sf_dir, "lm_model")
     lm_write_model(spark, sf_dir, d)
@@ -414,7 +414,7 @@ def lm_model_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves at driver scale is the CORRECTNESS contract — retract ==
     rebuild, hash-gated — and the plan shape that makes the 100 TB
     claim mechanical."""
-    from .bpe_encode import _artifact_dir
+    from ..sources.tables import _artifact_dir
 
     d = _artifact_dir(spark, sf_dir, "lm_counts")
     lm_write_counts(spark, sf_dir, d)
@@ -549,7 +549,7 @@ def lm_model_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver hash-gates refresh == retrain; pytest additionally pins
     the reconciled count frames against a from-scratch recount of the
     NEW snapshot."""
-    from .bpe_encode import _artifact_dir
+    from ..sources.tables import _artifact_dir
     from .curation_ext import _snapshot_frames, snapshot_diff
 
     docs = load_table(spark, sf_dir, "documents")

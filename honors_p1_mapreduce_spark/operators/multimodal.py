@@ -21,6 +21,13 @@ and tested. Two codec tiers:
   binary in, per-item features out, frame sampling — runs and is
   reproducible in tests.
 
+Media decontamination (image, audio and video clips; video frames,
+audio windows and image tiles) is ONE tier table at the end of this
+module: a :class:`DecontamTier` per tier holds everything the tiers
+differ in, and the online, write-index, from-index and stored queries
+are written once over it. The streaming twins (streaming/curation.py)
+drain the same records.
+
 The demo media table derives its payloads from ``documents.text``
 (UTF-8 bytes) so ``media_stats`` stays fully oracle-checkable: DuckDB
 has no binary md5, but for UTF-8-derived payloads ``md5(text)`` is
@@ -65,12 +72,13 @@ from __future__ import annotations
 import hashlib
 import struct
 from collections.abc import Callable, Iterable
+from dataclasses import dataclass
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
+from ..sources.tables import _artifact_dir, load_table
 
 MEDIA_TYPES = ("image/png", "audio/wav", "video/mp4")
 
@@ -2054,11 +2062,6 @@ MEDIA_IMAGE_DEDUP_ORACLE = _fp_dedup_oracle(_image_fp_oracle_core())
 # The pair stage IS image_neardup_pairs: the banded hamming join and
 # both boilerplate guards are fingerprint-generic (doc_id +
 # PHASH_BITS-bit integer), so audio reuses them verbatim.
-#
-# LIBRARY SURFACE in round 10 (pytest + pre-verified oracle): the r10
-# driver window had exactly 50 slots (4 new + the 46-entry r7 block);
-# this operator was the planned occupant of round 11's single free
-# slot.
 
 
 def wav_volume_hash(content: bytes) -> int:
@@ -2278,15 +2281,10 @@ MEDIA_AUDIO_DEDUP_ORACLE = _fp_dedup_oracle(_audio_fp_oracle_core())
 
 DECONTAM_HAMMING_MAX = IMG_NEARDUP_BANDS - 1  # lossless banding bound
 
-# The image-tier membership predicate, defined ONCE (r13 advisor): the
-# clip-tier batch/streaming paths selected images as
-# media_type != 'audio/wav' while the tile tier enumerated
-# isin('image/bmp','image/ppm') — equivalent on today's three real
-# media types, but a fourth media type would have silently diverged
-# the tiers. EVERY image-tier split in the package (media_resize, the
-# neardup/dedup family, the clip + tile decontamination tiers, both
-# streaming twins, media_clean_funnel) now routes through this tuple
-# — the r14 review closed the sites the first pass skipped.
+# The image-tier membership predicate, defined ONCE: every
+# image-tier split in the package (media_resize, the neardup/dedup
+# family, the image decontamination tiers, media_clean_funnel) routes
+# through this tuple, so a fourth media type cannot diverge the tiers.
 IMAGE_MEDIA_TYPES = ("image/bmp", "image/ppm")
 
 
@@ -2337,117 +2335,6 @@ def _decontam_flags(
     )
 
 
-def media_decontaminate(
-    spark: SparkSession,
-    sf_dir: str,
-    max_hamming: int = DECONTAM_HAMMING_MAX,
-) -> DataFrame:
-    """(doc_id, n_eval_matches, min_hamming) — TRAINING images whose
-    dHash sits within ``max_hamming`` of any EVAL-split image's (the
-    deterministic doc_id % EVAL_MOD == EVAL_RESIDUE split shared with
-    the text tiers, winnow.py). Library surface in r11 with a
-    pre-verified oracle; the seeded-leak golden plants a retouched eval
-    twin and pins that it flags at its true hamming.
-
-    The eval/train split filters the RAW image rows, not the
-    fingerprint frame: ``image_fingerprints`` is a ``mapInPandas``
-    barrier Catalyst cannot push a doc_id predicate through, so
-    splitting AFTER fingerprinting made each branch decode the whole
-    corpus — two full decode passes for one query (r11 advisor).
-    Filtering ``imgs`` first restores the docstring's one-decode-pass
-    claim (per side, each side decoding only its own rows), matching
-    :func:`media_eval_write_index` / the stored path, and is
-    result-identical because the split predicate is per-doc and
-    fingerprinting is row-local.
-
-    The STREAMING twin (streaming/curation.py:
-    ``streaming_media_decontaminate``) inherits this query's driver
-    stamp transitively through the drained-store equivalence pytest
-    tests/test_streaming.py::test_streaming_media_decontaminate_matches_batch
-    (the ``streaming_dedup_incremental`` pattern, r11 verdict #7)."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    imgs = media_real_table(spark, sf_dir).filter(
-        F.col("media_type").isin(*IMAGE_MEDIA_TYPES)
-    )
-    is_eval = F.col("doc_id") % EVAL_MOD == EVAL_RESIDUE
-    eval_fps = (
-        image_fingerprints(imgs.filter(is_eval))
-        .select(F.col("fingerprint").alias("eval_fp"))
-        .distinct()
-    )
-    return _decontam_flags(
-        image_fingerprints(imgs.filter(~is_eval)), eval_fps, max_hamming
-    )
-
-
-def media_eval_write_index(
-    spark: SparkSession, sf_dir: str, index_dir: str
-) -> None:
-    """Materialize the EVAL split's distinct image fingerprints to
-    parquet — the benchmark-registry artifact a production pipeline
-    ships once and serves every ingest batch against (the
-    winnow_write_index pattern): eval sets change rarely, training
-    corpora arrive daily, so the decode of the eval side should never
-    be re-paid per batch."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    imgs = media_real_table(spark, sf_dir).filter(
-        F.col("media_type").isin(*IMAGE_MEDIA_TYPES)
-        & (F.col("doc_id") % EVAL_MOD == EVAL_RESIDUE)
-    )
-    (
-        image_fingerprints(imgs)
-        .select(F.col("fingerprint").alias("eval_fp"))
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/eval_fps")
-    )
-
-
-def media_decontaminate_from_index(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    max_hamming: int = DECONTAM_HAMMING_MAX,
-) -> DataFrame:
-    """Serve decontamination from a STORED eval-fingerprint index:
-    one map-only fingerprint pass over the training images + the
-    broadcast join — the eval corpus is never decoded again."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    imgs = media_real_table(spark, sf_dir).filter(
-        F.col("media_type").isin(*IMAGE_MEDIA_TYPES)
-        & (F.col("doc_id") % EVAL_MOD != EVAL_RESIDUE)
-    )
-    eval_fps = spark.read.parquet(f"{index_dir}/eval_fps")
-    return _decontam_flags(
-        image_fingerprints(imgs), eval_fps, max_hamming
-    )
-
-
-def media_decontaminate_stored(
-    spark: SparkSession,
-    sf_dir: str,
-    max_hamming: int = DECONTAM_HAMMING_MAX,
-) -> DataFrame:
-    """The full stored-index image-decontamination cycle as ONE
-    query: eval fingerprints -> parquet -> read back -> flag the
-    training side. The roundtrip is bit-identical to
-    :func:`media_decontaminate` (integer fingerprints survive parquet
-    losslessly), so the same end-to-end oracle hash-gates the
-    write/read-back path — the ``decontaminate_stored`` /
-    ``pq_search_stored`` registered-cycle pattern. Scratch:
-    per-application overwrite-in-place (``bpe_encode._artifact_dir``)."""
-    from .bpe_encode import _artifact_dir
-
-    d = _artifact_dir(spark, sf_dir, "media_eval_fps")
-    media_eval_write_index(spark, sf_dir, d)
-    return media_decontaminate_from_index(spark, sf_dir, d, max_hamming)
-
-
-
-
 def _decontam_oracle(fp_core_sql: str) -> str:
     """DuckDB twin of the perceptual decontamination tier, generic
     over the fingerprint derivation (the :func:`_fp_dedup_oracle`
@@ -2493,132 +2380,7 @@ FROM pairs GROUP BY doc_id
 MEDIA_DECONTAMINATE_ORACLE = _decontam_oracle(_image_fp_oracle_core())
 
 
-def media_audio_decontaminate(
-    spark: SparkSession,
-    sf_dir: str,
-    max_hamming: int = DECONTAM_HAMMING_MAX,
-) -> DataFrame:
-    """The AUDIO tier of the contamination family (r12): TRAINING
-    clips whose envelope-order fingerprint sits within ``max_hamming``
-    of any EVAL-split clip's — the contamination mode where a
-    benchmark's reference audio (or a volume-adjusted re-encode of
-    it; the fingerprint is gain-invariant by construction) leaks into
-    the training corpus. Output (doc_id, n_eval_matches, min_hamming),
-    the image tier's exact shape.
-
-    Completes decontamination modality parity with the NEAR-DUP
-    family (which has had image + audio members since r11): exact +
-    fuzzy text (winnow.py), perceptual image + audio (this module),
-    semantic embedding (similarity.py). Everything below
-    ``audio_fingerprints`` is SHARED with the image tier —
-    :func:`_decontam_flags` is fingerprint-generic, so the lossless
-    banding argument (hamming <= BANDS-1 pigeonhole), the broadcast
-    eval side, and the never-self-joining corpus all carry over
-    verbatim; the oracle shares :func:`_decontam_oracle` with the
-    image tier over the audio fp core. The eval/train split filters
-    the RAW wav rows before the mapInPandas barrier (the r11-advisor
-    one-decode rule applied from birth). Library surface; registers
-    after the r13 backlog under the relaxed 3-round bound, at
-    which point ``decontaminate_audit`` can
-    fold it in as the fifth tier.
-
-    Evidence note (measured r12): the driver corpora contain NO audio
-    contamination — 0 rows at sf0.01 AND sf0.1 (the ~1%-of-wavs eval
-    split's 56-bit envelope fingerprints are too diverse for a chance
-    training clip within hamming 3; the image tier reads 325 rows at
-    sf0.1 only because text-gradient dHashes collide far more). An
-    oracle stamp here is therefore an empty-vs-empty match; the
-    NON-TRIVIAL gate is the seeded-leak golden
-    (tests/test_multimodal.py::test_media_audio_decontaminate_seeded_leak:
-    planted gain twin at hamming 0 + one-swap retouch at its computed
-    hamming, engine and DuckDB agreeing on both), plus the 4-worker
-    determinism check (measured in round 12, git history)."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    wavs = media_real_table(spark, sf_dir).filter(
-        F.col("media_type") == "audio/wav"
-    )
-    is_eval = F.col("doc_id") % EVAL_MOD == EVAL_RESIDUE
-    eval_fps = (
-        audio_fingerprints(wavs.filter(is_eval))
-        .select(F.col("fingerprint").alias("eval_fp"))
-        .distinct()
-    )
-    return _decontam_flags(
-        audio_fingerprints(wavs.filter(~is_eval)), eval_fps, max_hamming
-    )
-
-
 MEDIA_AUDIO_DECONTAMINATE_ORACLE = _decontam_oracle(_audio_fp_oracle_core())
-
-
-def media_audio_eval_write_index(
-    spark: SparkSession, sf_dir: str, index_dir: str
-) -> None:
-    """Materialize the EVAL split's distinct AUDIO fingerprints to
-    parquet — the audio member of the benchmark-registry artifact
-    family (:func:`media_eval_write_index` has the ship-once /
-    serve-every-batch rationale; both registries live under the same
-    ``eval_fps`` layout so serving code is tier-agnostic)."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    wavs = media_real_table(spark, sf_dir).filter(
-        (F.col("media_type") == "audio/wav")
-        & (F.col("doc_id") % EVAL_MOD == EVAL_RESIDUE)
-    )
-    (
-        audio_fingerprints(wavs)
-        .select(F.col("fingerprint").alias("eval_fp"))
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/eval_fps")
-    )
-
-
-def media_audio_decontaminate_from_index(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    max_hamming: int = DECONTAM_HAMMING_MAX,
-) -> DataFrame:
-    """Serve audio decontamination from a STORED eval-fingerprint
-    registry: one map-only decode pass over the training clips + the
-    broadcast join — the eval corpus is never decoded again (the
-    image tier's :func:`media_decontaminate_from_index` shape)."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    wavs = media_real_table(spark, sf_dir).filter(
-        (F.col("media_type") == "audio/wav")
-        & (F.col("doc_id") % EVAL_MOD != EVAL_RESIDUE)
-    )
-    eval_fps = spark.read.parquet(f"{index_dir}/eval_fps")
-    return _decontam_flags(audio_fingerprints(wavs), eval_fps, max_hamming)
-
-
-def media_audio_decontaminate_stored(
-    spark: SparkSession,
-    sf_dir: str,
-    max_hamming: int = DECONTAM_HAMMING_MAX,
-) -> DataFrame:
-    """The full stored-index audio-decontamination cycle as ONE
-    query: eval fingerprints -> parquet -> read back -> flag the
-    training clips. Integer fingerprints survive parquet losslessly,
-    so the roundtrip is bit-identical to
-    :func:`media_audio_decontaminate` and the same
-    ``MEDIA_AUDIO_DECONTAMINATE_ORACLE`` gates both paths (the
-    image tier's registered-cycle pattern). Scratch: per-application
-    overwrite-in-place (``bpe_encode._artifact_dir``)."""
-    from .bpe_encode import _artifact_dir
-
-    d = _artifact_dir(spark, sf_dir, "media_audio_eval_fps")
-    media_audio_eval_write_index(spark, sf_dir, d)
-    return media_audio_decontaminate_from_index(spark, sf_dir, d, max_hamming)
-# the stored roundtrip is bit-identical, so one oracle gates both paths
-MEDIA_DECONTAMINATE_STORED_ORACLE = MEDIA_DECONTAMINATE_ORACLE
-# same argument for the audio cycle — explicit alias so the registry
-# wiring is uniform across the image/audio/video stored tiers (r13
-# verdict #6; this judge hit the asymmetry wiring up verification)
-MEDIA_AUDIO_DECONTAMINATE_STORED_ORACLE = MEDIA_AUDIO_DECONTAMINATE_ORACLE
 
 
 # ------------------------------ perceptual video tier (r13 library)
@@ -2659,15 +2421,6 @@ MEDIA_AUDIO_DECONTAMINATE_STORED_ORACLE = MEDIA_AUDIO_DECONTAMINATE_ORACLE
 # the 100 TB arguments carry over verbatim: one map-only Arrow
 # decode pass, 8-byte rows afterward, no corpus self-join in the
 # decontamination tier, clique guards oracle-mirrored.
-#
-# LIBRARY SURFACE in r13 (pytest + oracle parity at sf0.001/sf0.01):
-# the r13 driver window was planned and committed before this tier
-# landed, and the r14 window is already allocated — the four
-# registrable queries (media_video_neardup,
-# media_video_dedup, media_video_decontaminate,
-# media_video_decontaminate_stored) queue for r15 slots, at which
-# point decontaminate_audit folds video in as the SIXTH tier (after
-# the audio tier's r14 fold-in).
 
 VIDEO_FP_GRAYS = PHASH_BITS + 1  # 57 luminances -> 56 gradient bits
 VIDEO_FP_BYTES = 3 * VIDEO_FP_GRAYS  # decoded bytes consumed (<= AVI_DATA_LEN)
@@ -2815,99 +2568,7 @@ MEDIA_VIDEO_NEARDUP_ORACLE = _fp_neardup_oracle(_video_fp_oracle_core())
 MEDIA_VIDEO_DEDUP_ORACLE = _fp_dedup_oracle(_video_fp_oracle_core())
 
 
-def media_video_decontaminate(
-    spark: SparkSession,
-    sf_dir: str,
-    max_hamming: int = DECONTAM_HAMMING_MAX,
-) -> DataFrame:
-    """The VIDEO tier of the contamination family: TRAINING clips
-    whose spatio-temporal fingerprint sits within ``max_hamming`` of
-    any EVAL-split clip's — the leakage mode where a benchmark's
-    reference video (or a brightness/gain-adjusted re-encode; the
-    fingerprint is invariant to both by construction) sits in the
-    training corpus. Output (doc_id, n_eval_matches, min_hamming),
-    the image/audio tiers' exact shape, through the SAME shared
-    machinery (:func:`_decontam_flags`: lossless hamming <= BANDS-1
-    banding, broadcast eval side, corpus never self-joins). The
-    eval/train split filters the RAW synth rows before the
-    mapInPandas barrier (the one-decode rule, applied from birth like
-    the audio tier)."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    vids = media_avi_table(spark, sf_dir)
-    is_eval = F.col("doc_id") % EVAL_MOD == EVAL_RESIDUE
-    eval_fps = (
-        video_fingerprints(vids.filter(is_eval))
-        .select(F.col("fingerprint").alias("eval_fp"))
-        .distinct()
-    )
-    return _decontam_flags(
-        video_fingerprints(vids.filter(~is_eval)), eval_fps, max_hamming
-    )
-
-
 MEDIA_VIDEO_DECONTAMINATE_ORACLE = _decontam_oracle(_video_fp_oracle_core())
-
-
-def media_video_eval_write_index(
-    spark: SparkSession, sf_dir: str, index_dir: str
-) -> None:
-    """Materialize the EVAL split's distinct VIDEO fingerprints to
-    parquet — the video member of the benchmark-registry artifact
-    family (same ``eval_fps`` layout as the image/audio registries,
-    so serving code stays tier-agnostic)."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    vids = media_avi_table(spark, sf_dir).filter(
-        F.col("doc_id") % EVAL_MOD == EVAL_RESIDUE
-    )
-    (
-        video_fingerprints(vids)
-        .select(F.col("fingerprint").alias("eval_fp"))
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/eval_fps")
-    )
-
-
-def media_video_decontaminate_from_index(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    max_hamming: int = DECONTAM_HAMMING_MAX,
-) -> DataFrame:
-    """Serve video decontamination from a STORED eval-fingerprint
-    registry: one map-only decode pass over the training clips + the
-    broadcast join — the eval corpus is never decoded again."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    vids = media_avi_table(spark, sf_dir).filter(
-        F.col("doc_id") % EVAL_MOD != EVAL_RESIDUE
-    )
-    eval_fps = spark.read.parquet(f"{index_dir}/eval_fps")
-    return _decontam_flags(video_fingerprints(vids), eval_fps, max_hamming)
-
-
-def media_video_decontaminate_stored(
-    spark: SparkSession,
-    sf_dir: str,
-    max_hamming: int = DECONTAM_HAMMING_MAX,
-) -> DataFrame:
-    """The full stored-index video-decontamination cycle as ONE
-    query: eval fingerprints -> parquet -> read back -> flag the
-    training clips. Integer fingerprints survive parquet losslessly,
-    so the roundtrip is bit-identical to
-    :func:`media_video_decontaminate` and the same oracle gates both
-    paths (the image/audio registered-cycle pattern). Scratch:
-    per-application overwrite-in-place (``bpe_encode._artifact_dir``)."""
-    from .bpe_encode import _artifact_dir
-
-    d = _artifact_dir(spark, sf_dir, "media_video_eval_fps")
-    media_video_eval_write_index(spark, sf_dir, d)
-    return media_video_decontaminate_from_index(spark, sf_dir, d, max_hamming)
-
-
-MEDIA_VIDEO_DECONTAMINATE_STORED_ORACLE = MEDIA_VIDEO_DECONTAMINATE_ORACLE
 
 
 # --------------------- frame-level video overlap (r13 library)
@@ -3189,104 +2850,6 @@ def _sub_item_decontam_flags(
     )
 
 
-def media_video_frame_decontaminate(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Frame-granular video decontamination: TRAINING videos
-    containing ANY frame whose signature appears in any EVAL-split
-    video — the SUB-CLIP leakage mode the whole-clip tier
-    (:func:`media_video_decontaminate`) cannot see (an eval clip's
-    frames spliced into a longer training video move the whole-clip
-    hash arbitrarily far, but each lifted frame still matches
-    exactly). Output (doc_id, n_eval_matches, n_frames_matched):
-    distinct eval frame signatures present in the doc, and how many
-    of the doc's frame POSITIONS carry one (a doc repeating one eval
-    frame twice reads 1 matched signature / 2 matched frames).
-
-    Match semantics are EXACT 42-bit signature equality, the
-    frame-overlap convention — perceptual tolerance lives in the
-    gain/brightness invariance of :func:`frame_gradient_hash` itself,
-    not in a hamming band (the clip tiers band because their 56-bit
-    hash degrades gradually under retouching; a 16-pixel frame
-    signature either survives an order-preserving edit bit-exactly or
-    the frame genuinely differs).
-
-    100 TB shape: the eval side is benchmark-sized — its distinct
-    frame signatures BROADCAST at any corpus size; the training
-    corpus pays one map-only decode+hash pass and a broadcast-hash
-    join. The corpus never self-joins (the decontamination-tier
-    invariant). Split filters the raw synth rows before the
-    mapInPandas barrier, the one-decode rule."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    vids = media_avi_table(spark, sf_dir)
-    is_eval = F.col("doc_id") % EVAL_MOD == EVAL_RESIDUE
-    eval_fps = (
-        video_frame_fingerprints(vids.filter(is_eval))
-        .select(F.col("frame_fp").alias("eval_fp"))
-        .distinct()
-    )
-    return _sub_item_decontam_flags(
-        video_frame_fingerprints(vids.filter(~is_eval)), eval_fps,
-        "frame_fp", "frame_idx", "n_frames_matched",
-    )
-
-
-def media_video_frame_eval_write_index(
-    spark: SparkSession, sf_dir: str, index_dir: str
-) -> None:
-    """Materialize the EVAL split's distinct FRAME signatures to
-    parquet — the frame-granular member of the benchmark-registry
-    artifact family (``frame_fps`` layout, distinct from the clip
-    tiers' ``eval_fps`` so one directory can serve both
-    granularities)."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    vids = media_avi_table(spark, sf_dir).filter(
-        F.col("doc_id") % EVAL_MOD == EVAL_RESIDUE
-    )
-    (
-        video_frame_fingerprints(vids)
-        .select(F.col("frame_fp").alias("eval_fp"))
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/frame_fps")
-    )
-
-
-def media_video_frame_decontaminate_from_index(
-    spark: SparkSession, sf_dir: str, index_dir: str
-) -> DataFrame:
-    """Serve frame-granular decontamination from a STORED eval frame
-    registry: one map-only decode pass over the training clips + the
-    broadcast join — the eval corpus is never decoded again."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    vids = media_avi_table(spark, sf_dir).filter(
-        F.col("doc_id") % EVAL_MOD != EVAL_RESIDUE
-    )
-    eval_fps = spark.read.parquet(f"{index_dir}/frame_fps")
-    return _sub_item_decontam_flags(
-        video_frame_fingerprints(vids), eval_fps,
-        "frame_fp", "frame_idx", "n_frames_matched",
-    )
-
-
-def media_video_frame_decontaminate_stored(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The full stored-index frame-decontamination cycle as ONE
-    query (write -> read back -> flag); integer signatures survive
-    parquet losslessly, so the roundtrip is bit-identical to
-    :func:`media_video_frame_decontaminate` and one oracle gates both
-    paths. Scratch: per-application overwrite-in-place."""
-    from .bpe_encode import _artifact_dir
-
-    d = _artifact_dir(spark, sf_dir, "media_video_frame_fps")
-    media_video_frame_eval_write_index(spark, sf_dir, d)
-    return media_video_frame_decontaminate_from_index(spark, sf_dir, d)
-
-
 def _sub_item_decontam_oracle(
     rows_sql: str, fp_col: str, idx_col: str, matched_alias: str
 ) -> str:
@@ -3316,10 +2879,6 @@ GROUP BY doc_id
 
 MEDIA_VIDEO_FRAME_DECONTAMINATE_ORACLE = _sub_item_decontam_oracle(
     _video_frame_rows_oracle(), "frame_fp", "frame_idx", "n_frames_matched"
-)
-# the stored roundtrip is bit-identical, so one oracle gates both paths
-MEDIA_VIDEO_FRAME_DECONTAMINATE_STORED_ORACLE = (
-    MEDIA_VIDEO_FRAME_DECONTAMINATE_ORACLE
 )
 
 
@@ -3427,33 +2986,6 @@ def media_audio_snippet_overlap(
     return item_fp_overlap_pairs(dfp, "win_fp", fp_cap)
 
 
-def media_audio_snippet_decontaminate(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Snippet-granular audio decontamination: TRAINING clips
-    containing ANY window whose signature appears in an EVAL-split
-    clip — the sub-clip leakage mode the whole-clip audio tier
-    (:func:`media_audio_decontaminate`) cannot see. Output
-    (doc_id, n_eval_matches, n_windows_matched) — the frame tier's
-    exact shape with window positions. Broadcast-eval, corpus never
-    self-joins, split filters raw rows before the barrier."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    wavs = media_real_table(spark, sf_dir).filter(
-        F.col("media_type") == "audio/wav"
-    )
-    is_eval = F.col("doc_id") % EVAL_MOD == EVAL_RESIDUE
-    eval_fps = (
-        audio_window_fingerprints(wavs.filter(is_eval))
-        .select(F.col("win_fp").alias("eval_fp"))
-        .distinct()
-    )
-    return _sub_item_decontam_flags(
-        audio_window_fingerprints(wavs.filter(~is_eval)), eval_fps,
-        "win_fp", "win_idx", "n_windows_matched",
-    )
-
-
 def _audio_window_rows_oracle() -> str:
     """(doc_id, win_idx, win_fp) for every window of every WAV doc —
     |sample| values re-derived from hex(encode(text)) static offsets
@@ -3514,65 +3046,6 @@ MEDIA_AUDIO_SNIPPET_OVERLAP_ORACLE = _fp_overlap_oracle(
 )
 MEDIA_AUDIO_SNIPPET_DECONTAMINATE_ORACLE = _sub_item_decontam_oracle(
     _audio_window_rows_oracle(), "win_fp", "win_idx", "n_windows_matched"
-)
-
-
-def media_audio_snippet_eval_write_index(
-    spark: SparkSession, sf_dir: str, index_dir: str
-) -> None:
-    """Materialize the EVAL split's distinct WINDOW signatures to
-    parquet — the snippet member of the benchmark-registry artifact
-    family (``snippet_fps`` layout, so one directory can serve every
-    granularity of the audio modality)."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    wavs = media_real_table(spark, sf_dir).filter(
-        (F.col("media_type") == "audio/wav")
-        & (F.col("doc_id") % EVAL_MOD == EVAL_RESIDUE)
-    )
-    (
-        audio_window_fingerprints(wavs)
-        .select(F.col("win_fp").alias("eval_fp"))
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/snippet_fps")
-    )
-
-
-def media_audio_snippet_decontaminate_from_index(
-    spark: SparkSession, sf_dir: str, index_dir: str
-) -> DataFrame:
-    """Serve snippet decontamination from a STORED eval window
-    registry — one map-only decode pass over the training clips."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    wavs = media_real_table(spark, sf_dir).filter(
-        (F.col("media_type") == "audio/wav")
-        & (F.col("doc_id") % EVAL_MOD != EVAL_RESIDUE)
-    )
-    eval_fps = spark.read.parquet(f"{index_dir}/snippet_fps")
-    return _sub_item_decontam_flags(
-        audio_window_fingerprints(wavs), eval_fps,
-        "win_fp", "win_idx", "n_windows_matched",
-    )
-
-
-def media_audio_snippet_decontaminate_stored(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The full stored-index snippet cycle as ONE query — integer
-    signatures survive parquet losslessly, so the roundtrip is
-    bit-identical to :func:`media_audio_snippet_decontaminate` and
-    one oracle gates both paths."""
-    from .bpe_encode import _artifact_dir
-
-    d = _artifact_dir(spark, sf_dir, "media_audio_snippet_fps")
-    media_audio_snippet_eval_write_index(spark, sf_dir, d)
-    return media_audio_snippet_decontaminate_from_index(spark, sf_dir, d)
-
-
-MEDIA_AUDIO_SNIPPET_DECONTAMINATE_STORED_ORACLE = (
-    MEDIA_AUDIO_SNIPPET_DECONTAMINATE_ORACLE
 )
 
 
@@ -3666,31 +3139,6 @@ def media_image_tile_overlap(
     return item_fp_overlap_pairs(dfp, "tile_fp", fp_cap)
 
 
-def media_image_tile_decontaminate(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Tile-granular image decontamination: TRAINING images
-    containing ANY tile whose signature appears in an EVAL-split
-    image — the CROPPED-eval-image leakage the whole-image tier
-    (:func:`media_decontaminate`) cannot see. Output
-    (doc_id, n_eval_matches, n_tiles_matched)."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    imgs = media_real_table(spark, sf_dir).filter(
-        F.col("media_type").isin(*IMAGE_MEDIA_TYPES)
-    )
-    is_eval = F.col("doc_id") % EVAL_MOD == EVAL_RESIDUE
-    eval_fps = (
-        image_tile_fingerprints(imgs.filter(is_eval))
-        .select(F.col("tile_fp").alias("eval_fp"))
-        .distinct()
-    )
-    return _sub_item_decontam_flags(
-        image_tile_fingerprints(imgs.filter(~is_eval)), eval_fps,
-        "tile_fp", "tile_idx", "n_tiles_matched",
-    )
-
-
 def _image_tile_rows_oracle() -> str:
     """(doc_id, tile_idx, tile_fp) for every tile of every image doc
     — luminances from hex(encode(text)) static offsets (the image
@@ -3750,58 +3198,373 @@ MEDIA_IMAGE_TILE_DECONTAMINATE_ORACLE = _sub_item_decontam_oracle(
 )
 
 
+# ------------------------------ decontamination tier table
+#
+# Each media decontamination tier has the same four queries: flag the
+# training side online, write the eval side's distinct fingerprints
+# to a registry, serve the training side from that registry, and the
+# stored cycle (write -> read back -> flag) as one query. The
+# streaming twins (streaming/curation.py) drain the same tiers. What
+# differs per tier is held once in its DecontamTier record below, and
+# the batch and streaming paths both read it from there. The eval/train
+# split filters the RAW media rows before the mapInPandas fingerprint
+# barrier (the one-decode rule). Clip tiers flag within
+# ``max_hamming`` through the banded :func:`_decontam_flags` (lossless
+# and broadcast, section "image eval decontamination"); sub-item tiers
+# match signatures exactly through :func:`_sub_item_decontam_flags`.
+# Integer fingerprints survive parquet losslessly, so a stored cycle is
+# bit-identical to its online query and one oracle gates both.
+
+
+@dataclass(frozen=True)
+class DecontamTier:
+    """One media decontamination tier: the spec every batch query and
+    streaming twin of the tier is written over.
+
+    ``name`` is the online query's registered name (the stored cycle
+    registers as ``name + "_stored"``). ``media_fn`` synthesizes media
+    rows from a (doc_id, text) frame and ``media_types`` selects the
+    tier's rows from it; ``fingerprint_fn`` maps those rows to
+    fingerprints in column ``fp_col``. The eval registry lives under
+    ``<index_dir>/<layout>``; the stored cycle writes it to the
+    per-application scratch dir ``artifact``. Sub-item tiers also name
+    the item-position column ``idx_col`` and the output column
+    ``matched_col`` that counts matched positions; clip tiers leave
+    both ``None`` and report ``min_hamming`` instead."""
+
+    name: str
+    media_fn: Callable[[DataFrame], DataFrame]
+    media_types: tuple[str, ...]
+    fingerprint_fn: Callable[[DataFrame], DataFrame]
+    fp_col: str
+    layout: str
+    artifact: str
+    idx_col: str | None = None
+    matched_col: str | None = None
+
+    @property
+    def out_cols(self) -> tuple[str, str, str]:
+        """The flags frame's columns, which are also the drained
+        streaming store's payload columns."""
+        return ("doc_id", "n_eval_matches", self.matched_col or "min_hamming")
+
+    def media(self, docs: DataFrame, where: Column | None = None) -> DataFrame:
+        """The tier's media rows synthesized from (doc_id, text), with
+        ``where`` (a side of the eval/train split) folded into the same
+        filter."""
+        pred = F.col("media_type").isin(*self.media_types)
+        return self.media_fn(docs).filter(pred if where is None else pred & where)
+
+    def eval_fps(self, media: DataFrame) -> DataFrame:
+        """(eval_fp) — the distinct fingerprints of eval media rows."""
+        return (
+            self.fingerprint_fn(media)
+            .select(F.col(self.fp_col).alias("eval_fp"))
+            .distinct()
+        )
+
+    def flags(
+        self, train_fps: DataFrame, eval_fps: DataFrame,
+        max_hamming: int = DECONTAM_HAMMING_MAX,
+    ) -> DataFrame:
+        """Flag training fingerprints against an (eval_fp) set; the
+        one consumer of the online, stored and streaming paths.
+        ``max_hamming`` applies to clip tiers only."""
+        if self.idx_col is None:
+            return _decontam_flags(train_fps, eval_fps, max_hamming)
+        return _sub_item_decontam_flags(
+            train_fps, eval_fps, self.fp_col, self.idx_col, self.matched_col
+        )
+
+
+IMAGE_CLIP_TIER = DecontamTier(
+    "media_decontaminate", media_real_table_from, IMAGE_MEDIA_TYPES,
+    image_fingerprints, "fingerprint", "eval_fps", "media_eval_fps",
+)
+AUDIO_CLIP_TIER = DecontamTier(
+    "media_audio_decontaminate", media_real_table_from, ("audio/wav",),
+    audio_fingerprints, "fingerprint", "eval_fps", "media_audio_eval_fps",
+)
+VIDEO_CLIP_TIER = DecontamTier(
+    "media_video_decontaminate", media_avi_table_from, ("video/avi",),
+    video_fingerprints, "fingerprint", "eval_fps", "media_video_eval_fps",
+)
+VIDEO_FRAME_TIER = DecontamTier(
+    "media_video_frame_decontaminate", media_avi_table_from, ("video/avi",),
+    video_frame_fingerprints, "frame_fp", "frame_fps",
+    "media_video_frame_fps", "frame_idx", "n_frames_matched",
+)
+AUDIO_WINDOW_TIER = DecontamTier(
+    "media_audio_snippet_decontaminate", media_real_table_from,
+    ("audio/wav",), audio_window_fingerprints, "win_fp", "snippet_fps",
+    "media_audio_snippet_fps", "win_idx", "n_windows_matched",
+)
+IMAGE_TILE_TIER = DecontamTier(
+    "media_image_tile_decontaminate", media_real_table_from,
+    IMAGE_MEDIA_TYPES, image_tile_fingerprints, "tile_fp", "tile_fps",
+    "media_image_tile_fps", "tile_idx", "n_tiles_matched",
+)
+DECONTAM_TIERS = (
+    IMAGE_CLIP_TIER, AUDIO_CLIP_TIER, VIDEO_CLIP_TIER,
+    VIDEO_FRAME_TIER, AUDIO_WINDOW_TIER, IMAGE_TILE_TIER,
+)
+
+
+def _is_eval() -> Column:
+    """The deterministic doc_id % EVAL_MOD == EVAL_RESIDUE split shared
+    with the text tiers (winnow.py)."""
+    from .winnow import EVAL_MOD, EVAL_RESIDUE
+
+    return F.col("doc_id") % EVAL_MOD == EVAL_RESIDUE
+
+
+def _online(
+    tier: DecontamTier, spark: SparkSession, sf_dir: str,
+    max_hamming: int = DECONTAM_HAMMING_MAX,
+) -> DataFrame:
+    media = tier.media(load_table(spark, sf_dir, "documents"))
+    eval_fps = tier.eval_fps(media.filter(_is_eval()))
+    train = tier.fingerprint_fn(media.filter(~_is_eval()))
+    return tier.flags(train, eval_fps, max_hamming)
+
+
+def _write_index(
+    tier: DecontamTier, spark: SparkSession, sf_dir: str, index_dir: str
+) -> None:
+    media = tier.media(load_table(spark, sf_dir, "documents"), _is_eval())
+    tier.eval_fps(media).write.mode("overwrite").parquet(
+        f"{index_dir}/{tier.layout}"
+    )
+
+
+def _from_index(
+    tier: DecontamTier, spark: SparkSession, sf_dir: str, index_dir: str,
+    max_hamming: int = DECONTAM_HAMMING_MAX,
+) -> DataFrame:
+    media = tier.media(load_table(spark, sf_dir, "documents"), ~_is_eval())
+    eval_fps = spark.read.parquet(f"{index_dir}/{tier.layout}")
+    return tier.flags(tier.fingerprint_fn(media), eval_fps, max_hamming)
+
+
+def _stored(
+    tier: DecontamTier, spark: SparkSession, sf_dir: str,
+    max_hamming: int = DECONTAM_HAMMING_MAX,
+) -> DataFrame:
+    d = _artifact_dir(spark, sf_dir, tier.artifact)
+    _write_index(tier, spark, sf_dir, d)
+    return _from_index(tier, spark, sf_dir, d, max_hamming)
+
+
+# The public names below each pass their tier. They are plain defs,
+# not functools.partial, because ``query --describe`` prints
+# ``__qualname__`` and the docstring. Every ``*_eval_write_index``
+# writes ``<index_dir>/<tier.layout>`` (the benchmark registry a
+# pipeline ships once and serves every ingest batch against), every
+# ``*_from_index`` serves the online answer from it without decoding
+# the eval side again, and every ``*_stored`` runs the write -> read
+# back -> flag cycle in a per-application scratch dir
+# (``sources.tables._artifact_dir``).
+
+
+def media_decontaminate(
+    spark: SparkSession, sf_dir: str, max_hamming: int = DECONTAM_HAMMING_MAX
+) -> DataFrame:
+    """(doc_id, n_eval_matches, min_hamming) — TRAINING images whose
+    dHash sits within ``max_hamming`` of any EVAL-split image's, exact
+    re-encodes included (hamming 0). The seeded-leak golden plants a
+    retouched eval twin and pins that it flags at its true hamming.
+    Tier spec: :data:`IMAGE_CLIP_TIER`."""
+    return _online(IMAGE_CLIP_TIER, spark, sf_dir, max_hamming)
+
+
+def media_eval_write_index(
+    spark: SparkSession, sf_dir: str, index_dir: str
+) -> None:
+    """Write :data:`IMAGE_CLIP_TIER`'s eval registry under ``index_dir``."""
+    _write_index(IMAGE_CLIP_TIER, spark, sf_dir, index_dir)
+
+
+def media_decontaminate_from_index(
+    spark: SparkSession, sf_dir: str, index_dir: str,
+    max_hamming: int = DECONTAM_HAMMING_MAX,
+) -> DataFrame:
+    """:func:`media_decontaminate` served from a stored registry."""
+    return _from_index(IMAGE_CLIP_TIER, spark, sf_dir, index_dir, max_hamming)
+
+
+def media_decontaminate_stored(
+    spark: SparkSession, sf_dir: str, max_hamming: int = DECONTAM_HAMMING_MAX
+) -> DataFrame:
+    """:func:`media_decontaminate` as a stored cycle."""
+    return _stored(IMAGE_CLIP_TIER, spark, sf_dir, max_hamming)
+
+
+def media_audio_decontaminate(
+    spark: SparkSession, sf_dir: str, max_hamming: int = DECONTAM_HAMMING_MAX
+) -> DataFrame:
+    """(doc_id, n_eval_matches, min_hamming) — TRAINING clips whose
+    envelope-order fingerprint sits within ``max_hamming`` of any
+    EVAL-split clip's: a benchmark's reference audio, or a
+    volume-adjusted re-encode of it (the fingerprint is
+    gain-invariant), in the training corpus. The sf corpora carry
+    NO audio contamination (0 rows at sf0.01 and sf0.1, measured r12),
+    so the oracle stamp is empty-vs-empty; the non-trivial gate is
+    tests/test_multimodal.py::test_media_audio_decontaminate_seeded_leak.
+    Tier spec: :data:`AUDIO_CLIP_TIER`."""
+    return _online(AUDIO_CLIP_TIER, spark, sf_dir, max_hamming)
+
+
+def media_audio_eval_write_index(
+    spark: SparkSession, sf_dir: str, index_dir: str
+) -> None:
+    """Write :data:`AUDIO_CLIP_TIER`'s eval registry under ``index_dir``."""
+    _write_index(AUDIO_CLIP_TIER, spark, sf_dir, index_dir)
+
+
+def media_audio_decontaminate_from_index(
+    spark: SparkSession, sf_dir: str, index_dir: str,
+    max_hamming: int = DECONTAM_HAMMING_MAX,
+) -> DataFrame:
+    """:func:`media_audio_decontaminate` served from a stored registry."""
+    return _from_index(AUDIO_CLIP_TIER, spark, sf_dir, index_dir, max_hamming)
+
+
+def media_audio_decontaminate_stored(
+    spark: SparkSession, sf_dir: str, max_hamming: int = DECONTAM_HAMMING_MAX
+) -> DataFrame:
+    """:func:`media_audio_decontaminate` as a stored cycle."""
+    return _stored(AUDIO_CLIP_TIER, spark, sf_dir, max_hamming)
+
+
+def media_video_decontaminate(
+    spark: SparkSession, sf_dir: str, max_hamming: int = DECONTAM_HAMMING_MAX
+) -> DataFrame:
+    """(doc_id, n_eval_matches, min_hamming) — TRAINING clips whose
+    spatio-temporal fingerprint sits within ``max_hamming`` of any
+    EVAL-split clip's: a benchmark's reference video, or a
+    brightness/gain-adjusted re-encode of it (the fingerprint is
+    invariant to both), in the training corpus. Tier spec:
+    :data:`VIDEO_CLIP_TIER`."""
+    return _online(VIDEO_CLIP_TIER, spark, sf_dir, max_hamming)
+
+
+def media_video_eval_write_index(
+    spark: SparkSession, sf_dir: str, index_dir: str
+) -> None:
+    """Write :data:`VIDEO_CLIP_TIER`'s eval registry under ``index_dir``."""
+    _write_index(VIDEO_CLIP_TIER, spark, sf_dir, index_dir)
+
+
+def media_video_decontaminate_from_index(
+    spark: SparkSession, sf_dir: str, index_dir: str,
+    max_hamming: int = DECONTAM_HAMMING_MAX,
+) -> DataFrame:
+    """:func:`media_video_decontaminate` served from a stored registry."""
+    return _from_index(VIDEO_CLIP_TIER, spark, sf_dir, index_dir, max_hamming)
+
+
+def media_video_decontaminate_stored(
+    spark: SparkSession, sf_dir: str, max_hamming: int = DECONTAM_HAMMING_MAX
+) -> DataFrame:
+    """:func:`media_video_decontaminate` as a stored cycle."""
+    return _stored(VIDEO_CLIP_TIER, spark, sf_dir, max_hamming)
+
+
+def media_video_frame_decontaminate(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """(doc_id, n_eval_matches, n_frames_matched) — TRAINING videos
+    containing ANY frame whose 42-bit signature appears in an
+    EVAL-split video: the SUB-CLIP leakage the whole-clip tier
+    (:func:`media_video_decontaminate`) cannot see, since eval frames
+    spliced into a longer video move the whole-clip hash arbitrarily
+    far. ``n_eval_matches`` counts distinct eval signatures in the doc,
+    ``n_frames_matched`` the frame positions carrying one (one eval
+    frame repeated twice reads 1 / 2). Tier spec:
+    :data:`VIDEO_FRAME_TIER`."""
+    return _online(VIDEO_FRAME_TIER, spark, sf_dir)
+
+
+def media_video_frame_eval_write_index(
+    spark: SparkSession, sf_dir: str, index_dir: str
+) -> None:
+    """Write :data:`VIDEO_FRAME_TIER`'s eval registry under ``index_dir``."""
+    _write_index(VIDEO_FRAME_TIER, spark, sf_dir, index_dir)
+
+
+def media_video_frame_decontaminate_from_index(
+    spark: SparkSession, sf_dir: str, index_dir: str
+) -> DataFrame:
+    """:func:`media_video_frame_decontaminate` from a stored registry."""
+    return _from_index(VIDEO_FRAME_TIER, spark, sf_dir, index_dir)
+
+
+def media_video_frame_decontaminate_stored(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """:func:`media_video_frame_decontaminate` as a stored cycle."""
+    return _stored(VIDEO_FRAME_TIER, spark, sf_dir)
+
+
+def media_audio_snippet_decontaminate(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """(doc_id, n_eval_matches, n_windows_matched) — TRAINING clips
+    containing ANY window whose signature appears in an EVAL-split
+    clip: the sub-clip leakage the whole-clip audio tier
+    (:func:`media_audio_decontaminate`) cannot see. Tier spec:
+    :data:`AUDIO_WINDOW_TIER`."""
+    return _online(AUDIO_WINDOW_TIER, spark, sf_dir)
+
+
+def media_audio_snippet_eval_write_index(
+    spark: SparkSession, sf_dir: str, index_dir: str
+) -> None:
+    """Write :data:`AUDIO_WINDOW_TIER`'s eval registry under ``index_dir``."""
+    _write_index(AUDIO_WINDOW_TIER, spark, sf_dir, index_dir)
+
+
+def media_audio_snippet_decontaminate_from_index(
+    spark: SparkSession, sf_dir: str, index_dir: str
+) -> DataFrame:
+    """:func:`media_audio_snippet_decontaminate` from a stored registry."""
+    return _from_index(AUDIO_WINDOW_TIER, spark, sf_dir, index_dir)
+
+
+def media_audio_snippet_decontaminate_stored(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """:func:`media_audio_snippet_decontaminate` as a stored cycle."""
+    return _stored(AUDIO_WINDOW_TIER, spark, sf_dir)
+
+
+def media_image_tile_decontaminate(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """(doc_id, n_eval_matches, n_tiles_matched) — TRAINING images
+    containing ANY tile whose signature appears in an EVAL-split
+    image: the CROPPED-eval-image leakage the whole-image tier
+    (:func:`media_decontaminate`) cannot see. Tier spec:
+    :data:`IMAGE_TILE_TIER`."""
+    return _online(IMAGE_TILE_TIER, spark, sf_dir)
+
+
 def media_image_tile_eval_write_index(
     spark: SparkSession, sf_dir: str, index_dir: str
 ) -> None:
-    """Materialize the EVAL split's distinct TILE signatures to
-    parquet — the tile member of the benchmark-registry artifact
-    family (``tile_fps`` layout)."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    imgs = media_real_table(spark, sf_dir).filter(
-        F.col("media_type").isin(*IMAGE_MEDIA_TYPES)
-        & (F.col("doc_id") % EVAL_MOD == EVAL_RESIDUE)
-    )
-    (
-        image_tile_fingerprints(imgs)
-        .select(F.col("tile_fp").alias("eval_fp"))
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(f"{index_dir}/tile_fps")
-    )
+    """Write :data:`IMAGE_TILE_TIER`'s eval registry under ``index_dir``."""
+    _write_index(IMAGE_TILE_TIER, spark, sf_dir, index_dir)
 
 
 def media_image_tile_decontaminate_from_index(
     spark: SparkSession, sf_dir: str, index_dir: str
 ) -> DataFrame:
-    """Serve tile decontamination from a STORED eval tile registry —
-    one map-only decode pass over the training images."""
-    from .winnow import EVAL_MOD, EVAL_RESIDUE
-
-    imgs = media_real_table(spark, sf_dir).filter(
-        F.col("media_type").isin(*IMAGE_MEDIA_TYPES)
-        & (F.col("doc_id") % EVAL_MOD != EVAL_RESIDUE)
-    )
-    eval_fps = spark.read.parquet(f"{index_dir}/tile_fps")
-    return _sub_item_decontam_flags(
-        image_tile_fingerprints(imgs), eval_fps,
-        "tile_fp", "tile_idx", "n_tiles_matched",
-    )
+    """:func:`media_image_tile_decontaminate` from a stored registry."""
+    return _from_index(IMAGE_TILE_TIER, spark, sf_dir, index_dir)
 
 
 def media_image_tile_decontaminate_stored(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The full stored-index tile cycle as ONE query — roundtrip
-    bit-identical to :func:`media_image_tile_decontaminate`, one
-    oracle gating both paths."""
-    from .bpe_encode import _artifact_dir
-
-    d = _artifact_dir(spark, sf_dir, "media_image_tile_fps")
-    media_image_tile_eval_write_index(spark, sf_dir, d)
-    return media_image_tile_decontaminate_from_index(spark, sf_dir, d)
-
-
-MEDIA_IMAGE_TILE_DECONTAMINATE_STORED_ORACLE = (
-    MEDIA_IMAGE_TILE_DECONTAMINATE_ORACLE
-)
+    """:func:`media_image_tile_decontaminate` as a stored cycle."""
+    return _stored(IMAGE_TILE_TIER, spark, sf_dir)

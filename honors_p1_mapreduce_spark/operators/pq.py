@@ -879,10 +879,10 @@ def pq_search_stored(
     surface (round-7 verdict, "What's missing" #2).
 
     Scratch location: per-application overwrite-in-place
-    (``bpe_encode._artifact_dir``), rewritten every call — no
+    (``sources.tables._artifact_dir``), rewritten every call — no
     staleness, bounded disk.
     """
-    from .bpe_encode import _artifact_dir
+    from ..sources.tables import _artifact_dir
 
     d = _artifact_dir(spark, sf_dir, f"pq_index_{n_cells}c{n_iter}i")
     pq_write_index(spark, sf_dir, d, n_cells=n_cells, n_iter=n_iter)
@@ -949,7 +949,7 @@ def pq_search_appended(
     rebuild by construction; the test pins it).
 
     Scratch: per-application overwrite-in-place (_artifact_dir)."""
-    from .bpe_encode import _artifact_dir
+    from ..sources.tables import _artifact_dir
 
     d = _artifact_dir(spark, sf_dir, f"pq_incr_{n_cells}c{n_iter}i")
     pq_write_base_index(spark, sf_dir, d, n_cells=n_cells, n_iter=n_iter)
@@ -1121,8 +1121,8 @@ def pq_index_refresh(
     on the OLD snapshot and codes/ADC/re-rank over the NEW one
     (_pq_chain_sql's split train_src/encode_src), so the driver
     hash-gates the whole cycle. Scratch: per-application
-    overwrite-in-place (``bpe_encode._artifact_dir``)."""
-    from .bpe_encode import _artifact_dir
+    overwrite-in-place (``sources.tables._artifact_dir``)."""
+    from ..sources.tables import _artifact_dir
     from .curation_ext import snapshot_diff
 
     emb = load_table(spark, sf_dir, "embeddings")

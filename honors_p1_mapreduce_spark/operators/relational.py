@@ -980,13 +980,13 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import re
 
-    from .bpe_encode import _artifact_dir, _corpus_token
+    from ..sources.tables import _artifact_dir, corpus_path_token
 
     # table names carry the same full-path corpus token as the data
     # path (_artifact_dir), so two corpora with equal basenames in one
     # session get DISTINCT catalog entries instead of silently
     # clobbering each other's bucketed tables (r8 advisor finding)
-    safe = re.sub(r"[^A-Za-z0-9_]", "_", _corpus_token(sf_dir))
+    safe = re.sub(r"[^A-Za-z0-9_]", "_", corpus_path_token(sf_dir))
     sides = [
         (
             f"bj_lineitem_{safe}",

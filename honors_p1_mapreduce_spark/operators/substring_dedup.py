@@ -311,8 +311,8 @@ def dedup_substring_cut_stored(
     bit-identical to :func:`dedup_substring_cut` and ONE oracle gates
     both paths (the registered-cycle pattern of the bpe/pq/winnow/
     media families). Scratch: per-application overwrite-in-place
-    (``bpe_encode._artifact_dir``)."""
-    from .bpe_encode import _artifact_dir
+    (``sources.tables._artifact_dir``)."""
+    from ..sources.tables import _artifact_dir
 
     d = _artifact_dir(spark, sf_dir, "substring_dup_grams")
     substring_write_index(spark, sf_dir, d, k, min_docs)

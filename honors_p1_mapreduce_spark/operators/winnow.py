@@ -515,8 +515,8 @@ def decontaminate_stored(
     the driver hash-stamps the write/read-back path — the same
     registered-cycle pattern as ``bpe_encode_ids_stored`` /
     ``pq_search_stored``. Scratch: per-application overwrite-in-place
-    (``bpe_encode._artifact_dir``), rewritten every call."""
-    from .bpe_encode import _artifact_dir
+    (``sources.tables._artifact_dir``), rewritten every call."""
+    from ..sources.tables import _artifact_dir
 
     d = _artifact_dir(spark, sf_dir, "winnow_index")
     winnow_write_index(spark, sf_dir, d)
@@ -590,8 +590,8 @@ def winnow_index_retract(
     changes BOTH sides of the decontamination: removed eval docs
     shrink the eval fingerprint set, removed train docs leave the
     drop list. Scratch: per-application overwrite-in-place
-    (``bpe_encode._artifact_dir``), rewritten every call."""
-    from .bpe_encode import _artifact_dir
+    (``sources.tables._artifact_dir``), rewritten every call."""
+    from ..sources.tables import _artifact_dir
 
     d_full = _artifact_dir(spark, sf_dir, "winnow_index_rtr_full")
     d_rtr = _artifact_dir(spark, sf_dir, "winnow_index_rtr")

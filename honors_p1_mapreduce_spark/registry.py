@@ -48,8 +48,12 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
 def reset_memos() -> None:
-    """Drop every build-once session memo (PQ codebooks, BPE merge
-    tables, word-id maps, winnow fingerprint frames).
+    """Drop every build-once session memo: BPE merge tables
+    (``bpe._MERGES_CACHE``), BPE symbol maps (``bpe._SYMS_CACHE``),
+    word-id maps (``bpe_encode._WORD_IDS_CACHE``), PQ codebooks
+    (``pq._CODEBOOK_CACHE``), winnow fingerprint frames
+    (``winnow._FP_CACHE``) and LM read-path frames
+    (``lm_quality._READ_FRAMES_CACHE``).
 
     The memos are keyed by (applicationId, sf_dir, params) and their
     localCheckpoint blocks deliberately survive
@@ -428,24 +432,20 @@ ORACLES: dict[str, str] = {
     "media_clean_funnel": _pl.MEDIA_CLEAN_FUNNEL_ORACLE,
     "decontaminate_audit": _pl.DECONTAMINATE_AUDIT_ORACLE,
     "media_decontaminate": _mm.MEDIA_DECONTAMINATE_ORACLE,
-    "media_decontaminate_stored": _mm.MEDIA_DECONTAMINATE_STORED_ORACLE,
+    "media_decontaminate_stored": _mm.MEDIA_DECONTAMINATE_ORACLE,
     "embedding_decontaminate": _sim.EMBEDDING_DECONTAMINATE_ORACLE,
     "media_audio_decontaminate": _mm.MEDIA_AUDIO_DECONTAMINATE_ORACLE,
-    "media_audio_decontaminate_stored": (
-        _mm.MEDIA_AUDIO_DECONTAMINATE_STORED_ORACLE
-    ),
+    "media_audio_decontaminate_stored": _mm.MEDIA_AUDIO_DECONTAMINATE_ORACLE,
     "media_video_neardup": _mm.MEDIA_VIDEO_NEARDUP_ORACLE,
     "media_video_dedup": _mm.MEDIA_VIDEO_DEDUP_ORACLE,
     "media_video_decontaminate": _mm.MEDIA_VIDEO_DECONTAMINATE_ORACLE,
-    "media_video_decontaminate_stored": (
-        _mm.MEDIA_VIDEO_DECONTAMINATE_STORED_ORACLE
-    ),
+    "media_video_decontaminate_stored": _mm.MEDIA_VIDEO_DECONTAMINATE_ORACLE,
     "media_video_frame_overlap": _mm.MEDIA_VIDEO_FRAME_OVERLAP_ORACLE,
     "media_video_frame_decontaminate": (
         _mm.MEDIA_VIDEO_FRAME_DECONTAMINATE_ORACLE
     ),
     "media_video_frame_decontaminate_stored": (
-        _mm.MEDIA_VIDEO_FRAME_DECONTAMINATE_STORED_ORACLE
+        _mm.MEDIA_VIDEO_FRAME_DECONTAMINATE_ORACLE
     ),
     "media_video_clean_funnel": _pl.MEDIA_VIDEO_CLEAN_FUNNEL_ORACLE,
     "media_audio_snippet_overlap": _mm.MEDIA_AUDIO_SNIPPET_OVERLAP_ORACLE,
@@ -453,13 +453,13 @@ ORACLES: dict[str, str] = {
         _mm.MEDIA_AUDIO_SNIPPET_DECONTAMINATE_ORACLE
     ),
     "media_audio_snippet_decontaminate_stored": (
-        _mm.MEDIA_AUDIO_SNIPPET_DECONTAMINATE_STORED_ORACLE
+        _mm.MEDIA_AUDIO_SNIPPET_DECONTAMINATE_ORACLE
     ),
     "media_image_tile_overlap": _mm.MEDIA_IMAGE_TILE_OVERLAP_ORACLE,
     "media_image_tile_decontaminate": (
         _mm.MEDIA_IMAGE_TILE_DECONTAMINATE_ORACLE
     ),
     "media_image_tile_decontaminate_stored": (
-        _mm.MEDIA_IMAGE_TILE_DECONTAMINATE_STORED_ORACLE
+        _mm.MEDIA_IMAGE_TILE_DECONTAMINATE_ORACLE
     ),
 }

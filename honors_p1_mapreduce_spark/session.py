@@ -20,7 +20,9 @@ from pyspark.sql import SparkSession
 
 
 def default_cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS`` if set, else the CPUs this process may run
+    on — never more cores than the host grants."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def get_spark(
@@ -39,9 +41,7 @@ def get_spark(
     if cpus is None:
         cpus = default_cpus()
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
-        )
+        shuffle_partitions = max(cpus, 8)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -76,7 +76,7 @@ def get_spark(
         # 20000 (media_png_decode 4.6 -> 1.5) — so the default rides
         # the suite size with headroom. Compiled classes are small;
         # a long-lived driver serving a mixed workload wants them
-        # resident. Parameterized for memory-constrained drivers.
+        # resident. Memory-constrained drivers lower it via extra_conf.
         # CAVEAT (advisor r17): this is an INTERNAL *static* SQL conf —
         # if getOrCreate attaches to a pre-existing SparkSession in
         # this JVM, the value is silently ignored (the first session
@@ -84,10 +84,7 @@ def get_spark(
         # stability guarantee. Fine for this engine (get_spark is the
         # single session factory); embedders sharing a JVM should set
         # it on the FIRST session they create.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "20000"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "20000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -29,24 +29,6 @@ TABLES: tuple[str, ...] = (
 # Small dimension tables a planner should broadcast in joins at any scale.
 BROADCAST_TABLES: frozenset[str] = frozenset({"region", "nation", "supplier", "part"})
 
-# The under-parallel-scan fix below (guide §2.5 "input skew: one huge
-# unsplittable file ... otherwise repartition immediately after the
-# read") is strictly OPT-IN per call site: interleaved A/B (min-of-N,
-# one JVM, order-alternating) showed the repartition pays only where
-# per-row work directly on the scan is heavy — per-gram md5 winnowing
-# 3.7 -> 0.9 s, substring grams 3.7 -> 2.0 s, PNG zlib inflate
-# 2.25 -> 1.15 s — and LOSES elsewhere: cheap-tokenize consumers (BPE
-# id stream 3.2 -> 8+ s cold, publish manifest), multi-scan media
-# plans (audio dedup 2.0 -> 3.8 s: each re-scan re-shuffles payload
-# bytes), and even the embedding consumers (LSH bucketing
-# 1.3 -> 1.9 s; post-vectorization the PQ/IVF compute at
-# trigger-firing scales is trivial, parity measured). The trigger
-# only ever fires when the layout under-splits — i.e. at SMALL
-# inputs — which is exactly where fixed exchange overhead is most
-# visible, so the default must be off. Sites opt in via
-# ``load_table(..., wide_scan=True)``.
-_WIDE_SCAN_TABLES: frozenset[str] = frozenset()
-
 
 def _size_bytes(conf_value: str) -> int:
     """Parse a Spark size conf ("134217728", "128m", "1g") to bytes."""
@@ -72,12 +54,23 @@ def _scan_parallelize(spark: SparkSession, df: DataFrame, path: str) -> DataFram
     count, the condition is false, and the plan is unchanged (the
     zero-extra-exchange posture at scale is preserved by construction).
     The exchange carries raw scan rows (pre-decode, pre-expression),
-    so nothing heavy is shuffled. ``SPARK_GRAFT_SCAN_PAR=0`` disables
-    it for A/B runs."""
+    so nothing heavy is shuffled.
+
+    Strictly OPT-IN per call site (``load_table(..., wide_scan=True)``;
+    the usual input-skew remedy for one huge unsplittable file is to
+    repartition immediately after the read): interleaved A/B (min-of-N,
+    one JVM, order-alternating) showed the repartition pays only where
+    per-row work directly on the scan is heavy — per-gram md5 winnowing
+    3.7 -> 0.9 s, substring grams 3.7 -> 2.0 s, PNG zlib inflate
+    2.25 -> 1.15 s — and LOSES elsewhere: cheap-tokenize consumers (BPE
+    id stream 3.2 -> 8+ s cold, publish manifest), multi-scan media
+    plans (audio dedup 2.0 -> 3.8 s: each re-scan re-shuffles payload
+    bytes), and even the embedding consumers (LSH bucketing
+    1.3 -> 1.9 s). The trigger only ever fires when the layout
+    under-splits — i.e. at SMALL inputs — which is exactly where fixed
+    exchange overhead is most visible, so the default must be off."""
     import os
 
-    if os.environ.get("SPARK_GRAFT_SCAN_PAR", "1") == "0":
-        return df
     try:
         if os.path.isdir(path):
             size = sum(
@@ -131,13 +124,40 @@ def corpus_token(sf_dir: str) -> str:
     return hashlib.md5("|".join(parts).encode()).hexdigest()
 
 
+def corpus_path_token(sf_dir: str) -> str:
+    """Deterministic short token for a corpus directory's PATH (not its
+    contents — that is :func:`corpus_token`), derived from the FULL
+    normalized path (basename alone collides when two corpora share a
+    directory name, e.g. .../a/sf0.1 and .../b/sf0.1). Human-readable
+    basename + 8-hex path hash."""
+    import hashlib
+    import os
+
+    norm = os.path.normpath(os.path.abspath(sf_dir))
+    base = os.path.basename(norm)
+    return f"{base}_{hashlib.md5(norm.encode()).hexdigest()[:8]}"
+
+
+def _artifact_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
+    """Deterministic scratch path for a registered stored-artifact
+    query: keyed by (applicationId, full-corpus-path token, kind) so
+    repeat calls within an application overwrite the same files —
+    bounded disk, and no staleness because every call REWRITES the
+    artifact before reading it back (unlike the in-session memos,
+    which assume path immutability — see bpe._MERGES_CACHE note).
+    Distinct corpora NEVER share a path, even with equal basenames
+    (:func:`corpus_path_token`)."""
+    token = corpus_path_token(sf_dir)
+    return f"/tmp/spark_graft_artifacts/{spark.sparkContext.applicationId}/{kind}_{token}"
+
+
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, wide_scan: bool = False
 ) -> DataFrame:
-    """``wide_scan=True`` opts a documents read into the
-    under-parallel-scan repartition (see _WIDE_SCAN_TABLES) — set it
-    at call sites whose per-row work on top of the scan is heavy
-    enough to win from the extra exchange (measured, not assumed)."""
+    """``wide_scan=True`` opts a read into the under-parallel-scan
+    repartition (:func:`_scan_parallelize`) — set it at call sites
+    whose per-row work on top of the scan is heavy enough to win from
+    the extra exchange (measured, not assumed)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
@@ -167,7 +187,7 @@ def load_table(
         return df
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
-    if name in _WIDE_SCAN_TABLES or wide_scan:
+    if wide_scan:
         df = _scan_parallelize(spark, df, path)
     return df
 

@@ -14,6 +14,12 @@ equivalence test. State story at 100 TB/day: the stream side holds no
 aggregation state at all (foreachBatch applies complete batch logic
 per micro-batch); the only long-lived object is the static index,
 which production refreshes by atomically swapping the parquet dir.
+
+The media decontamination twins all run one drain,
+:func:`_drain_decontam`, over the batch side's tier table
+(``operators.multimodal.DecontamTier``), so a tier's media table,
+fingerprint function and registry layout are read from the record its
+batch queries use.
 """
 
 from __future__ import annotations
@@ -21,6 +27,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.multimodal import (
+    AUDIO_CLIP_TIER,
+    AUDIO_WINDOW_TIER,
+    IMAGE_CLIP_TIER,
+    IMAGE_TILE_TIER,
+    VIDEO_CLIP_TIER,
+    VIDEO_FRAME_TIER,
+    DecontamTier,
+)
 from ..operators.substring_dedup import SPAN_K
 from ..operators.winnow import (
     BATCH_MOD,
@@ -444,58 +459,37 @@ def _drain_decontam(
     index_dir: str,
     store_dir: str,
     checkpoint_dir: str,
-    media_pred,
-    fingerprint_fn,
+    tier: DecontamTier,
     glob: str,
-    media_fn=None,
-    flags_fn=None,
-    layout: str = "eval_fps",
 ) -> None:
-    """The ONE decontamination drain all modality twins share (r12
-    review: the audio twin had duplicated the image twin's ~45-line
-    scaffold verbatim, and the image twin silently lacked the glob
-    hook — the batch side's fingerprint-generic _decontam_flags /
-    _decontam_oracle pattern applied to the stream side). Static
-    registry SNAPSHOTTED once per stream start: read + persist +
-    materialize INSIDE the try so a failure during materialization
-    still releases any already-cached blocks; a mid-stream registry
-    dir swap needs a drain restart to be observed (the per-batch
-    re-read of the first cut would see it, but paid listing + footer
-    + broadcast build every trigger for a registry that changes
-    ~never). Flags write to ``batch_id=N`` partitions in overwrite
-    mode (replay-idempotent, :func:`_write_batch_partition`).
-    ``media_fn`` is the per-batch synth hook (defaults to
-    :func:`media_real_table_from` — the WAV/BMP/PPM table the image
-    and audio twins share; the r13 video twins pass
-    :func:`media_avi_table_from`). ``flags_fn(fps, eval_fps)`` is the
-    flagging hook (defaults to the banded ``_decontam_flags`` the
-    clip tiers share; the frame-granular twin passes its exact-match
-    aggregate). ``layout`` names the registry subdirectory
-    (``eval_fps`` for the clip tiers, ``frame_fps`` for the
-    frame-granular one — the batch write_index functions' layouts)."""
-    from ..operators.multimodal import (
-        DECONTAM_HAMMING_MAX,
-        _decontam_flags,
-        media_real_table_from,
-    )
+    """The ONE decontamination drain every media tier's streaming twin
+    runs: each micro-batch's TRAINING rows of the tier are fingerprinted
+    and flagged against the tier's STORED eval registry
+    (``<index_dir>/<tier.layout>``, what the batch ``*_eval_write_index``
+    writes) with the tier's own flags. Per-document flags depend only on
+    (doc fingerprints) x (static registry), never on other stream docs,
+    so the drained store is EXACTLY the tier's batch answer, pinned by
+    the equivalence tests. The registry is SNAPSHOTTED once per stream
+    start (read + persist + materialize INSIDE the try, so a failure
+    still releases cached blocks); a mid-stream registry swap needs a
+    drain restart. Flags write to ``batch_id=N`` partitions in
+    overwrite mode (:func:`_write_batch_partition`). ``glob`` is the
+    file-layout hook: the sf corpora are single ``documents.parquet``
+    FILES (one micro-batch); the seeded tests use a 2-part-file
+    directory with ``glob="part-*"`` to cover REAL multi-batch
+    draining."""
     from ..operators.winnow import EVAL_MOD, EVAL_RESIDUE
 
-    if media_fn is None:
-        media_fn = media_real_table_from
-    if flags_fn is None:
-        def flags_fn(fps, ev):
-            return _decontam_flags(fps, ev, DECONTAM_HAMMING_MAX)
-    eval_fps = spark.read.parquet(f"{index_dir}/{layout}").persist()
+    eval_fps = spark.read.parquet(f"{index_dir}/{tier.layout}").persist()
     try:
         eval_fps.count()  # materialize once, before the stream starts
 
         def _micro_batch(bdf: DataFrame, batch_id: int) -> None:
-            rows = media_fn(
-                bdf.select("doc_id", "text")
-            ).filter(
-                media_pred & (F.col("doc_id") % EVAL_MOD != EVAL_RESIDUE)
+            rows = tier.media(
+                bdf.select("doc_id", "text"),
+                F.col("doc_id") % EVAL_MOD != EVAL_RESIDUE,
             )
-            flags = flags_fn(fingerprint_fn(rows), eval_fps)
+            flags = tier.flags(tier.fingerprint_fn(rows), eval_fps)
             _write_batch_partition(flags, batch_id, store_dir)
 
         q = (
@@ -515,33 +509,62 @@ def _drain_decontam(
 
 
 def streaming_media_decontaminate(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    glob: str = "documents.parquet",
+    spark: SparkSession, sf_dir: str, index_dir: str, store_dir: str,
+    checkpoint_dir: str, glob: str = "documents.parquet",
 ) -> None:
-    """Continuous-ingest IMAGE decontamination (r11): drain the
-    document stream through per-micro-batch media synth + image
-    fingerprinting and flag each batch's TRAINING images against the
-    STORED eval-fingerprint registry
-    (``operators.multimodal.media_eval_write_index``'s parquet — the
-    static side of a stream-static join, the
-    ``streaming_dedup_incremental`` shape). Per-document flags depend
-    only on (doc fingerprint) x (static eval registry) — never on
-    other stream docs — so the drained store is EXACTLY the batch
-    ``media_decontaminate`` answer, pinned by the equivalence test.
-    State story at 100 TB/day: the stream holds nothing between
-    triggers; the eval registry is the only long-lived object,
-    snapshotted per stream start (see :func:`_drain_decontam` for the
-    snapshot/release discipline and the ``glob`` file-layout hook)."""
-    from ..operators.multimodal import IMAGE_MEDIA_TYPES, image_fingerprints
-
+    """Drain ``media_decontaminate`` (:func:`_drain_decontam`)."""
     _drain_decontam(
-        spark, sf_dir, index_dir, store_dir, checkpoint_dir,
-        F.col("media_type").isin(*IMAGE_MEDIA_TYPES), image_fingerprints,
-        glob,
+        spark, sf_dir, index_dir, store_dir, checkpoint_dir, IMAGE_CLIP_TIER, glob
+    )
+
+
+def streaming_media_audio_decontaminate(
+    spark: SparkSession, sf_dir: str, index_dir: str, store_dir: str,
+    checkpoint_dir: str, glob: str = "documents.parquet",
+) -> None:
+    """Drain ``media_audio_decontaminate`` (:func:`_drain_decontam`)."""
+    _drain_decontam(
+        spark, sf_dir, index_dir, store_dir, checkpoint_dir, AUDIO_CLIP_TIER, glob
+    )
+
+
+def streaming_media_video_decontaminate(
+    spark: SparkSession, sf_dir: str, index_dir: str, store_dir: str,
+    checkpoint_dir: str, glob: str = "documents.parquet",
+) -> None:
+    """Drain ``media_video_decontaminate`` (:func:`_drain_decontam`)."""
+    _drain_decontam(
+        spark, sf_dir, index_dir, store_dir, checkpoint_dir, VIDEO_CLIP_TIER, glob
+    )
+
+
+def streaming_media_video_frame_decontaminate(
+    spark: SparkSession, sf_dir: str, index_dir: str, store_dir: str,
+    checkpoint_dir: str, glob: str = "documents.parquet",
+) -> None:
+    """Drain ``media_video_frame_decontaminate`` (:func:`_drain_decontam`)."""
+    _drain_decontam(
+        spark, sf_dir, index_dir, store_dir, checkpoint_dir, VIDEO_FRAME_TIER, glob
+    )
+
+
+def streaming_media_audio_snippet_decontaminate(
+    spark: SparkSession, sf_dir: str, index_dir: str, store_dir: str,
+    checkpoint_dir: str, glob: str = "documents.parquet",
+) -> None:
+    """Drain ``media_audio_snippet_decontaminate`` (:func:`_drain_decontam`)."""
+    _drain_decontam(
+        spark, sf_dir, index_dir, store_dir, checkpoint_dir, AUDIO_WINDOW_TIER, glob
+    )
+
+
+def streaming_media_image_tile_decontaminate(
+    spark: SparkSession, sf_dir: str, index_dir: str, store_dir: str,
+    checkpoint_dir: str, glob: str = "documents.parquet",
+) -> None:
+    """Drain ``media_image_tile_decontaminate`` (:func:`_drain_decontam`)."""
+    _drain_decontam(
+        spark, sf_dir, index_dir, store_dir, checkpoint_dir, IMAGE_TILE_TIER, glob
     )
 
 
@@ -551,220 +574,28 @@ def _read_store_columns(
     """Shared reader for the idempotent ``batch_id=N`` store layout:
     selecting the payload columns drops the partition column. One
     definition so a layout change (e.g. partition handling) cannot
-    desynchronize the per-store readers (r13 review)."""
+    desynchronize the per-store readers."""
     return spark.read.parquet(store_dir).select(*cols)
 
 
-def read_media_flags_from_store(
-    spark: SparkSession, store_dir: str
-) -> DataFrame:
-    """(doc_id, n_eval_matches, min_hamming) from the drained
-    decontamination store — drops the batch_id partition column."""
-    return _read_store_columns(
-        spark, store_dir, ("doc_id", "n_eval_matches", "min_hamming")
-    )
+def read_media_flags_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
+    """(doc_id, n_eval_matches, min_hamming) from a clip tier's store."""
+    return _read_store_columns(spark, store_dir, IMAGE_CLIP_TIER.out_cols)
 
 
-def streaming_media_audio_decontaminate(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    glob: str = "documents.parquet",
-) -> None:
-    """Continuous-ingest AUDIO decontamination (r12) — the audio twin
-    of :func:`streaming_media_decontaminate`, completing streaming
-    modality parity with the r12 batch tier
-    (``operators.multimodal.media_audio_decontaminate``): each
-    micro-batch's TRAINING clips are fingerprinted (gain-invariant
-    envelope order) and flagged against the STORED audio
-    eval-fingerprint registry (``media_audio_eval_write_index``'s
-    parquet). Same stream-static join, same replay-idempotent sink,
-    same snapshot/release discipline — literally the same drain
-    (:func:`_drain_decontam`), differing only in the media predicate
-    and fingerprint function. The drained store is EXACTLY the batch
-    answer — pinned by the seeded equivalence test (the driver
-    corpora carry no natural audio contamination, so the test plants
-    the leaks). ``glob`` is the file-layout hook: driver corpora are
-    single ``documents.parquet`` FILES (one file = one micro-batch);
-    the seeded test points ``sf_dir`` inside a 2-part-file directory
-    with ``glob="part-*"`` so the equivalence covers REAL multi-batch
-    draining."""
-    from ..operators.multimodal import audio_fingerprints
-
-    _drain_decontam(
-        spark, sf_dir, index_dir, store_dir, checkpoint_dir,
-        F.col("media_type") == "audio/wav", audio_fingerprints, glob,
-    )
+def read_frame_flags_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
+    """(doc_id, n_eval_matches, n_frames_matched) from the video-frame store."""
+    return _read_store_columns(spark, store_dir, VIDEO_FRAME_TIER.out_cols)
 
 
-def streaming_media_video_decontaminate(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    glob: str = "documents.parquet",
-) -> None:
-    """Continuous-ingest VIDEO decontamination (r13) — the third
-    modality twin over the one shared drain
-    (:func:`_drain_decontam`), completing streaming parity with the
-    r13 batch tier (``operators.multimodal.media_video_decontaminate``):
-    each micro-batch's TRAINING clips are synthesized
-    (``media_avi_table_from`` via the ``media_fn`` hook — the AVI
-    table, not the WAV/BMP/PPM one), fingerprinted (gain-invariant
-    spatio-temporal gradient) and flagged against the STORED video
-    eval-fingerprint registry (``media_video_eval_write_index``'s
-    parquet). Same stream-static join, same replay-idempotent sink,
-    same snapshot/release discipline. The drained store is EXACTLY
-    the batch answer — pinned by the seeded multi-batch equivalence
-    test (the audio twin's pattern: planted leaks, 2-part-file
-    directory, ``glob="part-*"``)."""
-    from ..operators.multimodal import (
-        media_avi_table_from,
-        video_fingerprints,
-    )
-
-    _drain_decontam(
-        spark, sf_dir, index_dir, store_dir, checkpoint_dir,
-        F.col("media_type") == "video/avi", video_fingerprints, glob,
-        media_fn=media_avi_table_from,
-    )
+def read_snippet_flags_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
+    """(doc_id, n_eval_matches, n_windows_matched) from the audio-window store."""
+    return _read_store_columns(spark, store_dir, AUDIO_WINDOW_TIER.out_cols)
 
 
-
-def streaming_media_video_frame_decontaminate(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    glob: str = "documents.parquet",
-) -> None:
-    """Continuous-ingest FRAME-granular video decontamination (r13) —
-    the fourth twin over the one shared drain, exercising BOTH of its
-    hooks: ``media_fn`` (the AVI synth) and ``flags_fn`` (the
-    exact-match frame aggregate instead of the banded clip flags),
-    with the registry read from the ``frame_fps`` layout
-    (``media_video_frame_eval_write_index``'s parquet). Per-document
-    flags depend only on (doc frames) x (static eval frame registry),
-    so the drained store is EXACTLY the batch
-    ``media_video_frame_decontaminate`` answer — pinned by the seeded
-    2-micro-batch equivalence test."""
-    from ..operators.multimodal import (
-        _sub_item_decontam_flags,
-        media_avi_table_from,
-        video_frame_fingerprints,
-    )
-
-    def _frame_flags(fps: DataFrame, eval_fps: DataFrame) -> DataFrame:
-        return _sub_item_decontam_flags(
-            fps, eval_fps, "frame_fp", "frame_idx", "n_frames_matched"
-        )
-
-    _drain_decontam(
-        spark, sf_dir, index_dir, store_dir, checkpoint_dir,
-        F.col("media_type") == "video/avi", video_frame_fingerprints, glob,
-        media_fn=media_avi_table_from,
-        flags_fn=_frame_flags,
-        layout="frame_fps",
-    )
-
-
-def read_frame_flags_from_store(
-    spark: SparkSession, store_dir: str
-) -> DataFrame:
-    """(doc_id, n_eval_matches, n_frames_matched) from the drained
-    frame-decontamination store — drops the batch_id partition
-    column."""
-    return _read_store_columns(
-        spark, store_dir, ("doc_id", "n_eval_matches", "n_frames_matched")
-    )
-
-
-def streaming_media_audio_snippet_decontaminate(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    glob: str = "documents.parquet",
-) -> None:
-    """Continuous-ingest SNIPPET-granular audio decontamination
-    (r13) — the audio sub-item twin over the shared drain: each
-    micro-batch's TRAINING clips are window-fingerprinted and
-    flagged against the STORED eval window registry
-    (``media_audio_snippet_eval_write_index``'s ``snippet_fps``
-    layout). The drained store is EXACTLY the batch
-    ``media_audio_snippet_decontaminate`` answer — pinned by the
-    seeded 2-micro-batch equivalence test."""
-    from ..operators.multimodal import (
-        _sub_item_decontam_flags,
-        audio_window_fingerprints,
-    )
-
-    def _flags(fps: DataFrame, eval_fps: DataFrame) -> DataFrame:
-        return _sub_item_decontam_flags(
-            fps, eval_fps, "win_fp", "win_idx", "n_windows_matched"
-        )
-
-    _drain_decontam(
-        spark, sf_dir, index_dir, store_dir, checkpoint_dir,
-        F.col("media_type") == "audio/wav", audio_window_fingerprints,
-        glob, flags_fn=_flags, layout="snippet_fps",
-    )
-
-
-def read_snippet_flags_from_store(
-    spark: SparkSession, store_dir: str
-) -> DataFrame:
-    """(doc_id, n_eval_matches, n_windows_matched) from the drained
-    snippet store — drops the batch_id partition column."""
-    return _read_store_columns(
-        spark, store_dir, ("doc_id", "n_eval_matches", "n_windows_matched")
-    )
-
-
-def streaming_media_image_tile_decontaminate(
-    spark: SparkSession,
-    sf_dir: str,
-    index_dir: str,
-    store_dir: str,
-    checkpoint_dir: str,
-    glob: str = "documents.parquet",
-) -> None:
-    """Continuous-ingest TILE-granular image decontamination (r13) —
-    the image sub-item twin over the shared drain, flagging each
-    micro-batch's TRAINING images against the STORED eval tile
-    registry (``tile_fps`` layout). Drained store == the batch
-    ``media_image_tile_decontaminate`` answer, seeded equivalence."""
-    from ..operators.multimodal import (
-        IMAGE_MEDIA_TYPES,
-        _sub_item_decontam_flags,
-        image_tile_fingerprints,
-    )
-
-    def _flags(fps: DataFrame, eval_fps: DataFrame) -> DataFrame:
-        return _sub_item_decontam_flags(
-            fps, eval_fps, "tile_fp", "tile_idx", "n_tiles_matched"
-        )
-
-    _drain_decontam(
-        spark, sf_dir, index_dir, store_dir, checkpoint_dir,
-        F.col("media_type").isin(*IMAGE_MEDIA_TYPES),
-        image_tile_fingerprints, glob, flags_fn=_flags, layout="tile_fps",
-    )
-
-
-def read_tile_flags_from_store(
-    spark: SparkSession, store_dir: str
-) -> DataFrame:
-    """(doc_id, n_eval_matches, n_tiles_matched) from the drained
-    tile store — drops the batch_id partition column."""
-    return _read_store_columns(
-        spark, store_dir, ("doc_id", "n_eval_matches", "n_tiles_matched")
-    )
+def read_tile_flags_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
+    """(doc_id, n_eval_matches, n_tiles_matched) from the image-tile store."""
+    return _read_store_columns(spark, store_dir, IMAGE_TILE_TIER.out_cols)
 
 
 def streaming_snapshot_diff(

@@ -26,9 +26,9 @@ def test_bucketed_publish_loses_nothing(spark, sf_dir):
     bucketed_join_revenue(spark, sf_dir)  # (re)publishes both tables
     import re
 
-    from honors_p1_mapreduce_spark.operators.bpe_encode import _corpus_token
+    from honors_p1_mapreduce_spark.sources.tables import corpus_path_token
 
-    safe = re.sub(r"[^A-Za-z0-9_]", "_", _corpus_token(sf_dir))
+    safe = re.sub(r"[^A-Za-z0-9_]", "_", corpus_path_token(sf_dir))
     for tbl, src, key in [
         (f"bj_lineitem_{safe}", "lineitem", "l_orderkey"),
         (f"bj_orders_{safe}", "orders", "o_orderkey"),
@@ -51,11 +51,11 @@ def test_corpus_token_distinguishes_equal_basenames():
     .../b/sf0.1) must get DISTINCT catalog table names and artifact
     paths — same-session publishes must never clobber each other (r8
     advisor finding)."""
-    from honors_p1_mapreduce_spark.operators.bpe_encode import _corpus_token
+    from honors_p1_mapreduce_spark.sources.tables import corpus_path_token
 
-    a, b = _corpus_token("/data/a/sf0.1"), _corpus_token("/data/b/sf0.1")
+    a, b = corpus_path_token("/data/a/sf0.1"), corpus_path_token("/data/b/sf0.1")
     assert a != b
     assert a.startswith("sf0.1_") and b.startswith("sf0.1_")
     # stable across trailing-slash / redundant-segment spellings
-    assert _corpus_token("/data/a/sf0.1/") == a
-    assert _corpus_token("/data/a/./sf0.1") == a
+    assert corpus_path_token("/data/a/sf0.1/") == a
+    assert corpus_path_token("/data/a/./sf0.1") == a

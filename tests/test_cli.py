@@ -72,10 +72,15 @@ def test_driver_window_rows_only_queries_are_sanctioned():
 
 
 def test_cli_query_describe(capsys):
-    """--describe prints the operator docstring without a Spark job."""
+    """--describe prints every registered query's module.qualname and
+    docstring without a Spark job."""
+    import inspect
+
+    from honors_p1_mapreduce_spark import registry
     from honors_p1_mapreduce_spark.__main__ import main
 
-    main(["query", "token_budget_select", "--describe"])
-    out = capsys.readouterr().out
-    assert "token_budget_select" in out
-    assert "histogram-cutoff" in out
+    for name, fn in registry.QUERIES.items():
+        main(["query", name, "--describe"])
+        out = capsys.readouterr().out
+        assert f"{name} ({fn.__module__}.{fn.__qualname__})" in out
+        assert (inspect.getdoc(fn) or "(no docstring)") in out

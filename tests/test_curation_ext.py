@@ -850,7 +850,7 @@ def test_winnow_index_refresh_equals_rebuild(spark, sf_dir):
     """The strong pin: the delta-refreshed index frame is
     row-identical to a from-scratch extraction over the NEW snapshot
     — refresh(index(old), diff) == index(new)."""
-    from honors_p1_mapreduce_spark.operators.bpe_encode import _artifact_dir
+    from honors_p1_mapreduce_spark.sources.tables import _artifact_dir
     from honors_p1_mapreduce_spark.operators.winnow import (
         winnow_fingerprints_chunked_from,
     )
@@ -886,7 +886,7 @@ def test_winnow_refresh_mor_equals_eager_and_compacts(spark, sf_dir):
     refreshed index: mor(base, delta) == rebuild(new snapshot) row
     set, compaction materializes the same rows, and the stored twin's
     drop-list equals the self-contained refresh's."""
-    from honors_p1_mapreduce_spark.operators.bpe_encode import _artifact_dir
+    from honors_p1_mapreduce_spark.sources.tables import _artifact_dir
     from honors_p1_mapreduce_spark.operators.winnow import (
         winnow_fingerprints_chunked_from,
     )
@@ -942,7 +942,7 @@ def test_winnow_refresh_stored_reuses_shipped_base(spark, sf_dir):
     — pinned via the parquet directory's file listing + mtimes."""
     import os
 
-    from honors_p1_mapreduce_spark.operators.bpe_encode import _artifact_dir
+    from honors_p1_mapreduce_spark.sources.tables import _artifact_dir
 
     cx.winnow_index_refresh_stored(spark, sf_dir).count()
     d_base = _artifact_dir(spark, sf_dir, "winnow_snap_base")

@@ -27,6 +27,19 @@ def test_speculation_knobs_match_reference(spark):
     assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 1000
 
 
+def test_default_cpus_falls_back_to_host_affinity(monkeypatch):
+    """With SPARK_GRAFT_CPUS unset, a bare get_spark() asks for the
+    CPUs this process may run on, not a fixed core count."""
+    import os
+
+    from honors_p1_mapreduce_spark.session import default_cpus
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == 3
+
+
 def test_write_tsv_round_trip_sorted_partitions(spark, tmp_path):
     df = spark.createDataFrame(
         [("b", 2), ("a", 1), ("c", 3), ("a", 9)], ["k", "v"]

@@ -1192,6 +1192,25 @@ def test_fp_clusters_first_band_emission_equivalence(spark):
     assert got[500] == 500
 
 
+def test_decontam_tier_table_registration():
+    """Spark-free: the tier table covers every registered media
+    decontamination query, no two tiers share a stored-artifact name,
+    and each tier's online and ``_stored`` queries are registered
+    against the same oracle string."""
+    artifacts = [t.artifact for t in mm.DECONTAM_TIERS]
+    assert len(set(artifacts)) == len(artifacts) == 6
+    names = {t.name for t in mm.DECONTAM_TIERS}
+    assert {
+        n for n in registry.QUERIES
+        if n.startswith("media_") and "decontaminate" in n
+    } == names | {n + "_stored" for n in names}
+    for n in names:
+        assert registry.QUERIES[n] is getattr(mm, n)
+        assert registry.QUERIES[n + "_stored"] is getattr(mm, n + "_stored")
+        assert isinstance(registry.ORACLES[n], str)
+        assert registry.ORACLES[n + "_stored"] == registry.ORACLES[n]
+
+
 def test_media_decontaminate_seeded_leak(spark, tmp_path):
     """Seeded-leak golden (r10 verdict #3): an eval image (doc 7 —
     doc_id % 101 == 7, % 3 == 1 -> BMP) leaks into training as an
@@ -1295,7 +1314,7 @@ def test_media_decontaminate_stored_equals_online(spark, sf_dir):
         spark,
         sf_dir,
         mm.media_decontaminate_stored,
-        mm.MEDIA_DECONTAMINATE_STORED_ORACLE,
+        mm.MEDIA_DECONTAMINATE_ORACLE,
     )
 
 

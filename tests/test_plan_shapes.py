@@ -1061,7 +1061,7 @@ def test_r17_queued_surface_plans_are_clean(spark, sf_dir):
     search never self-joins the corpus vectors (the
     pq_never_self_joins_corpus guarantee extended to the refreshed
     generation)."""
-    from honors_p1_mapreduce_spark.operators.bpe_encode import _artifact_dir
+    from honors_p1_mapreduce_spark.sources.tables import _artifact_dir
     from honors_p1_mapreduce_spark.operators.curation_ext import (
         winnow_index_refresh_stored,
         winnow_read_index_mor,

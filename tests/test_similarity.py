@@ -542,7 +542,7 @@ def test_pq_index_refresh_equals_frozen_rebuild(spark, sf_dir):
     codebooks — is code-for-code identical to encoding the whole NEW
     snapshot against those codebooks at once; and the diff genuinely
     exercised every status."""
-    from honors_p1_mapreduce_spark.operators.bpe_encode import _artifact_dir
+    from honors_p1_mapreduce_spark.sources.tables import _artifact_dir
     from honors_p1_mapreduce_spark.operators.curation_ext import snapshot_diff
     from honors_p1_mapreduce_spark.operators.pq import (
         PQ_CELLS,

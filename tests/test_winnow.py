@@ -411,7 +411,7 @@ def test_winnow_retract_drops_docs_from_answer(spark, sf_dir):
             assert shared <= before[doc_id]
 
 
-def test_scan_parallelize_layout_trigger(spark, sf_dir, monkeypatch):
+def test_scan_parallelize_layout_trigger(spark, sf_dir):
     """r17 under-parallel-scan fix (tables._scan_parallelize): the
     round-robin repartition fires ONLY when the file layout cannot
     split into >= defaultParallelism scan tasks — never as a local
@@ -420,10 +420,10 @@ def test_scan_parallelize_layout_trigger(spark, sf_dir, monkeypatch):
     consumers keep the bare scan). Arms: (1) the driver corpora are
     single-row-group parquet, so a wide_scan read carries the
     exchange sized to the session's parallelism while the default
-    documents read does not; (2) SPARK_GRAFT_SCAN_PAR=0 disables it
-    (the A/B switch); (3) with maxPartitionBytes shrunk so the byte
+    documents read does not; (2) the wide-scan rows are exactly the
+    bare read's rows; (3) with maxPartitionBytes shrunk so the byte
     estimate yields >= parallelism tasks — the 100 TB condition —
-    the plan is untouched. Rows are identical in all arms."""
+    the plan is untouched."""
     from honors_p1_mapreduce_spark.sources.tables import load_table
 
     def plan(df):
@@ -437,13 +437,13 @@ def test_scan_parallelize_layout_trigger(spark, sf_dir, monkeypatch):
     assert docs.rdd.getNumPartitions() == par
     # non-opted consumers keep the bare scan (wide_scan is strictly
     # opt-in — measured winners only)
-    assert "Exchange" not in plan(load_table(spark, sf_dir, "documents"))
+    bare = load_table(spark, sf_dir, "documents")
+    assert "Exchange" not in plan(bare)
     assert "Exchange" not in plan(load_table(spark, sf_dir, "embeddings"))
 
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_PAR", "0")
-    off = load_table(spark, sf_dir, "documents", wide_scan=True)
-    assert "Exchange" not in plan(off)
-    monkeypatch.delenv("SPARK_GRAFT_SCAN_PAR")
+    assert sorted(map(tuple, docs.collect())) == sorted(
+        map(tuple, bare.collect())
+    )
 
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     try:
@@ -452,7 +452,3 @@ def test_scan_parallelize_layout_trigger(spark, sf_dir, monkeypatch):
         assert "Exchange" not in plan(split_enough)
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-
-    assert sorted(map(tuple, docs.collect())) == sorted(
-        map(tuple, off.collect())
-    )
