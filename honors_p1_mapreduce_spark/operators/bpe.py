@@ -80,6 +80,19 @@ def _syms(wrapped) -> F.Column:
     return F.split(F.btrim(wrapped, F.lit(_SEP)), r"\|\|")
 
 
+def _memo_key(spark: SparkSession, cache_key: str, params) -> tuple:
+    """The (application, corpus dir, corpus snapshot, params) key of
+    every BPE memo: ``params`` is ``n_merges`` for the merge tables
+    and bpe_encode._WORD_IDS_CACHE, and the rank-ordered (left, right)
+    merge pairs for the word->syms memo."""
+    return (
+        spark.sparkContext.applicationId,
+        cache_key,
+        corpus_token(cache_key),
+        params,
+    )
+
+
 # Learned merge tables are build-once tokenizer artifacts (same
 # argument as pq._CODEBOOK_CACHE): train once per (application,
 # corpus, corpus snapshot token, n_merges), serve every downstream
@@ -98,8 +111,11 @@ _MERGES_CACHE: dict[tuple, list] = {}
 # driver-local trainer ran AND no word contains the separator (a word
 # containing _SEP is ambiguous in the wrapped representation, so those
 # corpora stay on the JVM path end to end — the standard tokenizer
-# [a-z0-9_]+ can never produce one). Same key shape and reset
-# discipline as _MERGES_CACHE (registry.reset_memos clears it).
+# [a-z0-9_]+ can never produce one). Keyed by the tuple of (left,
+# right) merge pairs whose end state it holds, so a consumer holding a
+# merge list — trained or read back from a stored tokenizer — finds it
+# in one lookup; same reset discipline as _MERGES_CACHE
+# (registry.reset_memos clears it).
 _SYMS_CACHE: dict[tuple, dict[str, list[str]]] = {}
 
 
@@ -305,12 +321,7 @@ def bpe_train_merges_list(
     """
     key = None
     if cache_key is not None and incremental is None:
-        key = (
-            spark.sparkContext.applicationId,
-            cache_key,
-            corpus_token(cache_key),
-            n_merges,
-        )
+        key = _memo_key(spark, cache_key, n_merges)
         hit = _MERGES_CACHE.get(key)
         if hit is not None:
             # shallow copy of tuples (advisor r17): a caller mutating
@@ -337,7 +348,8 @@ def bpe_train_merges_list(
                 _MERGES_CACHE[key] = list(local)
                 orig = [r["word"] for r in collected]
                 if all(_SEP not in w for w in orig):
-                    _SYMS_CACHE[key] = {
+                    pairs = tuple((lf, rt) for _rk, lf, rt, _c in local)
+                    _SYMS_CACHE[_memo_key(spark, cache_key, pairs)] = {
                         w: fw.strip(_SEP).split(_SEP + _SEP)
                         for w, fw in zip(orig, final_words)
                     }

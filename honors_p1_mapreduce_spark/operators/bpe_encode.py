@@ -36,29 +36,17 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens_col, tokens_sql
 from ..sources.sinks import write_parquet_parallel
-from ..sources.tables import _artifact_dir, corpus_token, load_table
+from ..sources.tables import _artifact_dir, load_table
 from .bpe import (
     _SEP,
     _SYMS_CACHE,
+    _memo_key,
     _syms,
     _wrap_chars,
     BPE_MERGES,
     MERGES_SCHEMA,
     bpe_train_merges_list,
 )
-
-
-def _memo_key(spark: SparkSession, cache_key: str, n_merges: int) -> tuple:
-    """The shared (application, corpus dir, corpus snapshot, params)
-    memo key — identical shape for bpe._MERGES_CACHE/_SYMS_CACHE and
-    this module's _WORD_IDS_CACHE, so a trainer run populates the syms
-    memo under exactly the key the encode consumers look up."""
-    return (
-        spark.sparkContext.applicationId,
-        cache_key,
-        corpus_token(cache_key),
-        n_merges,
-    )
 
 
 def _sym_ids_fold(words, merges: list) -> dict[str, int]:
@@ -132,7 +120,7 @@ def bpe_encode_stats_from(
     # tokenizer emits [a-z0-9_]+ only (and the memo is only populated
     # for separator-free vocabularies).
     syms_map = (
-        _SYMS_CACHE.get(_memo_key(spark, cache_key, n_merges))
+        _SYMS_CACHE.get(_memo_key(spark, cache_key, tuple(merges)))
         if cache_key is not None
         else None
     )
@@ -341,7 +329,11 @@ def _doc_token_ids(
     # posexplode+join+groupBy+localCheckpoint id-map job. Corpora the
     # local trainer didn't cover (vocab above the cap, or a word
     # containing the separator) stay on the JVM pipeline below.
-    syms_map = _SYMS_CACHE.get(wkey) if wkey is not None else None
+    syms_map = (
+        _SYMS_CACHE.get(_memo_key(spark, cache_key, tuple(merges)))
+        if cache_key is not None
+        else None
+    )
     if syms_map is not None:
         rows = _word_ids_rows(syms_map, _sym_ids_fold(syms_map, merges))
         word_ids = spark.createDataFrame(rows, "word string, ids array<bigint>")
@@ -680,7 +672,7 @@ def bpe_write_tokenizer(
     # whole table assembles on the driver (the exact rows
     # _sym_id_table produces: it already builds from a collected
     # alphabet + the same fold).
-    syms_map = _SYMS_CACHE.get(_memo_key(spark, sf_dir, n_merges))
+    syms_map = _SYMS_CACHE.get(_memo_key(spark, sf_dir, tuple(merges)))
     if syms_map is not None:
         sym_ids = spark.createDataFrame(
             sorted(_sym_ids_fold(syms_map, merges).items()),
@@ -730,19 +722,7 @@ def bpe_encode_ids_with(
     # driver from the STORED vocabulary (collected — it is vocab-sized
     # and broadcast downstream either way), UNK semantics included.
     # Any other (corpus, tokenizer) pairing stays on the JVM path.
-    syms_map = None
-    from .bpe import _MERGES_CACHE
-
-    for k, rows_m in _MERGES_CACHE.items():
-        if (
-            k[0] == spark.sparkContext.applicationId
-            and k[1] == sf_dir
-            and k[2] == corpus_token(sf_dir)
-            and [(left, right) for _rk, left, right, _c in rows_m] == merges
-            and k in _SYMS_CACHE
-        ):
-            syms_map = _SYMS_CACHE[k]
-            break
+    syms_map = _SYMS_CACHE.get(_memo_key(spark, sf_dir, tuple(merges)))
     if syms_map is not None:
         stored_ids = {
             r["sym"]: r["sym_id"] for r in sym_ids.collect()

@@ -56,10 +56,10 @@ PPM = 1_000_000  # probability fixed-point scale (parts per million)
 # fixed in r10/r11, but the r11 advisor flagged that the read path
 # still leaked one cached frame per invocation until a session-level
 # clearCache. Each read-path call enrolls its frames here and
-# ``registry.reset_memos()`` — which perfbench and the CLI invoke
-# after materializing each query, and the pytest session fixture
-# invokes at teardown (tests/conftest.py) — unpersists and clears
-# them, exactly like the BPE/PQ/winnow memo caches. (The alternative — eagerly localCheckpoint-ing the result —
+# ``registry.reset_memos()`` unpersists and clears them, exactly like
+# the BPE/PQ/winnow memo caches. The CLI invokes it after
+# materializing each query, perfbench at the start of each pass, and
+# the pytest session fixture at teardown (tests/conftest.py). (The alternative — eagerly localCheckpoint-ing the result —
 # would store a corpus-doc-count-sized frame and break the pinned
 # lazy single-scan plan shape, tests/test_plan_shapes.py.)
 _READ_FRAMES_CACHE: dict[int, DataFrame] = {}

@@ -21,12 +21,13 @@ and tested. Two codec tiers:
   binary in, per-item features out, frame sampling — runs and is
   reproducible in tests.
 
-Media decontamination (image, audio and video clips; video frames,
-audio windows and image tiles) is ONE tier table at the end of this
-module: a :class:`DecontamTier` per tier holds everything the tiers
-differ in, and the online, write-index, from-index and stored queries
-are written once over it. The streaming twins (streaming/curation.py)
-drain the same records.
+The media fingerprint tiers (image, audio and video clips; video
+frames, audio windows and image tiles) are ONE tier table at the end
+of this module: a :class:`MediaTier` per tier holds everything the
+tiers differ in. The near-dup, dedup and overlap queries and the
+online, write-index, from-index and stored decontamination queries
+are written once over it, and the streaming twins
+(streaming/curation.py) drain the same records.
 
 The demo media table derives its payloads from ``documents.text``
 (UTF-8 bytes) so ``media_stats`` stays fully oracle-checkable: DuckDB
@@ -37,18 +38,22 @@ CORRUPT-PAYLOAD CONTRACTS (r12 verdict #7 — the boundary is
 deliberate; land any future fuzz finding on the right side of it):
 
 - **Fingerprint/ingest paths SKIP per item, and COUNT the skips**:
-  ``image_fingerprints`` (narrowed except, see its docstring) and the
-  audio chain (``audio_fingerprints`` / ``wav_fp_peak`` via the
-  ``wav_volume_hash() == -1`` sentinel, which is total over arbitrary
-  bytes by construction) drop undecodable payloads and keep going —
-  at 100 TB corrupt files are routine, and one bad blob must not fail
-  a corpus-wide dedup/decontamination query. Every skip increments
-  the per-context accumulator read by ``media_skip_count(modality)``,
-  so a mass skip is distinguishable from a clean corpus in BOTH
-  modalities. Pinned by
+  all seven passes (``image_fingerprints``, ``image_tile_fingerprints``,
+  ``audio_fingerprints``, ``wav_fp_peak``,
+  ``audio_window_fingerprints``, ``video_fingerprints``,
+  ``video_frame_fingerprints``) run through ONE loop,
+  :func:`_fingerprint_pass`. It drops a NULL payload, or one whose
+  decode raises its modality's corrupt-payload error
+  (``_CORRUPT_PAYLOAD_ERRORS``, written once per modality), and keeps
+  going — at 100 TB corrupt files are routine, and one bad blob must
+  not fail a corpus-wide dedup/decontamination query. Any other error
+  fails the query. Every skip increments the per-context accumulator
+  read by ``media_skip_count(modality)``, so a mass skip is
+  distinguishable from a clean corpus in every modality. Pinned by
   ``test_image_fingerprints_skip_corrupt_payloads``,
-  ``test_audio_fingerprints_count_skips``, and the ``-1`` sentinel
-  assertions in ``test_wav_volume_hash_invariances``.
+  ``test_audio_fingerprints_count_skips``,
+  ``test_video_fingerprints_skip_corrupt_payloads`` and the totality
+  properties in tests/test_properties.py.
 - **Decode/transform queries RAISE per item**: ``media_resize``,
   ``media_png_decode``, ``media_avi_decode`` let ``struct.error`` /
   :class:`UnsupportedMediaError` propagate — a decode query's JOB is
@@ -77,6 +82,7 @@ from dataclasses import dataclass
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..sources.tables import _artifact_dir, load_table
 
@@ -1527,69 +1533,6 @@ def image_dhash(content: bytes) -> int:
     return fp
 
 
-def image_fingerprints(media: DataFrame) -> DataFrame:
-    """(doc_id, fingerprint) via one Arrow-batched map-only pass —
-    bytes in, 8-byte hashes out, no shuffle.
-
-    Undecodable payloads are SKIPPED per item, never fatal (r12
-    fuzzing: a ``BM``-magic payload with a truncated header raises
-    struct.error inside ``_pixel_grid``, and a foreign container
-    raises UnsupportedMediaError — either would have killed the whole
-    mapInPandas task, i.e. one corrupt file fails the query; at 100 TB
-    corrupt files are routine. The audio twin has skipped undecodable
-    clips since r10 via ``wav_volume_hash() == -1``; this makes the
-    modalities symmetric). Behavior-identical on the synthesized
-    corpora (payloads are well-formed by construction — pinned by the
-    corrupt-payload test asserting the valid rows are bit-identical
-    with garbage rows present), and invisible to the DuckDB oracles,
-    whose fp derivations only ever see well-formed rows.
-
-    r13 (r12 advisor): the skip is no longer a bare ``except
-    Exception`` — that swallowed genuine regressions in
-    :func:`image_dhash` / :func:`_pixel_grid` (a NameError or
-    TypeError from a bad edit would silently drop EVERY row, and
-    downstream decontamination would report "clean" instead of
-    failing). The caught set is exactly the corrupt-payload modes a
-    malformed byte string can produce in the decode chain — NULL
-    payload, struct.error (truncated BMP header), UnsupportedMediaError
-    (foreign magic, or declared geometry that does not fit the
-    payload — the :func:`_bmp_geometry` bound that also defuses the
-    huge-declared-height memory bomb a review found in the first
-    cut), ValueError (truncated P6 header: the tokenizer's
-    ``int(b"")``), IndexError (retained belt-and-braces for short
-    pixel data, now normally pre-empted by the geometry bounds) —
-    anything else propagates and fails the query. Skips are COUNTED
-    via the per-context Spark accumulator
-    (:func:`media_skip_count`), so mass skipping is distinguishable
-    from a clean corpus; the count is a monitoring signal (task
-    retries / re-executed actions can inflate it), not a query
-    result."""
-    acc = _skip_acc(media.sparkSession.sparkContext, "image")
-
-    def _fp(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "fingerprint": []}
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                if content is None:
-                    acc.add(1)
-                    continue
-                try:
-                    fp = image_dhash(bytes(content))
-                except (
-                    struct.error,
-                    UnsupportedMediaError,
-                    ValueError,
-                    IndexError,
-                ):
-                    acc.add(1)  # corrupt/truncated/foreign container
-                    continue
-                out["doc_id"].append(doc_id)
-                out["fingerprint"].append(fp)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(_fp, schema="doc_id long, fingerprint long")
-
-
 # One skip accumulator per (SparkContext, modality), created lazily
 # and CUMULATIVE for the context's lifetime (r13 review: the first
 # cut created a fresh accumulator per plan build, which both leaked a
@@ -1638,6 +1581,84 @@ def reset_media_skip_counts() -> None:
     ``registry.reset_memos`` resets the session memos."""
     for acc in _SKIP_ACCS.values():
         acc.value = 0
+
+
+# The corrupt-payload modes a malformed byte string can raise in each
+# modality's decode chain, written once. Image (BMP/PPM via
+# _pixel_grid): struct.error (truncated BMP header),
+# UnsupportedMediaError (foreign magic, or declared geometry that does
+# not fit the payload — the _bmp_geometry bound that also defuses the
+# huge-declared-height memory bomb), ValueError (truncated P6 header:
+# the tokenizer's int(b"")) and IndexError (short pixel data, normally
+# pre-empted by the geometry bounds). Video: _avi_frames_parse wraps
+# every struct.error / IndexError into UnsupportedMediaError, so that
+# one type is the contract. Audio: the passes raise it themselves for
+# a clip with no RIFF data section or too few samples. Anything else
+# fails the query: a bare ``except Exception`` (the r12 cut) swallowed
+# genuine regressions — a NameError from a bad edit would silently
+# drop EVERY row and decontamination would report "clean".
+_CORRUPT_PAYLOAD_ERRORS = {
+    "image": (struct.error, UnsupportedMediaError, ValueError, IndexError),
+    "audio": (UnsupportedMediaError,),
+    "video": (UnsupportedMediaError,),
+}
+
+
+def _fingerprint_pass(
+    media: DataFrame,
+    modality: str,
+    schema: str,
+    rows_of: Callable[[bytes], list[tuple]],
+) -> DataFrame:
+    """The one ingest loop of every fingerprint pass: an Arrow-batched,
+    map-only ``mapInPandas`` over ``media``'s (doc_id, content) rows,
+    bytes in, a few 8-byte columns out, no shuffle. ``rows_of(payload)``
+    returns the payload's output rows without their leading doc_id,
+    ``schema`` names all output columns, doc_id first. A NULL payload,
+    or one whose ``rows_of`` raises the modality's corrupt-payload
+    error (``_CORRUPT_PAYLOAD_ERRORS``), is SKIPPED and COUNTED toward
+    :func:`media_skip_count` — the count is a monitoring signal (task
+    retries / re-executed actions can inflate it), not a query result.
+    The caught set comes from ``modality``, so a pass cannot count one
+    modality's skips against another's error set."""
+    acc = _skip_acc(media.sparkSession.sparkContext, modality)
+    caught = _CORRUPT_PAYLOAD_ERRORS[modality]
+    cols = [c.split()[0] for c in schema.split(",")]
+
+    def _fp(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
+        for pdf in batches:
+            out = []
+            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
+                if content is None:
+                    acc.add(1)
+                    continue
+                try:
+                    rows = rows_of(bytes(content))
+                except caught:
+                    acc.add(1)  # corrupt/truncated/foreign container
+                    continue
+                out.extend((doc_id, *row) for row in rows)
+            yield pd.DataFrame(out, columns=cols)
+
+    return media.mapInPandas(_fp, schema=schema)
+
+
+def image_fingerprints(media: DataFrame) -> DataFrame:
+    """(doc_id, fingerprint): :func:`image_dhash` per payload through
+    :func:`_fingerprint_pass`. Undecodable payloads are SKIPPED and
+    counted toward ``media_skip_count("image")``, never fatal (r12
+    fuzzing: a ``BM``-magic payload with a truncated header, or a
+    foreign container, would otherwise kill the whole task, i.e. one
+    corrupt file fails the query). Behavior-identical on the
+    synthesized corpora (payloads are well-formed by construction —
+    pinned by the corrupt-payload test asserting the valid rows are
+    bit-identical with garbage rows present), and invisible to the
+    DuckDB oracles, whose fp derivations only ever see well-formed
+    rows."""
+    return _fingerprint_pass(
+        media, "image", "doc_id long, fingerprint long",
+        lambda content: [(image_dhash(content),)],
+    )
 
 
 def image_neardup_pairs(
@@ -1739,17 +1760,11 @@ def media_image_neardup(
     buckets above bucket_cap members are excluded (constants comment
     above has the recall bound and both cap rationales). The banded +
     capped definition is the query contract (same family as
-    simhash_neardup / winnow_neardup)."""
-    from pyspark.storagelevel import StorageLevel
-
-    imgs = media_real_table(spark, sf_dir).filter(
-        F.col("media_type").isin(*IMAGE_MEDIA_TYPES)
-    )
-    # both sides of the band self-join (and the hot-set counts) need
-    # the fingerprints; persist or the decode pass runs per consumer
-    fp = image_fingerprints(imgs).persist(StorageLevel.MEMORY_AND_DISK)
+    simhash_neardup / winnow_neardup). Tier spec:
+    :data:`IMAGE_CLIP_TIER`."""
     return image_neardup_pairs(
-        fp, max_hamming=max_hamming, fp_cap=fp_cap, bucket_cap=bucket_cap
+        IMAGE_CLIP_TIER.corpus_fps(spark, sf_dir), max_hamming, fp_cap,
+        bucket_cap,
     )
 
 
@@ -1875,14 +1890,16 @@ def media_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the fp -> rep map. CC node count is bounded by content
     diversity, not corpus size.
 
-    Output: (doc_id, cluster, cluster_size).
+    Output: (doc_id, cluster, cluster_size). Tier spec:
+    :data:`IMAGE_CLIP_TIER`.
     """
-    from pyspark.storagelevel import StorageLevel
+    return _dedup(IMAGE_CLIP_TIER.corpus_fps(spark, sf_dir))
 
-    imgs = media_real_table(spark, sf_dir).filter(
-        F.col("media_type").isin(*IMAGE_MEDIA_TYPES)
-    )
-    fp = image_fingerprints(imgs).persist(StorageLevel.MEMORY_AND_DISK)
+
+def _dedup(fp: DataFrame) -> DataFrame:
+    """(doc_id, cluster, cluster_size): the :func:`fp_clusters` labels
+    of a (doc_id, fingerprint) frame with each cluster's size — the
+    body of every ``media_*_dedup`` query."""
     labeled = fp_clusters(fp)
     sizes = labeled.groupBy("cluster").agg(F.count("*").alias("cluster_size"))
     return labeled.join(sizes, "cluster").select(
@@ -2089,31 +2106,36 @@ def _fp_from_samples(vs) -> int:
     return fp
 
 
+def _wav_samples(content: bytes, min_samples: int) -> tuple[int, ...]:
+    """The signed 16-bit LE PCM samples of a WAV payload (shared RIFF
+    walk). A payload with no data section or fewer than
+    ``min_samples`` samples raises :class:`UnsupportedMediaError`, the
+    audio passes' skip."""
+    data = _wav_data_section(content)
+    if not data or len(data) // 2 < min_samples:
+        raise UnsupportedMediaError("no WAV data section or too few samples")
+    return struct.unpack_from(f"<{len(data) // 2}h", data)
+
+
 def audio_fingerprints(media: DataFrame) -> DataFrame:
-    """(doc_id, fingerprint) — one Arrow-batched map-only pass over
-    WAV payloads, 8-byte hashes out, no shuffle (the audio twin of
+    """(doc_id, fingerprint) — :func:`wav_volume_hash` per WAV payload
+    through :func:`_fingerprint_pass` (the audio twin of
     :func:`image_fingerprints`). Undecodable clips (non-RIFF bytes,
     truncated PCM — the ``wav_volume_hash() == -1`` sentinel, total
     over arbitrary bytes by construction) skip per item AND count
     toward ``media_skip_count("audio")`` — the r13 review closed the
     asymmetry where image skips were counted but a mass audio skip
     still read as a clean corpus."""
-    acc = _skip_acc(media.sparkSession.sparkContext, "audio")
 
-    def _fp(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "fingerprint": []}
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                fp = -1 if content is None else wav_volume_hash(bytes(content))
-                if fp < 0:
-                    acc.add(1)
-                    continue
-                out["doc_id"].append(doc_id)
-                out["fingerprint"].append(fp)
-            yield pd.DataFrame(out)
+    def rows_of(content: bytes) -> list[tuple]:
+        fp = wav_volume_hash(content)
+        if fp < 0:
+            raise UnsupportedMediaError("undecodable or too-short WAV clip")
+        return [(fp,)]
 
-    return media.filter(F.col("media_type") == "audio/wav").mapInPandas(
-        _fp, schema="doc_id long, fingerprint long"
+    return _fingerprint_pass(
+        media.filter(F.col("media_type") == "audio/wav"), "audio",
+        "doc_id long, fingerprint long", rows_of,
     )
 
 
@@ -2128,28 +2150,14 @@ def wav_fp_peak(media: DataFrame) -> DataFrame:
     full pass; the funnel needs one number from each). Undecodable
     clips skip per item and count toward
     ``media_skip_count("audio")``, like :func:`audio_fingerprints`."""
-    acc = _skip_acc(media.sparkSession.sparkContext, "audio")
 
-    def _fp(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "fingerprint": [], "peak_abs": []}
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                data = (
-                    None if content is None
-                    else _wav_data_section(bytes(content))
-                )
-                if not data or len(data) // 2 < PHASH_BITS + 1:
-                    acc.add(1)
-                    continue
-                n = len(data) // 2
-                vs = struct.unpack_from(f"<{n}h", data)
-                out["doc_id"].append(doc_id)
-                out["fingerprint"].append(_fp_from_samples(vs))
-                out["peak_abs"].append(max(abs(v) for v in vs))
-            yield pd.DataFrame(out)
+    def rows_of(content: bytes) -> list[tuple]:
+        vs = _wav_samples(content, PHASH_BITS + 1)
+        return [(_fp_from_samples(vs), max(abs(v) for v in vs))]
 
-    return media.filter(F.col("media_type") == "audio/wav").mapInPandas(
-        _fp, schema="doc_id long, fingerprint long, peak_abs int"
+    return _fingerprint_pass(
+        media.filter(F.col("media_type") == "audio/wav"), "audio",
+        "doc_id long, fingerprint long, peak_abs int", rows_of,
     )
 
 
@@ -2166,15 +2174,11 @@ def media_audio_neardup(
     + dual clique guards (hot-fingerprint cap + oversized-bucket
     skip) as the image family (section comment above). Library
     surface since r10; probed near output-linear at 10x data
-    (measured in round 10, git history)."""
-    from pyspark.storagelevel import StorageLevel
-
-    wavs = media_real_table(spark, sf_dir).filter(
-        F.col("media_type") == "audio/wav"
-    )
-    fp = audio_fingerprints(wavs).persist(StorageLevel.MEMORY_AND_DISK)
+    (measured in round 10, git history). Tier spec:
+    :data:`AUDIO_CLIP_TIER`."""
     return image_neardup_pairs(
-        fp, max_hamming=max_hamming, fp_cap=fp_cap, bucket_cap=bucket_cap
+        AUDIO_CLIP_TIER.corpus_fps(spark, sf_dir), max_hamming, fp_cap,
+        bucket_cap,
     )
 
 
@@ -2217,34 +2221,14 @@ MEDIA_AUDIO_NEARDUP_ORACLE = _fp_neardup_oracle(_audio_fp_oracle_core())
 
 def media_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup DECISION over perceptual audio near-dups —
-    (doc_id, cluster, cluster_size) for EVERY WAV clip, mirroring
-    :func:`media_image_dedup`'s pair-free construction: connected
-    components over DISTINCT fingerprints (node = min-doc_id rep per
-    fp; edge = two distinct fps sharing a band with hamming <= max —
-    the UNCAPPED candidate condition of :func:`media_audio_neardup`,
-    which depends only on fps, so clusters are identical to CC over
-    the UNGUARDED doc-pair graph; the pair query's hot-fp /
-    oversized-bucket guards are pair-ENUMERATION backstops and are
-    deliberately not applied here, where same-fp cliques already
-    collapse to one node and the edge join is bounded by DISTINCT-fp
-    diversity — r10 advisor note: with guards triggering, the capped
-    pair output is a subset of these clusters' edge set), with doc
-    membership joined back through the fp -> rep map.
-    Same-fingerprint cliques (the volume-variant copies of one clip)
-    collapse to one node — never enumerated as pairs. Library surface
-    in r10, REGISTERED r12 in the reserved window slot (r11 verdict
-    #3)."""
-    from pyspark.storagelevel import StorageLevel
-
-    wavs = media_real_table(spark, sf_dir).filter(
-        F.col("media_type") == "audio/wav"
-    )
-    fp = audio_fingerprints(wavs).persist(StorageLevel.MEMORY_AND_DISK)
-    labeled = fp_clusters(fp)
-    sizes = labeled.groupBy("cluster").agg(F.count("*").alias("cluster_size"))
-    return labeled.join(sizes, "cluster").select(
-        "doc_id", "cluster", "cluster_size"
-    )
+    (doc_id, cluster, cluster_size) for EVERY WAV clip, through the
+    pair-free construction of :func:`media_image_dedup` (whose scale
+    argument carries over verbatim): same-fingerprint cliques, the
+    volume-variant copies of one clip, collapse to one node and are
+    never enumerated as pairs. With the pair query's guards
+    triggering, its capped output is a subset of these clusters' edge
+    set (r10 advisor note). Tier spec: :data:`AUDIO_CLIP_TIER`."""
+    return _dedup(AUDIO_CLIP_TIER.corpus_fps(spark, sf_dir))
 
 
 MEDIA_AUDIO_DEDUP_ORACLE = _fp_dedup_oracle(_audio_fp_oracle_core())
@@ -2455,37 +2439,17 @@ def avi_video_hash(content: bytes) -> int:
 
 
 def video_fingerprints(media: DataFrame) -> DataFrame:
-    """(doc_id, fingerprint) — one Arrow-batched map-only pass over
-    AVI payloads, 8-byte hashes out, no shuffle (the video member of
-    the :func:`image_fingerprints` / :func:`audio_fingerprints`
-    family). Ingest contract: undecodable payloads (NULL, foreign
-    magic, truncated header, compressed frames, too-short streams)
-    SKIP per item and COUNT toward ``media_skip_count("video")`` —
-    the caught set is :class:`UnsupportedMediaError` ALONE, because
-    :func:`_avi_frames_parse` wraps every ``struct.error`` /
-    ``IndexError`` a malformed byte string can produce and
-    :func:`avi_video_hash` bounds-checks before indexing (see its
-    raise contract); anything else propagates and fails the query
-    (the narrowed-except rule, r12 advisor)."""
-    acc = _skip_acc(media.sparkSession.sparkContext, "video")
-
-    def _fp(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "fingerprint": []}
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                if content is None:
-                    acc.add(1)
-                    continue
-                try:
-                    fp = avi_video_hash(bytes(content))
-                except UnsupportedMediaError:
-                    acc.add(1)  # corrupt/truncated/foreign container
-                    continue
-                out["doc_id"].append(doc_id)
-                out["fingerprint"].append(fp)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(_fp, schema="doc_id long, fingerprint long")
+    """(doc_id, fingerprint) — :func:`avi_video_hash` per AVI payload
+    through :func:`_fingerprint_pass` (the video member of the
+    :func:`image_fingerprints` / :func:`audio_fingerprints` family).
+    Undecodable payloads (NULL, foreign magic, truncated header,
+    compressed frames, too-short streams) SKIP per item and COUNT
+    toward ``media_skip_count("video")``; the hash's whole raise
+    contract is :class:`UnsupportedMediaError`."""
+    return _fingerprint_pass(
+        media, "video", "doc_id long, fingerprint long",
+        lambda content: [(avi_video_hash(content),)],
+    )
 
 
 def media_video_neardup(
@@ -2499,14 +2463,10 @@ def media_video_neardup(
     over the real AVI payloads — spatio-temporal fingerprints through
     the SAME banded hamming join + dual clique guards as the
     image/audio families (:func:`image_neardup_pairs`; section
-    comment above). Library surface r13; queues for r15
-    registration."""
-    from pyspark.storagelevel import StorageLevel
-
-    vids = media_avi_table(spark, sf_dir)
-    fp = video_fingerprints(vids).persist(StorageLevel.MEMORY_AND_DISK)
+    comment above). Tier spec: :data:`VIDEO_CLIP_TIER`."""
     return image_neardup_pairs(
-        fp, max_hamming=max_hamming, fp_cap=fp_cap, bucket_cap=bucket_cap
+        VIDEO_CLIP_TIER.corpus_fps(spark, sf_dir), max_hamming, fp_cap,
+        bucket_cap,
     )
 
 
@@ -2517,16 +2477,8 @@ def media_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT fingerprints, same-fp cliques collapse to one node, the
     edge join bounded by fingerprint diversity — see
     :func:`media_image_dedup` for the full scale argument, which
-    carries over verbatim)."""
-    from pyspark.storagelevel import StorageLevel
-
-    vids = media_avi_table(spark, sf_dir)
-    fp = video_fingerprints(vids).persist(StorageLevel.MEMORY_AND_DISK)
-    labeled = fp_clusters(fp)
-    sizes = labeled.groupBy("cluster").agg(F.count("*").alias("cluster_size"))
-    return labeled.join(sizes, "cluster").select(
-        "doc_id", "cluster", "cluster_size"
-    )
+    carries over verbatim). Tier spec: :data:`VIDEO_CLIP_TIER`."""
+    return _dedup(VIDEO_CLIP_TIER.corpus_fps(spark, sf_dir))
 
 
 def _video_fp_oracle_core() -> str:
@@ -2625,55 +2577,40 @@ def frame_gradient_hash(grays: list[int]) -> int:
     return fp
 
 
+def _grays(data: bytes, n: int) -> list[int]:
+    """Integer luminances r+g+b of the first ``n`` RGB pixels of
+    ``data`` — the input of :func:`frame_gradient_hash` in the frame
+    and tile passes."""
+    return [data[3 * k] + data[3 * k + 1] + data[3 * k + 2] for k in range(n)]
+
+
 def video_frame_fingerprints(media: DataFrame) -> DataFrame:
-    """(doc_id, frame_idx, frame_fp) — one Arrow-batched map-only
-    pass decoding each AVI once and hashing every frame
-    independently (:func:`frame_gradient_hash` over the frame's
-    FIRST ``VIDEO_FRAME_FP_GRAYS`` luminances — the signature is
+    """(doc_id, frame_idx, frame_fp) — each AVI decoded once through
+    :func:`_fingerprint_pass` and every frame hashed independently
+    (:func:`frame_gradient_hash` over the frame's FIRST
+    ``VIDEO_FRAME_FP_GRAYS`` luminances — the signature is
     fixed-width 42 bits for ANY decodable geometry; hashing whatever
     pixel count the container declares would overflow the 64-bit
-    column on a well-formed 8x8 AVI, r13 review). Same ingest
-    skip-and-count contract as :func:`video_fingerprints`
-    (UnsupportedMediaError alone — the parse wraps everything else
-    and caps LIST nesting; a frame too small for the signature
-    window skips the payload the same way; skips count toward
-    ``media_skip_count("video")``). Contract evidence (r13 verdict
-    #7): hypothesis totality property
+    column on a well-formed 8x8 AVI, r13 review). Same skip-and-count
+    contract as :func:`video_fingerprints`; a frame too small for the
+    signature window skips the payload the same way. Contract
+    evidence (r13 verdict #7): hypothesis totality property
     tests/test_properties.py::
     test_video_frame_fingerprints_total_over_arbitrary_bytes
-    (rows-or-skip over arbitrary bytes, exact kernel agreement) and
-    the 4-worker determinism check (round 13, git history)."""
-    acc = _skip_acc(media.sparkSession.sparkContext, "video")
+    (rows-or-skip over arbitrary bytes, exact kernel agreement)."""
     need = 3 * VIDEO_FRAME_FP_GRAYS
 
-    def _fp(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "frame_idx": [], "frame_fp": []}
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                if content is None:
-                    acc.add(1)
-                    continue
-                try:
-                    _w, _h, frames = _avi_frames_parse(bytes(content))
-                    if any(len(fr) < need for fr in frames):
-                        raise UnsupportedMediaError(
-                            "frame below the signature window"
-                        )
-                except UnsupportedMediaError:
-                    acc.add(1)
-                    continue
-                for i, fr in enumerate(frames):
-                    grays = [
-                        fr[3 * j] + fr[3 * j + 1] + fr[3 * j + 2]
-                        for j in range(VIDEO_FRAME_FP_GRAYS)
-                    ]
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(i)
-                    out["frame_fp"].append(frame_gradient_hash(grays))
-            yield pd.DataFrame(out)
+    def rows_of(content: bytes) -> list[tuple]:
+        _w, _h, frames = _avi_frames_parse(content)
+        if any(len(fr) < need for fr in frames):
+            raise UnsupportedMediaError("frame below the signature window")
+        return [
+            (i, frame_gradient_hash(_grays(fr, VIDEO_FRAME_FP_GRAYS)))
+            for i, fr in enumerate(frames)
+        ]
 
-    return media.mapInPandas(
-        _fp, schema="doc_id long, frame_idx int, frame_fp long"
+    return _fingerprint_pass(
+        media, "video", "doc_id long, frame_idx int, frame_fp long", rows_of
     )
 
 
@@ -2721,17 +2658,19 @@ def media_video_frame_overlap(
     whole-clip hash cannot see (section comment). ``fp_cap`` is the
     hot-frame guard; ``None`` disables it (kept available by
     parameter, the image_neardup_pairs convention). The join stage is
-    the shared :func:`item_fp_overlap_pairs`."""
-    from pyspark.storagelevel import StorageLevel
+    the shared :func:`item_fp_overlap_pairs`. Tier spec:
+    :data:`VIDEO_FRAME_TIER`."""
+    return _overlap(VIDEO_FRAME_TIER, spark, sf_dir, fp_cap)
 
-    vids = media_avi_table(spark, sf_dir)
-    dfp = (
-        video_frame_fingerprints(vids)
-        .select("doc_id", "frame_fp")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+
+def _overlap(
+    tier: MediaTier, spark: SparkSession, sf_dir: str, fp_cap: int | None
+) -> DataFrame:
+    """A sub-item tier's pairs sharing >= 1 distinct signature — the
+    body of every ``*_overlap`` query."""
+    return item_fp_overlap_pairs(
+        tier.corpus_fps(spark, sf_dir), tier.fp_col, fp_cap
     )
-    return item_fp_overlap_pairs(dfp, "frame_fp", fp_cap)
 
 
 def _video_frame_rows_oracle() -> str:
@@ -2920,46 +2859,25 @@ IMG_TILE_STRIDE_ROWS = 3
 
 
 def audio_window_fingerprints(media: DataFrame) -> DataFrame:
-    """(doc_id, win_idx, win_fp) — one Arrow-batched map-only pass:
-    RIFF walk once per clip, |PCM| values, 42-bit lag-gradient
+    """(doc_id, win_idx, win_fp) — one RIFF walk per clip through
+    :func:`_fingerprint_pass`, |PCM| values, 42-bit lag-gradient
     signature per 16-sample window at stride 8. Undecodable clips
     (non-RIFF, or shorter than one window) skip per item and count
-    toward ``media_skip_count("audio")`` — the audio fingerprint
-    family's contract. Contract evidence (r13 verdict #7):
-    tests/test_properties.py::
-    test_audio_window_fingerprints_total_over_arbitrary_bytes and
-    the shared-join cluster check of round 13 (git history; the
-    snippet tier rides the identical item_fp_overlap_pairs /
-    _sub_item_decontam_flags machinery pinned there)."""
-    acc = _skip_acc(media.sparkSession.sparkContext, "audio")
+    toward ``media_skip_count("audio")``. Contract evidence (r13
+    verdict #7): tests/test_properties.py::
+    test_audio_window_fingerprints_total_over_arbitrary_bytes."""
 
-    def _fp(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "win_idx": [], "win_fp": []}
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                data = (
-                    None if content is None
-                    else _wav_data_section(bytes(content))
-                )
-                if not data or len(data) // 2 < AUDIO_WIN_SAMPLES:
-                    acc.add(1)
-                    continue
-                n = len(data) // 2
-                vs = struct.unpack_from(f"<{n}h", data)
-                av = [abs(v) for v in vs]
-                w = 0
-                while w * AUDIO_WIN_STRIDE + AUDIO_WIN_SAMPLES <= n:
-                    s = w * AUDIO_WIN_STRIDE
-                    out["doc_id"].append(doc_id)
-                    out["win_idx"].append(w)
-                    out["win_fp"].append(
-                        frame_gradient_hash(av[s : s + AUDIO_WIN_SAMPLES])
-                    )
-                    w += 1
-            yield pd.DataFrame(out)
+    def rows_of(content: bytes) -> list[tuple]:
+        av = [abs(v) for v in _wav_samples(content, AUDIO_WIN_SAMPLES)]
+        starts = range(0, len(av) - AUDIO_WIN_SAMPLES + 1, AUDIO_WIN_STRIDE)
+        return [
+            (w, frame_gradient_hash(av[s : s + AUDIO_WIN_SAMPLES]))
+            for w, s in enumerate(starts)
+        ]
 
-    return media.filter(F.col("media_type") == "audio/wav").mapInPandas(
-        _fp, schema="doc_id long, win_idx int, win_fp long"
+    return _fingerprint_pass(
+        media.filter(F.col("media_type") == "audio/wav"), "audio",
+        "doc_id long, win_idx int, win_fp long", rows_of,
     )
 
 
@@ -2970,20 +2888,9 @@ def media_audio_snippet_overlap(
 ) -> DataFrame:
     """(doc_a, doc_b, n_shared_fps) — audio pairs sharing >= 1
     DISTINCT window signature, the snippet-level overlap the
-    whole-clip envelope hash cannot see (section comment). Join stage
-    = the shared :func:`item_fp_overlap_pairs`."""
-    from pyspark.storagelevel import StorageLevel
-
-    wavs = media_real_table(spark, sf_dir).filter(
-        F.col("media_type") == "audio/wav"
-    )
-    dfp = (
-        audio_window_fingerprints(wavs)
-        .select("doc_id", "win_fp")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    return item_fp_overlap_pairs(dfp, "win_fp", fp_cap)
+    whole-clip envelope hash cannot see (section comment). Tier spec:
+    :data:`AUDIO_WINDOW_TIER`."""
+    return _overlap(AUDIO_WINDOW_TIER, spark, sf_dir, fp_cap)
 
 
 def _audio_window_rows_oracle() -> str:
@@ -3050,67 +2957,37 @@ MEDIA_AUDIO_SNIPPET_DECONTAMINATE_ORACLE = _sub_item_decontam_oracle(
 
 
 def image_tile_fingerprints(media: DataFrame) -> DataFrame:
-    """(doc_id, tile_idx, tile_fp) — one Arrow-batched map-only pass:
-    real container decode once per image (:func:`_pixel_grid`),
+    """(doc_id, tile_idx, tile_fp) — real container decode once per
+    image (:func:`_pixel_grid`) through :func:`_fingerprint_pass`,
     42-bit lag-gradient signature per 4-row tile at a 3-row stride
-    over the file-order pixel grid. Same skip-and-count caught set as
-    :func:`image_fingerprints` (the ingest contract), counting toward
+    over the file-order pixel grid. Skips count toward
     ``media_skip_count("image")``; a decodable-but-sub-tile thumbnail
-    counts like any undecodable payload. Contract evidence (r13
-    verdict #7): tests/test_properties.py::
-    test_image_tile_fingerprints_total_over_arbitrary_bytes and the
-    shared-join cluster check of round 13 (git history)."""
-    acc = _skip_acc(media.sparkSession.sparkContext, "image")
+    counts like any undecodable payload (a thumbnail corpus must not
+    read as "clean, zero skips"). Contract evidence (r13 verdict #7):
+    tests/test_properties.py::
+    test_image_tile_fingerprints_total_over_arbitrary_bytes."""
     tile_px = IMG_TILE_ROWS * IMG_W  # 16 — the kernel width
     stride_px = IMG_TILE_STRIDE_ROWS * IMG_W  # 12
 
-    def _fp(batches: Iterable[pd.DataFrame]) -> Iterable[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "tile_idx": [], "tile_fp": []}
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                if content is None:
-                    acc.add(1)
-                    continue
-                try:
-                    w, h, data = _pixel_grid(bytes(content))
-                except (
-                    struct.error,
-                    UnsupportedMediaError,
-                    ValueError,
-                    IndexError,
-                ):
-                    acc.add(1)
-                    continue
-                n_px = w * h
-                if n_px < tile_px:
-                    # decodable but too small for one tile — counts
-                    # like any undecodable payload (the audio/video
-                    # tiers' too-short contract; a thumbnail corpus
-                    # must not read as "clean, zero skips")
-                    acc.add(1)
-                    continue
-                grays = [
-                    data[3 * p] + data[3 * p + 1] + data[3 * p + 2]
-                    for p in range(n_px)
-                ]
-                # tiles are 16-PIXEL windows at a 12-pixel stride over
-                # the file-order stream (== 4-row tiles at 3-row
-                # stride on the 4-wide demo geometry); bounding by
-                # PIXELS keeps the tiling total on foreign widths —
-                # a row-based bound skipped valid windows on an
-                # 8-wide image (r13 review)
-                for t, s in enumerate(
-                    range(0, n_px - tile_px + 1, stride_px)
-                ):
-                    out["doc_id"].append(doc_id)
-                    out["tile_idx"].append(t)
-                    out["tile_fp"].append(
-                        frame_gradient_hash(grays[s : s + tile_px])
-                    )
-            yield pd.DataFrame(out)
+    def rows_of(content: bytes) -> list[tuple]:
+        w, h, data = _pixel_grid(content)
+        n_px = w * h
+        if n_px < tile_px:
+            raise UnsupportedMediaError("image smaller than one tile")
+        grays = _grays(data, n_px)
+        # tiles are 16-PIXEL windows at a 12-pixel stride over the
+        # file-order stream (== 4-row tiles at 3-row stride on the
+        # 4-wide demo geometry); bounding by PIXELS keeps the tiling
+        # total on foreign widths — a row-based bound skipped valid
+        # windows on an 8-wide image (r13 review)
+        starts = range(0, n_px - tile_px + 1, stride_px)
+        return [
+            (t, frame_gradient_hash(grays[s : s + tile_px]))
+            for t, s in enumerate(starts)
+        ]
 
-    return media.mapInPandas(
-        _fp, schema="doc_id long, tile_idx int, tile_fp long"
+    return _fingerprint_pass(
+        media, "image", "doc_id long, tile_idx int, tile_fp long", rows_of
     )
 
 
@@ -3123,20 +3000,8 @@ def media_image_tile_overlap(
     DISTINCT tile signature: the CROP-surviving overlap (section
     comment; a crop moves the whole-image dHash arbitrarily because
     it changes the normalization grid, but aligned tiles still match
-    exactly). Join stage = the shared
-    :func:`item_fp_overlap_pairs`."""
-    from pyspark.storagelevel import StorageLevel
-
-    imgs = media_real_table(spark, sf_dir).filter(
-        F.col("media_type").isin(*IMAGE_MEDIA_TYPES)
-    )
-    dfp = (
-        image_tile_fingerprints(imgs)
-        .select("doc_id", "tile_fp")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    return item_fp_overlap_pairs(dfp, "tile_fp", fp_cap)
+    exactly). Tier spec: :data:`IMAGE_TILE_TIER`."""
+    return _overlap(IMAGE_TILE_TIER, spark, sf_dir, fp_cap)
 
 
 def _image_tile_rows_oracle() -> str:
@@ -3198,31 +3063,35 @@ MEDIA_IMAGE_TILE_DECONTAMINATE_ORACLE = _sub_item_decontam_oracle(
 )
 
 
-# ------------------------------ decontamination tier table
+# ------------------------------ media tier table
 #
-# Each media decontamination tier has the same four queries: flag the
-# training side online, write the eval side's distinct fingerprints
-# to a registry, serve the training side from that registry, and the
-# stored cycle (write -> read back -> flag) as one query. The
-# streaming twins (streaming/curation.py) drain the same tiers. What
-# differs per tier is held once in its DecontamTier record below, and
-# the batch and streaming paths both read it from there. The eval/train
-# split filters the RAW media rows before the mapInPandas fingerprint
-# barrier (the one-decode rule). Clip tiers flag within
-# ``max_hamming`` through the banded :func:`_decontam_flags` (lossless
-# and broadcast, section "image eval decontamination"); sub-item tiers
-# match signatures exactly through :func:`_sub_item_decontam_flags`.
+# Each media tier fingerprints its media rows one way, and every
+# query of the tier is written over that: near-dup pairs and the
+# dedup decision (clip tiers) or shared-signature overlap (sub-item
+# tiers) over the persisted corpus fingerprints, plus four
+# decontamination queries: flag the training side online, write the
+# eval side's distinct fingerprints to a registry, serve the training
+# side from that registry, and the stored cycle (write -> read back ->
+# flag) as one query. The streaming twins (streaming/curation.py)
+# drain the same tiers. What differs per tier is held once in its
+# MediaTier record below, and the batch and streaming paths both read
+# it from there. The eval/train split filters the RAW media rows
+# before the mapInPandas fingerprint barrier (the one-decode rule).
+# Clip tiers flag within ``max_hamming`` through the banded
+# :func:`_decontam_flags` (lossless and broadcast, section "image eval
+# decontamination"); sub-item tiers match signatures exactly through
+# :func:`_sub_item_decontam_flags`.
 # Integer fingerprints survive parquet losslessly, so a stored cycle is
 # bit-identical to its online query and one oracle gates both.
 
 
 @dataclass(frozen=True)
-class DecontamTier:
-    """One media decontamination tier: the spec every batch query and
+class MediaTier:
+    """One media fingerprint tier: the spec every batch query and
     streaming twin of the tier is written over.
 
-    ``name`` is the online query's registered name (the stored cycle
-    registers as ``name + "_stored"``). ``media_fn`` synthesizes media
+    ``name`` is the online decontamination query's registered name
+    (the stored cycle registers as ``name + "_stored"``). ``media_fn`` synthesizes media
     rows from a (doc_id, text) frame and ``media_types`` selects the
     tier's rows from it; ``fingerprint_fn`` maps those rows to
     fingerprints in column ``fp_col``. The eval registry lives under
@@ -3255,6 +3124,18 @@ class DecontamTier:
         pred = F.col("media_type").isin(*self.media_types)
         return self.media_fn(docs).filter(pred if where is None else pred & where)
 
+    def corpus_fps(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        """The fingerprints of every media row of the tier, one row per
+        distinct (doc_id, ``fp_col``) for sub-item tiers, persisted:
+        the near-dup, dedup and overlap consumers each read them more
+        than once (both sides of a self-join plus the hot-set counts),
+        and without it the decode pass runs per consumer."""
+        docs = load_table(spark, sf_dir, "documents")
+        fps = self.fingerprint_fn(self.media(docs))
+        if self.idx_col is not None:
+            fps = fps.select("doc_id", self.fp_col).distinct()
+        return fps.persist(StorageLevel.MEMORY_AND_DISK)
+
     def eval_fps(self, media: DataFrame) -> DataFrame:
         """(eval_fp) — the distinct fingerprints of eval media rows."""
         return (
@@ -3277,29 +3158,29 @@ class DecontamTier:
         )
 
 
-IMAGE_CLIP_TIER = DecontamTier(
+IMAGE_CLIP_TIER = MediaTier(
     "media_decontaminate", media_real_table_from, IMAGE_MEDIA_TYPES,
     image_fingerprints, "fingerprint", "eval_fps", "media_eval_fps",
 )
-AUDIO_CLIP_TIER = DecontamTier(
+AUDIO_CLIP_TIER = MediaTier(
     "media_audio_decontaminate", media_real_table_from, ("audio/wav",),
     audio_fingerprints, "fingerprint", "eval_fps", "media_audio_eval_fps",
 )
-VIDEO_CLIP_TIER = DecontamTier(
+VIDEO_CLIP_TIER = MediaTier(
     "media_video_decontaminate", media_avi_table_from, ("video/avi",),
     video_fingerprints, "fingerprint", "eval_fps", "media_video_eval_fps",
 )
-VIDEO_FRAME_TIER = DecontamTier(
+VIDEO_FRAME_TIER = MediaTier(
     "media_video_frame_decontaminate", media_avi_table_from, ("video/avi",),
     video_frame_fingerprints, "frame_fp", "frame_fps",
     "media_video_frame_fps", "frame_idx", "n_frames_matched",
 )
-AUDIO_WINDOW_TIER = DecontamTier(
+AUDIO_WINDOW_TIER = MediaTier(
     "media_audio_snippet_decontaminate", media_real_table_from,
     ("audio/wav",), audio_window_fingerprints, "win_fp", "snippet_fps",
     "media_audio_snippet_fps", "win_idx", "n_windows_matched",
 )
-IMAGE_TILE_TIER = DecontamTier(
+IMAGE_TILE_TIER = MediaTier(
     "media_image_tile_decontaminate", media_real_table_from,
     IMAGE_MEDIA_TYPES, image_tile_fingerprints, "tile_fp", "tile_fps",
     "media_image_tile_fps", "tile_idx", "n_tiles_matched",
@@ -3319,7 +3200,7 @@ def _is_eval() -> Column:
 
 
 def _online(
-    tier: DecontamTier, spark: SparkSession, sf_dir: str,
+    tier: MediaTier, spark: SparkSession, sf_dir: str,
     max_hamming: int = DECONTAM_HAMMING_MAX,
 ) -> DataFrame:
     media = tier.media(load_table(spark, sf_dir, "documents"))
@@ -3329,7 +3210,7 @@ def _online(
 
 
 def _write_index(
-    tier: DecontamTier, spark: SparkSession, sf_dir: str, index_dir: str
+    tier: MediaTier, spark: SparkSession, sf_dir: str, index_dir: str
 ) -> None:
     media = tier.media(load_table(spark, sf_dir, "documents"), _is_eval())
     tier.eval_fps(media).write.mode("overwrite").parquet(
@@ -3338,7 +3219,7 @@ def _write_index(
 
 
 def _from_index(
-    tier: DecontamTier, spark: SparkSession, sf_dir: str, index_dir: str,
+    tier: MediaTier, spark: SparkSession, sf_dir: str, index_dir: str,
     max_hamming: int = DECONTAM_HAMMING_MAX,
 ) -> DataFrame:
     media = tier.media(load_table(spark, sf_dir, "documents"), ~_is_eval())
@@ -3347,7 +3228,7 @@ def _from_index(
 
 
 def _stored(
-    tier: DecontamTier, spark: SparkSession, sf_dir: str,
+    tier: MediaTier, spark: SparkSession, sf_dir: str,
     max_hamming: int = DECONTAM_HAMMING_MAX,
 ) -> DataFrame:
     d = _artifact_dir(spark, sf_dir, tier.artifact)

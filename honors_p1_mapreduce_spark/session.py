@@ -25,6 +25,17 @@ def default_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
+def default_driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else three quarters of the
+    host's physical memory (the rest is left to the Python workers),
+    never more than 24g."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(host_mb * 3 // 4, 24 << 10)}m"
+
+
 def get_spark(
     app_name: str = "honors-p1-mapreduce-spark",
     cpus: int | None = None,
@@ -63,7 +74,7 @@ def get_spark(
         # raw nanos; sources.tables converts losslessly to timestamps
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", default_driver_mem())
         # Codegen class cache: the default 100 entries thrashes on a
         # many-query session — in a 173-query suite the second
         # evaluation of a codegen-heavy plan (the BPE 200-replace

@@ -98,12 +98,14 @@ def _scan_parallelize(spark: SparkSession, df: DataFrame, path: str) -> DataFram
 def corpus_token(sf_dir: str) -> str:
     """Cheap corpus snapshot token for build-once memo keys: a digest
     of every parquet file's (relative path, size, mtime_ns) under
-    ``sf_dir``. The session memos (_MERGES_CACHE, _CODEBOOK_CACHE,
-    _WORD_IDS_CACHE, _FP_CACHE) are keyed by (application, corpus dir,
-    params); without this token, rewriting the data under the same
-    directory within one application — a test or notebook regenerating
-    a corpus in place — would silently serve stale artifacts (advisor
-    r7). A local-FS walk of ~10 table files costs microseconds per
+    ``sf_dir``. Five of the six session memos (bpe._MERGES_CACHE,
+    bpe._SYMS_CACHE, bpe_encode._WORD_IDS_CACHE, pq._CODEBOOK_CACHE,
+    winnow._FP_CACHE) are keyed by (application, corpus dir, this
+    token, params); lm_quality._READ_FRAMES_CACHE holds per-call
+    frames and is not keyed by corpus. Without this token, rewriting
+    the data under the same directory within one application — a test
+    or notebook regenerating a corpus in place — would silently serve
+    stale artifacts (advisor r7). A local-FS walk of ~10 table files costs microseconds per
     memo access; on object stores the moral equivalent is the
     manifest/snapshot id. Non-existent paths hash to a constant so
     synthetic cache keys in tests stay usable."""
@@ -144,7 +146,7 @@ def _artifact_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
     repeat calls within an application overwrite the same files —
     bounded disk, and no staleness because every call REWRITES the
     artifact before reading it back (unlike the in-session memos,
-    which assume path immutability — see bpe._MERGES_CACHE note).
+    which trust :func:`corpus_token` to notice a rewritten corpus).
     Distinct corpora NEVER share a path, even with equal basenames
     (:func:`corpus_path_token`)."""
     token = corpus_path_token(sf_dir)

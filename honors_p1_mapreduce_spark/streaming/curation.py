@@ -17,7 +17,7 @@ which production refreshes by atomically swapping the parquet dir.
 
 The media decontamination twins all run one drain,
 :func:`_drain_decontam`, over the batch side's tier table
-(``operators.multimodal.DecontamTier``), so a tier's media table,
+(``operators.multimodal.MediaTier``), so a tier's media table,
 fingerprint function and registry layout are read from the record its
 batch queries use.
 """
@@ -34,7 +34,7 @@ from ..operators.multimodal import (
     IMAGE_TILE_TIER,
     VIDEO_CLIP_TIER,
     VIDEO_FRAME_TIER,
-    DecontamTier,
+    MediaTier,
 )
 from ..operators.substring_dedup import SPAN_K
 from ..operators.winnow import (
@@ -459,7 +459,7 @@ def _drain_decontam(
     index_dir: str,
     store_dir: str,
     checkpoint_dir: str,
-    tier: DecontamTier,
+    tier: MediaTier,
     glob: str,
 ) -> None:
     """The ONE decontamination drain every media tier's streaming twin

@@ -17,7 +17,7 @@ SF_DIR_MED = "/root/testdata/sf0.01"
 def spark():
     from honors_p1_mapreduce_spark.session import get_spark
 
-    s = get_spark(app_name="tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    s = get_spark(app_name="tests")
     yield s
     # release the build-once session memos and the enrolled LM
     # read-path frames (lm_quality._READ_FRAMES_CACHE) at session end

@@ -373,7 +373,7 @@ def test_driver_local_word_ids_match_jvm_pipeline(spark, sf_dir):
             spark, docs, n_merges=bx.BPE_MERGES, cache_key=sf_dir
         )
     ]
-    key = bx._memo_key(spark, sf_dir, bx.BPE_MERGES)
+    key = bpe._memo_key(spark, sf_dir, tuple(merges))
     syms_map = bpe._SYMS_CACHE.get(key)
     assert syms_map is not None, "local trainer path did not run"
     local = {

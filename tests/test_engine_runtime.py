@@ -40,6 +40,24 @@ def test_default_cpus_falls_back_to_host_affinity(monkeypatch):
     assert default_cpus() == 3
 
 
+def test_default_driver_mem_fits_the_host(monkeypatch):
+    """With SPARK_GRAFT_DRIVER_MEM unset, the driver heap is three
+    quarters of the host's memory, never more than 24g; the env value
+    wins when set."""
+    import os
+
+    from honors_p1_mapreduce_spark.session import default_driver_mem
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    with open("/proc/meminfo") as f:
+        total_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    mem = default_driver_mem()
+    assert mem.endswith("m")
+    assert int(mem[:-1]) == min(total_kb // 1024 * 3 // 4, 24 * 1024)
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "4g")
+    assert default_driver_mem() == "4g"
+
+
 def test_write_tsv_round_trip_sorted_partitions(spark, tmp_path):
     df = spark.createDataFrame(
         [("b", 2), ("a", 1), ("c", 3), ("a", 9)], ["k", "v"]

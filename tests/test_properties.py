@@ -634,6 +634,7 @@ def test_video_frame_fingerprints_total_over_arbitrary_bytes(
     payloads = list(payloads) + [mm.AVI_PREFIX + payloads[0]]
     need = 3 * mm.VIDEO_FRAME_FP_GRAYS
     rows = [(i, bytearray(p)) for i, p in enumerate(payloads)]
+    rows.append((len(payloads), None))  # a NULL payload: one more skip
     media = spark.createDataFrame(
         rows, "doc_id bigint, content binary"
     ).withColumn("media_type", F.lit("video/avi"))
@@ -662,7 +663,7 @@ def test_video_frame_fingerprints_total_over_arbitrary_bytes(
                 )
                 for fi, fr in enumerate(frames)
             }
-    assert skips == n_skip
+    assert skips == n_skip + 1
     assert got == want
 
 
@@ -682,6 +683,7 @@ def test_audio_window_fingerprints_total_over_arbitrary_bytes(
         mm._wav_header(len(payloads[0])) + payloads[0]
     ]
     rows = [(i, bytearray(p)) for i, p in enumerate(payloads)]
+    rows.append((len(payloads), None))  # a NULL payload: one more skip
     media = spark.createDataFrame(
         rows, "doc_id bigint, content binary"
     ).withColumn("media_type", F.lit("audio/wav"))
@@ -708,7 +710,7 @@ def test_audio_window_fingerprints_total_over_arbitrary_bytes(
             )
             w += 1
         want[i] = wrows
-    assert skips == n_skip
+    assert skips == n_skip + 1
     assert got == want
 
 
@@ -726,6 +728,7 @@ def test_image_tile_fingerprints_total_over_arbitrary_bytes(
     tile_px = mm.IMG_TILE_ROWS * mm.IMG_W
     stride_px = mm.IMG_TILE_STRIDE_ROWS * mm.IMG_W
     rows = [(i, bytearray(p)) for i, p in enumerate(payloads)]
+    rows.append((len(payloads), None))  # a NULL payload: one more skip
     media = spark.createDataFrame(
         rows, "doc_id bigint, content binary"
     ).withColumn("media_type", F.lit("image/bmp"))
@@ -754,7 +757,7 @@ def test_image_tile_fingerprints_total_over_arbitrary_bytes(
             t: mm.frame_gradient_hash(grays[s : s + tile_px])
             for t, s in enumerate(range(0, n_px - tile_px + 1, stride_px))
         }
-    assert skips == n_skip
+    assert skips == n_skip + 1
     assert got == want
 
 
