@@ -133,6 +133,46 @@ def test_mapper_error_skips_line_only(spark):
     assert out == {("good", "2"), ("a", "1"), ("b", "1")}
 
 
+def test_mapper_error_drops_pairs_already_yielded(spark):
+    lines = spark.createDataFrame([("a x",), ("a BOOM",), ("a y",)], ["value"])
+
+    def mapper(line):
+        yield "a", 1  # yielded before the raise: dropped with its line
+        if "BOOM" in line:
+            raise ValueError("bad record")
+
+    out = {(r.key, r.value) for r in map_reduce(lines, mapper, wc_reduce).collect()}
+    assert out == {("a", "2")}
+
+
+def test_key_runs_split_across_batches_and_map_tasks(spark):
+    # two records per Arrow batch on both sides: "common" and "k0".."k2"
+    # arrive as many grouped rows from several map tasks and batches, so
+    # their runs cross reduce batch boundaries
+    rows = [(f"common k{i % 3} w{i}",) for i in range(40)]
+    lines = spark.createDataFrame(rows, ["value"]).repartition(4)
+    assert lines.rdd.getNumPartitions() >= 2
+
+    def reducer(key, values):
+        if key == "k1":
+            raise ValueError("bad key")
+        yield key, len(values)
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "2")
+    try:
+        out = {
+            (r.key, r.value)
+            for r in map_reduce(lines, wc_map, reducer, num_partitions=1).collect()
+        }
+    finally:
+        spark.conf.set(conf, old)
+    expected = {("common", "40"), ("k0", "14"), ("k2", "13")}
+    expected |= {(f"w{i}", "1") for i in range(40)}
+    assert out == expected
+
+
 def test_reducer_error_skips_key_only(spark):
     lines = spark.createDataFrame([("a b",), ("a c",)], ["value"])
 

@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 
 from honors_p1_mapreduce_spark import registry
+from honors_p1_mapreduce_spark.mapreduce import map_reduce
 from honors_p1_mapreduce_spark.operators.relational import (
     nation_revenue,
     pricing_summary,
@@ -53,6 +54,24 @@ def test_wordcount_single_shuffle(spark, sf_dir):
     # partial+final hash agg around exactly one exchange
     assert plan.count("Exchange hashpartitioning") == 1
     assert plan.count("HashAggregate") == 2
+
+
+def test_map_reduce_single_shuffle_arrow_only(spark):
+    # map batches grouped in Arrow -> one hash exchange -> sorted
+    # partitions reduced in Arrow; no per-key pandas groups
+    df = spark.createDataFrame([("a b",), ("b c",)], ["value"])
+    plan = _plan(
+        map_reduce(
+            df,
+            lambda line: ((w, 1) for w in line.split()),
+            lambda key, values: [(key, len(values))],
+            num_partitions=3,
+        )
+    )
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert plan.count("MapInArrow") == 2
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "MapInPandas" not in plan
 
 
 def test_pricing_summary_pushdown_and_pruning(spark, sf_dir):
