@@ -151,12 +151,14 @@ def run_job(
     """The reference client's submit surface as one call
     (mr/client/client.py:52-72): text file in, per-job TSV dir out
     (honoring output_path as declared — SURVEY.md §1.3), sorted keys
-    within each of ``num_reduces`` output partitions. Returns the
-    result frame (also usable without writing).
+    within each of ``num_reduces`` output partitions. Each reducer's
+    output is written to the partition of its input key, as in the
+    reference, so the job shuffles once. Returns the result frame
+    (also usable without writing).
     """
     from .sources.text import read_text_lines, write_tsv
 
     lines = read_text_lines(spark, input_path, min_partitions=num_maps)
     result = map_reduce(lines, mapper, reducer, num_partitions=num_reduces)
-    write_tsv(result, output_path, num_partitions=num_reduces)
+    write_tsv(result, output_path)
     return result

@@ -59,8 +59,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..functions.text import tokens_col, tokens_sql
-from ..sources.tables import corpus_token, load_table
+from ..sources.tables import load_table
 
 BPE_MERGES = 10  # merge rounds to learn
 
@@ -80,27 +81,10 @@ def _syms(wrapped) -> F.Column:
     return F.split(F.btrim(wrapped, F.lit(_SEP)), r"\|\|")
 
 
-def _memo_key(spark: SparkSession, cache_key: str, params) -> tuple:
-    """The (application, corpus dir, corpus snapshot, params) key of
-    every BPE memo: ``params`` is ``n_merges`` for the merge tables
-    and bpe_encode._WORD_IDS_CACHE, and the rank-ordered (left, right)
-    merge pairs for the word->syms memo."""
-    return (
-        spark.sparkContext.applicationId,
-        cache_key,
-        corpus_token(cache_key),
-        params,
-    )
-
-
-# Learned merge tables are build-once tokenizer artifacts (same
-# argument as pq._CODEBOOK_CACHE): train once per (application,
-# corpus, corpus snapshot token, n_merges), serve every downstream
-# encode/pack query from the
-# memoized merge list. The cached value is a tiny driver-side Python
-# list, training is deterministic, so a hit reproduces bit-identical
-# outputs and every oracle is unmoved.
-_MERGES_CACHE: dict[tuple, list] = {}
+# Learned merge tables are build-once tokenizer artifacts (policy in
+# memo.py): train once per n_merges, serve every downstream
+# encode/pack query from the memoized tiny driver-side merge list.
+_MERGES_CACHE: dict[tuple, list] = memo.store()
 
 # Companion memo (r18): word -> final symbol list, the LOCAL trainer's
 # end state (every accepted merge applied in rank order to every vocab
@@ -114,9 +98,8 @@ _MERGES_CACHE: dict[tuple, list] = {}
 # [a-z0-9_]+ can never produce one). Keyed by the tuple of (left,
 # right) merge pairs whose end state it holds, so a consumer holding a
 # merge list — trained or read back from a stored tokenizer — finds it
-# in one lookup; same reset discipline as _MERGES_CACHE
-# (registry.reset_memos clears it).
-_SYMS_CACHE: dict[tuple, dict[str, list[str]]] = {}
+# in one lookup.
+_SYMS_CACHE: dict[tuple, dict[str, list[str]]] = memo.store()
 
 
 def bpe_train_merges(
@@ -319,15 +302,30 @@ def bpe_train_merges_list(
     into the build-once merge-table memo above; forced-strategy calls
     (probes, differentials) leave it unset and always retrain.
     """
-    key = None
-    if cache_key is not None and incremental is None:
-        key = _memo_key(spark, cache_key, n_merges)
-        hit = _MERGES_CACHE.get(key)
-        if hit is not None:
-            # shallow copy of tuples (advisor r17): a caller mutating
-            # the returned list (sort, append) must not corrupt the
-            # memo for every later consumer in the session
-            return list(hit)
+    if cache_key is None or incremental is not None:
+        return _train_merges(spark, docs, n_merges, incremental, None)
+    # shallow copy of tuples (advisor r17): a caller mutating the
+    # returned list (sort, append) must not corrupt the memo for every
+    # later consumer in the session
+    return list(
+        memo.get_or_build(
+            _MERGES_CACHE,
+            memo.key(spark, cache_key, n_merges),
+            lambda: _train_merges(spark, docs, n_merges, None, cache_key),
+        )
+    )
+
+
+def _train_merges(
+    spark: SparkSession,
+    docs: DataFrame,
+    n_merges: int,
+    incremental: bool | None,
+    cache_key: str | None,
+) -> list[tuple[int, str, str, int]]:
+    """The training loop of :func:`bpe_train_merges_list`. With
+    ``cache_key`` set, the driver-local strategy also fills the
+    word->syms memo."""
     vocab = (
         docs.select(F.explode(tokens_col("text")).alias("word"))
         .groupBy("word")
@@ -344,15 +342,13 @@ def bpe_train_merges_list(
                 n_merges,
                 return_words=True,
             )
-            if key is not None:
-                _MERGES_CACHE[key] = list(local)
-                orig = [r["word"] for r in collected]
-                if all(_SEP not in w for w in orig):
-                    pairs = tuple((lf, rt) for _rk, lf, rt, _c in local)
-                    _SYMS_CACHE[_memo_key(spark, cache_key, pairs)] = {
-                        w: fw.strip(_SEP).split(_SEP + _SEP)
-                        for w, fw in zip(orig, final_words)
-                    }
+            orig = [r["word"] for r in collected]
+            if cache_key is not None and all(_SEP not in w for w in orig):
+                pairs = tuple((lf, rt) for _rk, lf, rt, _c in local)
+                _SYMS_CACHE[memo.key(spark, cache_key, pairs)] = {
+                    w: fw.strip(_SEP).split(_SEP + _SEP)
+                    for w, fw in zip(orig, final_words)
+                }
             return local
         incremental = True
     vocab = vocab.select("w", "cnt")
@@ -402,8 +398,6 @@ def bpe_train_merges_list(
             .coalesce(n_parts)
             .localCheckpoint()
         )
-    if key is not None:
-        _MERGES_CACHE[key] = list(merges)
     return merges
 
 

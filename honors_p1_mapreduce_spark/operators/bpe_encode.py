@@ -34,13 +34,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..functions.text import tokens_col, tokens_sql
 from ..sources.sinks import write_parquet_parallel
 from ..sources.tables import _artifact_dir, load_table
 from .bpe import (
     _SEP,
     _SYMS_CACHE,
-    _memo_key,
     _syms,
     _wrap_chars,
     BPE_MERGES,
@@ -120,7 +120,7 @@ def bpe_encode_stats_from(
     # tokenizer emits [a-z0-9_]+ only (and the memo is only populated
     # for separator-free vocabularies).
     syms_map = (
-        _SYMS_CACHE.get(_memo_key(spark, cache_key, tuple(merges)))
+        _SYMS_CACHE.get(memo.key(spark, cache_key, tuple(merges)))
         if cache_key is not None
         else None
     )
@@ -293,10 +293,9 @@ def _digest_select(flat: DataFrame) -> DataFrame:
     )
 
 
-# word -> id-array maps are vocab-sized build-once artifacts too:
-# memoized per (application, corpus, n_merges), localCheckpoint'd so
-# they survive clearCache (same policy as pq._CODEBOOK_CACHE).
-_WORD_IDS_CACHE: dict[tuple, DataFrame] = {}
+# word -> id-array maps are vocab-sized build-once artifacts too,
+# memoized per n_merges (policy in memo.py).
+_WORD_IDS_CACHE: dict[tuple, DataFrame] = memo.store()
 
 
 def _doc_token_ids(
@@ -307,14 +306,22 @@ def _doc_token_ids(
 ) -> DataFrame:
     """(doc_id, fl): each document's full token-id array — the shared
     body of :func:`bpe_encode_ids` and :func:`pack_token_ids`."""
-    from pyspark.sql import Window
+    word_ids = (
+        _word_ids(docs, spark, n_merges, None)
+        if cache_key is None
+        else memo.get_or_build(
+            _WORD_IDS_CACHE,
+            memo.key(spark, cache_key, n_merges),
+            lambda: _word_ids(docs, spark, n_merges, cache_key),
+        )
+    )
+    return _ids_stream_join(docs, word_ids)
 
-    wkey = None
-    if cache_key is not None:
-        wkey = _memo_key(spark, cache_key, n_merges)
-        cached = _WORD_IDS_CACHE.get(wkey)
-        if cached is not None:
-            return _ids_stream_join(docs, cached)
+
+def _word_ids(
+    docs: DataFrame, spark: SparkSession, n_merges: int, cache_key: str | None
+) -> DataFrame:
+    """(word, ids): the encoded vocabulary of ``docs``."""
     merges = [
         (left, right)
         for _rank, left, right, _cnt in bpe_train_merges_list(
@@ -330,20 +337,15 @@ def _doc_token_ids(
     # local trainer didn't cover (vocab above the cap, or a word
     # containing the separator) stay on the JVM pipeline below.
     syms_map = (
-        _SYMS_CACHE.get(_memo_key(spark, cache_key, tuple(merges)))
+        _SYMS_CACHE.get(memo.key(spark, cache_key, tuple(merges)))
         if cache_key is not None
         else None
     )
     if syms_map is not None:
         rows = _word_ids_rows(syms_map, _sym_ids_fold(syms_map, merges))
-        word_ids = spark.createDataFrame(rows, "word string, ids array<bigint>")
-    else:
-        word_syms = _encode_word_syms(docs, merges)
-        sym_ids = _sym_id_table(word_syms, merges, spark)
-        word_ids = _word_ids_table(word_syms, sym_ids)
-    if wkey is not None:
-        _WORD_IDS_CACHE[wkey] = word_ids
-    return _ids_stream_join(docs, word_ids)
+        return spark.createDataFrame(rows, "word string, ids array<bigint>")
+    word_syms = _encode_word_syms(docs, merges)
+    return _word_ids_table(word_syms, _sym_id_table(word_syms, merges, spark))
 
 
 def _encode_word_syms(docs: DataFrame, merges: list) -> DataFrame:
@@ -672,7 +674,7 @@ def bpe_write_tokenizer(
     # whole table assembles on the driver (the exact rows
     # _sym_id_table produces: it already builds from a collected
     # alphabet + the same fold).
-    syms_map = _SYMS_CACHE.get(_memo_key(spark, sf_dir, tuple(merges)))
+    syms_map = _SYMS_CACHE.get(memo.key(spark, sf_dir, tuple(merges)))
     if syms_map is not None:
         sym_ids = spark.createDataFrame(
             sorted(_sym_ids_fold(syms_map, merges).items()),
@@ -722,7 +724,7 @@ def bpe_encode_ids_with(
     # driver from the STORED vocabulary (collected — it is vocab-sized
     # and broadcast downstream either way), UNK semantics included.
     # Any other (corpus, tokenizer) pairing stays on the JVM path.
-    syms_map = _SYMS_CACHE.get(_memo_key(spark, sf_dir, tuple(merges)))
+    syms_map = _SYMS_CACHE.get(memo.key(spark, sf_dir, tuple(merges)))
     if syms_map is not None:
         stored_ids = {
             r["sym"]: r["sym_id"] for r in sym_ids.collect()

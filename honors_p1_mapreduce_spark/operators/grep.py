@@ -20,14 +20,12 @@ parameterization by construction.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
 
-DEFAULT_PATTERN = os.environ.get("GREP_PATTERN", "stream.*join")
+DEFAULT_PATTERN = "stream.*join"
 
 
 def _ci(pattern: str) -> str:

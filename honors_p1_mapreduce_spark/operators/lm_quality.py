@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..functions.text import bigrams_from_tokens, tokens_col, tokens_sql
 from ..sources.sinks import write_parquet_parallel
 from ..sources.tables import load_table
@@ -55,14 +56,15 @@ PPM = 1_000_000  # probability fixed-point scale (parts per million)
 # unpersist — the writer/retract paths materialize internally and were
 # fixed in r10/r11, but the r11 advisor flagged that the read path
 # still leaked one cached frame per invocation until a session-level
-# clearCache. Each read-path call enrolls its frames here and
-# ``registry.reset_memos()`` unpersists and clears them, exactly like
-# the BPE/PQ/winnow memo caches. The CLI invokes it after
-# materializing each query, perfbench at the start of each pass, and
-# the pytest session fixture at teardown (tests/conftest.py). (The alternative — eagerly localCheckpoint-ing the result —
-# would store a corpus-doc-count-sized frame and break the pinned
-# lazy single-scan plan shape, tests/test_plan_shapes.py.)
-_READ_FRAMES_CACHE: dict[int, DataFrame] = {}
+# clearCache. Each read-path call enrolls its frames in this memo
+# store, and ``registry.reset_memos()`` unpersists and clears them with
+# the other memos (memo.py). The CLI invokes it after materializing
+# each query, perfbench at the start of each pass, and the pytest
+# session fixture at teardown (tests/conftest.py). (The alternative —
+# eagerly localCheckpoint-ing the result — would store a
+# corpus-doc-count-sized frame and break the pinned lazy single-scan
+# plan shape, tests/test_plan_shapes.py.)
+_READ_FRAMES_CACHE: dict[int, DataFrame] = memo.store()
 
 
 def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:

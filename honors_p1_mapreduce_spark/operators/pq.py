@@ -47,8 +47,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import memo
 from ..sources.sinks import write_parquet_parallel
-from ..sources.tables import corpus_token, load_table
+from ..sources.tables import load_table
 from .similarity import EMB_DIM, IVF_STRIDE_SALT, N_QUERIES, TOP_K
 
 PQ_M = 8  # subspaces
@@ -289,16 +290,9 @@ def _assign_jvm(
 
 # Trained codebooks are build-once index artifacts: a production PQ
 # deployment trains on the corpus (or a sample) once and serves every
-# query against the same codebook. The memo mirrors that — keyed by
-# (Spark application, corpus dir, corpus snapshot token, cells,
-# iters; the token folds parquet sizes+mtimes so in-place corpus
-# rewrites can't serve stale codebooks — advisor r7), holding the tiny
-# (M * CELLS rows) localCheckpoint'd centroid frame, which survives
-# spark.catalog.clearCache() because checkpoints are RDD persists,
-# not SQL cache. Training is deterministic, so a memo hit returns
-# bit-identical codebooks and every oracle is unmoved; a new session
-# (new applicationId) retrains from scratch.
-_CODEBOOK_CACHE: dict[tuple, DataFrame] = {}
+# query against the same codebook. The memo (policy in memo.py) holds
+# the tiny (M * CELLS rows) centroid frame per (cells, iters).
+_CODEBOOK_CACHE: dict[tuple, DataFrame] = memo.store()
 
 
 def _train_codebooks(
@@ -312,17 +306,16 @@ def _train_codebooks(
     subspaces train in the SAME jobs — the subspace id is just another
     group key, so M never multiplies the stage count. ``cache_key``
     (the corpus dir) opts into the build-once memo above."""
-    if cache_key is not None:
-        key = (
-            emb.sparkSession.sparkContext.applicationId,
-            cache_key,
-            corpus_token(cache_key),
-            n_cells,
-            n_iter,
-        )
-        hit = _CODEBOOK_CACHE.get(key)
-        if hit is not None:
-            return hit
+    if cache_key is None:
+        return _lloyd_codebooks(emb, n_cells, n_iter)
+    return memo.get_or_build(
+        _CODEBOOK_CACHE,
+        memo.key(emb.sparkSession, cache_key, n_cells, n_iter),
+        lambda: _lloyd_codebooks(emb, n_cells, n_iter),
+    )
+
+
+def _lloyd_codebooks(emb: DataFrame, n_cells: int, n_iter: int) -> DataFrame:
     n = emb.count()  # parquet metadata-only
     stride = max(n // n_cells, 1)
     seed_vecs = (
@@ -378,8 +371,6 @@ def _train_codebooks(
         cents = spark.createDataFrame(
             [(r["s"], r["cell"], r["c_v"]) for r in rows], cents_schema
         )
-    if cache_key is not None:
-        _CODEBOOK_CACHE[key] = cents
     return cents
 
 

@@ -44,7 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.tables import corpus_token, load_table
+from .. import memo
+from ..sources.tables import load_table
 
 K = 8  # k-gram length (chars of normalized text)
 W = 4  # winnowing window (consecutive grams)
@@ -99,25 +100,18 @@ def winnow_fingerprints_from(docs: DataFrame) -> DataFrame:
 
 
 # Extracted fingerprint frames are this family's materialized index:
-# a deployment extracts once per corpus snapshot and every consumer
-# (near-dup join, decontamination, the cleaning funnel) reads the
-# stored table. The session memo mirrors that — keyed by (Spark
-# application, corpus dir, corpus snapshot token, extraction
-# flavor), holding the
-# localCheckpoint'd frame (survives clearCache; extraction is
-# deterministic, so a hit is bit-identical and oracles are unmoved).
-# ~1.5M rows / ~50 MB at sf0.1 — corpus-proportional, the same
-# footprint the materialized index table costs a real deployment.
-_FP_CACHE: dict[tuple, DataFrame] = {}
+# every consumer (near-dup join, decontamination, the cleaning funnel)
+# reads the localCheckpoint'd frame memoized per extraction flavor
+# (policy in memo.py). ~1.5M rows / ~50 MB at sf0.1 — corpus-
+# proportional, the same footprint the materialized index table costs
+# a real deployment.
+_FP_CACHE: dict[tuple, DataFrame] = memo.store()
 
 
 def _fp_memo(spark: SparkSession, sf_dir: str, flavor: str, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, corpus_token(sf_dir), flavor)
-    hit = _FP_CACHE.get(key)
-    if hit is None:
-        hit = build().localCheckpoint()
-        _FP_CACHE[key] = hit
-    return hit
+    return memo.get_or_build(
+        _FP_CACHE, memo.key(spark, sf_dir, flavor), lambda: build().localCheckpoint()
+    )
 
 
 def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -362,7 +362,7 @@ def test_driver_local_word_ids_match_jvm_pipeline(spark, sf_dir):
     JVM pipeline (_encode_word_syms -> _sym_id_table ->
     _word_ids_table) word for word and id for id — the equality the
     bpe_encode_ids/pack/stored digests rest on."""
-    from honors_p1_mapreduce_spark import registry
+    from honors_p1_mapreduce_spark import memo, registry
     from honors_p1_mapreduce_spark.operators import bpe, bpe_encode as bx
 
     registry.reset_memos()
@@ -373,7 +373,7 @@ def test_driver_local_word_ids_match_jvm_pipeline(spark, sf_dir):
             spark, docs, n_merges=bx.BPE_MERGES, cache_key=sf_dir
         )
     ]
-    key = bpe._memo_key(spark, sf_dir, tuple(merges))
+    key = memo.key(spark, sf_dir, tuple(merges))
     syms_map = bpe._SYMS_CACHE.get(key)
     assert syms_map is not None, "local trainer path did not run"
     local = {

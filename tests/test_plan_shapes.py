@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 
 from honors_p1_mapreduce_spark import registry
-from honors_p1_mapreduce_spark.mapreduce import map_reduce
+from honors_p1_mapreduce_spark.mapreduce import map_reduce, run_job
 from honors_p1_mapreduce_spark.operators.relational import (
     nation_revenue,
     pricing_summary,
@@ -72,6 +72,33 @@ def test_map_reduce_single_shuffle_arrow_only(spark):
     assert plan.count("MapInArrow") == 2
     assert "FlatMapGroupsInPandas" not in plan
     assert "MapInPandas" not in plan
+
+
+def test_run_job_writes_the_reduce_partitions_as_they_are(
+    spark, tmp_path, monkeypatch
+):
+    # with num_reduces the sink keeps map_reduce's key partitioning:
+    # the written plan has the one job shuffle, not a second for the sink
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    written, csv = [], DataFrameWriter.csv
+
+    def record(self, path, *args, **kwargs):
+        written.append(_plan(self._df))
+        return csv(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "csv", record)
+    src = tmp_path / "in.txt"
+    src.write_text("a b\nb c\n")
+    run_job(
+        spark,
+        str(src),
+        lambda line: ((w, 1) for w in line.split()),
+        lambda key, values: [(key, len(values))],
+        str(tmp_path / "out"),
+        num_reduces=3,
+    )
+    assert [p.count("Exchange hashpartitioning") for p in written] == [1]
 
 
 def test_pricing_summary_pushdown_and_pruning(spark, sf_dir):
