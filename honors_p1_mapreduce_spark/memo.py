@@ -1,15 +1,16 @@
 """Build-once session memos: one key, one get-or-build, one reset.
 
 A memo holds an artifact that is deterministic given its corpus and
-parameters (a BPE merge table, a word-id map, a PQ codebook, a winnow
-fingerprint frame), the way a deployment builds an index once per
-corpus snapshot and serves every later query from it. A hit is
+parameters (a table's parquet schema, a BPE merge table, a word-id
+map, a PQ codebook, a winnow fingerprint frame), the way a deployment
+builds an index once per corpus snapshot and serves every later query
+from it. A hit is
 bit-identical to a rebuild, so every oracle is unmoved.
 
 - :func:`store` makes a memo dict and registers it, so :func:`reset`
   cannot leave one out.
 - :func:`key` is the one memo key: (Spark application, corpus dir,
-  corpus snapshot token, params). A new session rebuilds, and a corpus
+  :func:`corpus_token`, params). A new session rebuilds, and a corpus
   rewritten in place under the same dir is not served stale.
 - :func:`get_or_build` looks a key up and builds on a miss.
 - :func:`reset` (``registry.reset_memos``) releases every store.
@@ -27,8 +28,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .sources.tables import corpus_token
-
 _STORES: list[dict] = []
 
 
@@ -37,6 +36,33 @@ def store() -> dict:
     memo: dict = {}
     _STORES.append(memo)
     return memo
+
+
+def corpus_token(sf_dir: str) -> str:
+    """Cheap corpus snapshot token for build-once memo keys: a digest
+    of every parquet file's (relative path, size, mtime_ns) under
+    ``sf_dir``, part of every memo key (:func:`key`). Without this
+    token, rewriting the data under the same directory within one
+    application — a test or notebook regenerating a corpus in place —
+    would silently serve stale artifacts. A local-FS walk of ~10 table
+    files costs microseconds per memo access; on object stores the
+    moral equivalent is the manifest/snapshot id. Non-existent paths
+    hash to a constant so synthetic cache keys in tests stay usable."""
+    import hashlib
+    import os
+
+    parts: list[str] = []
+    try:
+        for root, dirs, files in sorted(os.walk(sf_dir)):
+            dirs.sort()
+            for f in sorted(files):
+                if f.endswith(".parquet"):
+                    st = os.stat(os.path.join(root, f))
+                    rel = os.path.relpath(os.path.join(root, f), sf_dir)
+                    parts.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
+    except OSError:
+        return "no-such-corpus"
+    return hashlib.md5("|".join(parts).encode()).hexdigest()
 
 
 def key(spark: SparkSession, sf_dir: str, *params: Hashable) -> tuple:

@@ -411,19 +411,16 @@ def dedup_minhash_pairs(
     Bands of 4 rows hashed to a bucket key; docs sharing any
     (band, bucket) become candidates via equi-join on the bucket —
     the 100 TB-safe alternative to any pairwise scan. The signature
-    frame is persisted (MEMORY_AND_DISK) because it is read three
-    times: both sides of the bucket self-join and the signature
-    attach; without it Spark recomputes the shingle scan per use.
-    The cache entry is left to LRU eviction (callers consume the
-    returned lazy frame, so eager unpersist here would defeat it);
-    long-lived sessions issuing many calls can spark.catalog.clearCache().
-    Output is (doc_a, doc_b, est_jaccard) for candidates with
-    estimate >= threshold; deterministic given the xxhash64 family.
+    frame feeds both sides of the bucket self-join and the two
+    signature join-backs, and is not persisted: under AQE all four
+    read its one min-agg exchange (three as ``ReusedExchange``), while
+    a cached relation added a scan stage per consumer and left an
+    entry to evict. Output is (doc_a, doc_b, est_jaccard) for
+    candidates with estimate >= threshold; deterministic given the
+    xxhash64 family.
     """
-    from pyspark.storagelevel import StorageLevel
-
     rows_per_band = N_HASHES // N_BANDS
-    sigs = minhash_signatures(spark, sf_dir, n).persist(StorageLevel.MEMORY_AND_DISK)
+    sigs = minhash_signatures(spark, sf_dir, n)
     banded = sigs.select(
         "doc_id",
         F.explode(
@@ -684,10 +681,10 @@ def dedup_minhash_portable(
     asymptotics; the bucket key is ~4x wider on the wire, which is
     why the xxhash64 variant stays the default at scale. This variant
     exists so the driver's hash_match gate covers the full LSH
-    pipeline, not just a rows-only determinism check.
+    pipeline, not just a rows-only determinism check. As there, the
+    signature frame is not persisted: the band self-join and both
+    join-backs read its one exchange.
     """
-    from pyspark.storagelevel import StorageLevel
-
     rows_per_band = N_HASHES // N_BANDS
     # wide_scan: the two per-shingle md5 chains + 32 arithmetic
     # columns are heavy per-row work directly on the scan — r17
@@ -710,10 +707,8 @@ def dedup_minhash_portable(
             for i in range(N_HASHES)
         ],
     )
-    sigs = (
-        hashed.groupBy("doc_id")
-        .agg(*[F.min(f"h{i}").alias(f"h{i}") for i in range(N_HASHES)])
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    sigs = hashed.groupBy("doc_id").agg(
+        *[F.min(f"h{i}").alias(f"h{i}") for i in range(N_HASHES)]
     )
     banded = sigs.select(
         "doc_id",

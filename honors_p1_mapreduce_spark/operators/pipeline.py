@@ -16,15 +16,15 @@ Scale design: ALL per-document features (language hits, quality
 ratios, BPE token count, content hash) are computed in ONE projection
 over ONE pruned scan — not by joining the individual operators'
 outputs, which would cost four scans and three shuffle joins at
-100 TB. The feature frame is persisted and each funnel stage is a
-filter + 1-row aggregate on top; the only shuffles are the exact-dup
-min-per-hash aggregate and the near-dup pair join (df-capped, see
-winnow.py).
+100 TB. Each funnel stage is a per-document flag on that frame, and
+one aggregate counts every stage at once; the only shuffles are the
+exact-dup min-per-hash window, the join to the near-dup pair list
+(df-capped, see winnow.py) and the 1-row aggregate.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
@@ -39,7 +39,9 @@ QUALITY_MIN = 0.45
 def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass per-document features: pred_lang, quality, bpe_tokens,
     content hash (expressions mirror lang_id / quality_score /
-    token_counts / dedup_exact)."""
+    token_counts / dedup_exact), and the funnel's first two stage
+    flags: ``in1`` (language kept) and ``in2`` (``in1`` and quality
+    at least the threshold)."""
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
         "doc_id",
@@ -75,6 +77,10 @@ def _features(spark: SparkSession, sf_dir: str) -> DataFrame:
         quality.alias("quality"),
         bpe.alias("bpe_tokens"),
         F.md5("text").alias("content_hash"),
+    ).select(
+        "*",
+        (F.col("pred_lang") == KEEP_LANG).alias("in1"),
+        ((F.col("pred_lang") == KEEP_LANG) & (F.col("quality") >= QUALITY_MIN)).alias("in2"),
     )
 
 
@@ -86,30 +92,55 @@ def corpus_clean_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     4_neardup (drop any doc with a winnowing near-dup partner of
     smaller doc_id — the corpus-level pair list is the arbiter, so
     the decision is independent of upstream filter order).
+
+    Each stage is a per-document flag: ``in1`` and ``in2`` come from
+    :func:`_features`, ``in3`` keeps an ``in2`` doc that is the min
+    ``in2`` doc_id of its content hash (a window, not a join), and
+    ``in4`` keeps an ``in3`` doc with no match in a left join to the
+    distinct ``doc_b`` of ``winnow_neardup``. One aggregate then counts
+    every stage and ``inline`` emits the five rows. A stage no document
+    reaches has ``n_docs`` 0 and a NULL ``n_bpe_tokens``, as SQL's
+    ``sum`` over no rows.
     """
-    feats = _features(spark, sf_dir).persist()
-    s1 = feats.filter(F.col("pred_lang") == KEEP_LANG)
-    s2 = s1.filter(F.col("quality") >= QUALITY_MIN)
-    keep = s2.groupBy("content_hash").agg(F.min("doc_id").alias("doc_id"))
-    s3 = s2.join(keep.select("doc_id"), "doc_id")
-    dropped = winnow_neardup(spark, sf_dir).select(
-        F.col("doc_b").alias("doc_id")
-    ).distinct()
-    s4 = s3.join(dropped, "doc_id", "left_anti")
-
-    def stage(df: DataFrame, name: str) -> DataFrame:
-        return df.agg(
-            F.lit(name).alias("stage"),
-            F.count("*").alias("n_docs"),
-            F.sum("bpe_tokens").alias("n_bpe_tokens"),
+    stages = ("0_all", "1_lang", "2_quality", "3_exact_dedup", "4_neardup")
+    feats = _features(spark, sf_dir)
+    first = F.min(F.when(F.col("in2"), F.col("doc_id"))).over(
+        Window.partitionBy("content_hash")
+    )
+    dropped = (
+        winnow_neardup(spark, sf_dir)
+        .select(F.col("doc_b").alias("doc_id"), F.lit(True).alias("near"))
+        .distinct()
+    )
+    flags = (
+        feats.withColumn("in0", F.lit(True))
+        .withColumn("in3", F.col("in2") & (F.col("doc_id") == first))
+        .join(dropped, "doc_id", "left")
+        .withColumn("in4", F.col("in3") & F.col("near").isNull())
+    )
+    counts = flags.agg(
+        *[
+            agg
+            for k in range(len(stages))
+            for agg in (
+                F.count_if(f"in{k}").alias(f"n{k}"),
+                F.sum(F.when(F.col(f"in{k}"), F.col("bpe_tokens"))).alias(f"t{k}"),
+            )
+        ]
+    )
+    return counts.select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(name).alias("stage"),
+                        F.col(f"n{k}").alias("n_docs"),
+                        F.col(f"t{k}").alias("n_bpe_tokens"),
+                    )
+                    for k, name in enumerate(stages)
+                ]
+            )
         )
-
-    return (
-        stage(feats, "0_all")
-        .unionByName(stage(s1, "1_lang"))
-        .unionByName(stage(s2, "2_quality"))
-        .unionByName(stage(s3, "3_exact_dedup"))
-        .unionByName(stage(s4, "4_neardup"))
     )
 
 
@@ -252,8 +283,6 @@ def mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (source, n_docs, src_tokens, natural_share, target_share,
     weight).
     """
-    from pyspark.sql import Window
-
     docs = load_table(spark, sf_dir, "documents")
     ws = F.when(F.length(F.trim("text")) == 0, F.lit(0)).otherwise(
         F.size(F.split(F.trim("text"), r"\s+"))

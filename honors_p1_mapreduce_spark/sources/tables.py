@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import memo
+
 TABLES: tuple[str, ...] = (
     "region",
     "nation",
@@ -28,6 +30,10 @@ TABLES: tuple[str, ...] = (
 
 # Small dimension tables a planner should broadcast in joins at any scale.
 BROADCAST_TABLES: frozenset[str] = frozenset({"region", "nation", "supplier", "part"})
+
+# (application, corpus dir, corpus token, table) -> the schema Spark
+# infers for that table's parquet
+_SCHEMA_CACHE: dict[tuple, T.StructType] = memo.store()
 
 
 def _size_bytes(conf_value: str) -> int:
@@ -95,36 +101,9 @@ def _scan_parallelize(spark: SparkSession, df: DataFrame, path: str) -> DataFram
     return df.repartition(par)
 
 
-def corpus_token(sf_dir: str) -> str:
-    """Cheap corpus snapshot token for build-once memo keys: a digest
-    of every parquet file's (relative path, size, mtime_ns) under
-    ``sf_dir``, part of every memo key (:func:`memo.key`). Without
-    this token, rewriting the data under the same directory within one
-    application — a test or notebook regenerating a corpus in place —
-    would silently serve stale artifacts (advisor r7). A local-FS walk
-    of ~10 table files costs microseconds per memo access; on object stores the moral equivalent is the
-    manifest/snapshot id. Non-existent paths hash to a constant so
-    synthetic cache keys in tests stay usable."""
-    import hashlib
-    import os
-
-    parts: list[str] = []
-    try:
-        for root, dirs, files in sorted(os.walk(sf_dir)):
-            dirs.sort()
-            for f in sorted(files):
-                if f.endswith(".parquet"):
-                    st = os.stat(os.path.join(root, f))
-                    rel = os.path.relpath(os.path.join(root, f), sf_dir)
-                    parts.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
-    except OSError:
-        return "no-such-corpus"
-    return hashlib.md5("|".join(parts).encode()).hexdigest()
-
-
 def corpus_path_token(sf_dir: str) -> str:
     """Deterministic short token for a corpus directory's PATH (not its
-    contents — that is :func:`corpus_token`), derived from the FULL
+    contents — that is :func:`memo.corpus_token`), derived from the FULL
     normalized path (basename alone collides when two corpora share a
     directory name, e.g. .../a/sf0.1 and .../b/sf0.1). Human-readable
     basename + 8-hex path hash."""
@@ -142,7 +121,7 @@ def _artifact_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
     repeat calls within an application overwrite the same files —
     bounded disk, and no staleness because every call REWRITES the
     artifact before reading it back (unlike the in-session memos,
-    which trust :func:`corpus_token` to notice a rewritten corpus).
+    which trust :func:`memo.corpus_token` to notice a rewritten corpus).
     Distinct corpora NEVER share a path, even with equal basenames
     (:func:`corpus_path_token`)."""
     token = corpus_path_token(sf_dir)
@@ -152,7 +131,17 @@ def _artifact_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, wide_scan: bool = False
 ) -> DataFrame:
-    """``wide_scan=True`` opts a read into the under-parallel-scan
+    """Read one table of the corpus at ``sf_dir``.
+
+    The schema Spark infers for a table is memoized per corpus
+    snapshot (:data:`_SCHEMA_CACHE`, keyed by :func:`memo.key`), and
+    later reads pass it to ``spark.read.schema``: inference runs a
+    Spark job on every read, and most queries read ``documents``. The
+    memo holds exactly what inference returns, so the plan is
+    unchanged. ``events`` keeps its own read, because its inferred
+    ``ts`` type depends on ``nanosAsLong``.
+
+    ``wide_scan=True`` opts a read into the under-parallel-scan
     repartition (:func:`_scan_parallelize`) — set it at call sites
     whose per-row work on top of the scan is heavy enough to win from
     the extra exchange (measured, not assumed)."""
@@ -184,7 +173,12 @@ def load_table(
             )
         return df
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
+    schema = memo.get_or_build(
+        _SCHEMA_CACHE,
+        memo.key(spark, sf_dir, name),
+        lambda: spark.read.parquet(path).schema,
+    )
+    df = spark.read.schema(schema).parquet(path)
     if wide_scan:
         df = _scan_parallelize(spark, df, path)
     return df

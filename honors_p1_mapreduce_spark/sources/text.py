@@ -30,19 +30,16 @@ def read_text_lines(
     return df
 
 
-def write_tsv(df: DataFrame, path: str, num_partitions: int | None = None) -> None:
+def write_tsv(df: DataFrame, path: str) -> None:
     """Write a 2+-column DataFrame as headerless TSV.
 
     Matches the observable reference output shape: string-coerced
     columns (mr/worker/worker.py:124-125), keys sorted within each
-    output partition (mr/worker/worker.py:167). ``num_partitions``
-    hash-repartitions on the first column first; without it the frame
-    keeps its partitioning (``run_job`` writes ``map_reduce``'s
-    reduce partitions as they are).
+    output partition (mr/worker/worker.py:167). The frame keeps its
+    partitioning (``run_job`` writes ``map_reduce``'s reduce
+    partitions as they are).
     """
     out = df.select([F.col(c).cast("string").alias(c) for c in df.columns])
-    if num_partitions is not None:
-        out = out.repartition(num_partitions, out.columns[0])
     out.sortWithinPartitions(out.columns[0]).write.mode("overwrite").option(
         "sep", "\t"
     ).option("emptyValue", "").csv(path)

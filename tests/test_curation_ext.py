@@ -63,6 +63,47 @@ def test_source_profile_dup_mass_matches_exact_dedup(spark, sf_dir):
     assert total_dups == n_docs - n_distinct
 
 
+def test_corpus_clean_funnel_empty_stages_keep_null_sums(spark, sf_dir, tmp_path):
+    """No document passes quality, so stages 2-4 count 0 documents and
+    their token sums stay NULL, as the DuckDB twin's sum over no rows."""
+    import os
+
+    import pandas as pd
+
+    from honors_p1_mapreduce_spark.operators.pipeline import (
+        CORPUS_CLEAN_FUNNEL_ORACLE,
+        corpus_clean_funnel,
+    )
+
+    corpus = tmp_path / "lowq"
+    corpus.mkdir()
+    for name in os.listdir(sf_dir):  # the oracle connection views every table
+        if name != "documents.parquet":
+            (corpus / name).symlink_to(os.path.join(sf_dir, name))
+    texts = [
+        "the ############################",  # English, quality ~0.39
+        "the @@@@@@@@@@@@@@@@@@@@@@@@@@@@",
+        "der %%%%%%%%%%%%%%%%%%%%%%%%%%%%",  # German
+        "zzz yyy xxx",  # no stopword: und
+    ]
+    pd.DataFrame(
+        {
+            "doc_id": range(1, len(texts) + 1),
+            "text": texts,
+            "lang": "en",
+            "source": "t",
+            "n_chars": [len(t) for t in texts],
+        }
+    ).to_parquet(corpus / "documents.parquet")
+    rows = {
+        r["stage"]: (r["n_docs"], r["n_bpe_tokens"])
+        for r in corpus_clean_funnel(spark, str(corpus)).collect()
+    }
+    assert rows["0_all"][0] == 4 and rows["1_lang"][0] == 2
+    assert rows["2_quality"] == rows["3_exact_dedup"] == rows["4_neardup"] == (0, None)
+    compare_query(spark, str(corpus), corpus_clean_funnel, CORPUS_CLEAN_FUNNEL_ORACLE)
+
+
 def test_token_budget_select_maximal_prefix(spark, sf_dir):
     """Differential vs an independent Python greedy: sort all docs by
     (quality bucket desc, doc_id asc), take the maximal prefix whose

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from honors_p1_mapreduce_spark.operators.grep import grep_count, grep_count_oracle
 from honors_p1_mapreduce_spark.runtime import status
+from honors_p1_mapreduce_spark.sources.tables import TABLES, load_table
 from honors_p1_mapreduce_spark.sources.text import read_tsv_results, write_tsv
 
 from .oracle import compare_query
@@ -61,9 +62,9 @@ def test_default_driver_mem_fits_the_host(monkeypatch):
 def test_write_tsv_round_trip_sorted_partitions(spark, tmp_path):
     df = spark.createDataFrame(
         [("b", 2), ("a", 1), ("c", 3), ("a", 9)], ["k", "v"]
-    )
+    ).repartition(2, "k")
     out = str(tmp_path / "tsv_out")
-    write_tsv(df, out, num_partitions=2)
+    write_tsv(df, out)
     back = read_tsv_results(spark, out)
     # string-coerced values, all rows preserved (E8 contract)
     assert sorted((r[0], r[1]) for r in back.collect()) == [
@@ -78,6 +79,51 @@ def test_write_tsv_round_trip_sorted_partitions(spark, tmp_path):
         assert keys == sorted(keys)
     # limit analog (E9)
     assert read_tsv_results(spark, out, limit=2).count() == 2
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs launched by ``fn()``, counted in a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_memoizes_the_inferred_schema(spark, sf_dir, tmp_path):
+    # the first read of a corpus infers (a Spark job); the second
+    # reads with the memoized schema and launches none
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    (corpus / "documents.parquet").symlink_to(f"{sf_dir}/documents.parquet")
+    assert _jobs_of(spark, lambda: load_table(spark, str(corpus), "documents")) >= 1
+    assert _jobs_of(spark, lambda: load_table(spark, str(corpus), "documents")) == 0
+    # the memoized schema is exactly what inference returns
+    for name in TABLES:
+        if name != "events":  # read through its own nanosAsLong path
+            want = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+            assert load_table(spark, sf_dir, name).schema == want, name
+
+
+def test_load_table_schema_follows_a_corpus_rewritten_in_place(spark, tmp_path):
+    import pandas as pd
+
+    corpus = tmp_path / "rewritten"
+    corpus.mkdir()
+    pd.DataFrame({"doc_id": [1], "text": ["a b"]}).to_parquet(corpus / "documents.parquet")
+    assert load_table(spark, str(corpus), "documents").columns == ["doc_id", "text"]
+    pd.DataFrame({"doc_id": [1], "text": ["a b"], "lang": ["en"]}).to_parquet(
+        corpus / "documents.parquet"
+    )
+    df = load_table(spark, str(corpus), "documents")
+    assert df.columns == ["doc_id", "text", "lang"]
+    assert df.collect()[0]["lang"] == "en"
 
 
 def test_read_text_lines_min_partitions(spark, tmp_path):

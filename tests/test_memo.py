@@ -10,7 +10,6 @@ from types import SimpleNamespace
 
 import honors_p1_mapreduce_spark as pkg
 from honors_p1_mapreduce_spark import memo, registry
-from honors_p1_mapreduce_spark.sources.tables import corpus_token
 
 
 def _cache_dicts() -> dict[str, dict]:
@@ -34,6 +33,7 @@ def test_every_cache_dict_is_a_store_cleared_by_reset_memos():
         "pq._CODEBOOK_CACHE",
         "winnow._FP_CACHE",
         "lm_quality._READ_FRAMES_CACHE",
+        "tables._SCHEMA_CACHE",
     } <= set(caches)
     unregistered = [
         name
@@ -54,7 +54,7 @@ def test_key_is_application_corpus_snapshot_params():
     assert memo.key(spark, "/no/such/corpus", 8, 2) == (
         "app-1",
         "/no/such/corpus",
-        corpus_token("/no/such/corpus"),
+        memo.corpus_token("/no/such/corpus"),
         8,
         2,
     )

@@ -404,6 +404,24 @@ def test_funnel_single_shuffle_no_joins(spark, sf_dir):
     assert "Python" not in plan
 
 
+def test_corpus_clean_funnel_is_one_aggregate_without_cache(spark, sf_dir):
+    # the five stages are flags counted by one aggregate: no union of
+    # per-stage aggregates, and no persisted feature frame (the only
+    # cached relations are the ones inside winnow_neardup's own plan)
+    plan = _plan(registry.QUERIES["corpus_clean_funnel"](spark, sf_dir))
+    neardup = _plan(registry.QUERIES["winnow_neardup"](spark, sf_dir))
+    assert "Union" not in plan
+    assert plan.count("InMemoryTableScan") == neardup.count("InMemoryTableScan")
+
+
+@pytest.mark.parametrize("name", ["dedup_minhash", "dedup_minhash_portable"])
+def test_minhash_signatures_are_not_cached(spark, sf_dir, name):
+    # the band self-join and the signature join-backs reuse the one
+    # signature exchange; a persisted signature frame only adds stages
+    plan = _plan(registry.QUERIES[name](spark, sf_dir))
+    assert "InMemoryTableScan" not in plan
+
+
 def test_forecast_revenue_scan_bound(spark, sf_dir):
     """Q6 shape: all predicates pushed, 4-column read, no join."""
     from honors_p1_mapreduce_spark.operators.relational_ext import forecast_revenue
