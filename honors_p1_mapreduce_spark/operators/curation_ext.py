@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens_col, tokens_sql
 from ..sources.tables import load_table
-from .pipeline import _features, features_sql
+from .pipeline import QUALITY_MIN, _features, features_sql, stage_counts
 
 _TOK = tokens_sql("text")
 
@@ -60,6 +60,17 @@ def _split_bucket(doc_id) -> F.Column:
     )
 
 
+def _split_label() -> F.Column:
+    """'train', 'val' or 'test' for the row's ``doc_id`` by its
+    :func:`_split_bucket`."""
+    b = _split_bucket(F.col("doc_id"))
+    return (
+        F.when(b < TRAIN_PCT, F.lit("train"))
+        .when(b < TRAIN_PCT + VAL_PCT, F.lit("val"))
+        .otherwise(F.lit("test"))
+    )
+
+
 def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audit frame of the deterministic train/val/test assignment:
     (source, split, n_docs, sum_chars), one row per source x split.
@@ -70,14 +81,8 @@ def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-portable, and stratification-auditable per source.
     """
     docs = load_table(spark, sf_dir, "documents")
-    b = _split_bucket(F.col("doc_id"))
-    split = (
-        F.when(b < TRAIN_PCT, F.lit("train"))
-        .when(b < TRAIN_PCT + VAL_PCT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
     return (
-        docs.select("source", split.alias("split"), "n_chars")
+        docs.select("source", _split_label().alias("split"), "n_chars")
         .groupBy("source", "split")
         .agg(F.count("*").alias("n_docs"), F.sum("n_chars").alias("sum_chars"))
     )
@@ -459,47 +464,43 @@ def dataset_build_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                      histogram cutoff, no global sort)
       4_train        the deterministic train split of the selection
 
-    Output: (stage, n_docs, n_bpe_tokens) per stage. One feature pass
-    feeds every stage (persisted projection); each stage adds one
-    bounded shuffle (hash-agg or vocab-size join) — composing the
-    operators does not multiply corpus scans.
+    Output: (stage, n_docs, n_bpe_tokens) per stage. Each stage is a
+    per-document flag on one feature pass, as in the cleaning funnel:
+    ``in2`` is the min ``in1`` doc_id of its content hash (a window),
+    ``in3`` a left join to the budget selection over the ``in2`` pool,
+    ``in4`` the train bucket of an ``in3`` doc; :func:`stage_counts`
+    counts every stage in one aggregate.
     """
     feats = _features(spark, sf_dir).select(
         "doc_id",
-        "quality",
         F.floor(F.col("quality") * QB_SCALE).cast("bigint").alias("qb"),
         "bpe_tokens",
         "content_hash",
-    ).persist()
-    from .pipeline import QUALITY_MIN
-
-    s1 = feats.filter(F.col("quality") >= QUALITY_MIN)
-    keep = s1.groupBy("content_hash").agg(F.min("doc_id").alias("doc_id"))
-    s2 = s1.join(keep.select("doc_id"), "doc_id")
-    s3 = budget_select_docs(s2.select("doc_id", "qb", "bpe_tokens"))
-    s4 = s3.filter(_split_bucket(F.col("doc_id")) < TRAIN_PCT)
-
-    def stage(df: DataFrame, name: str) -> DataFrame:
-        return df.agg(
-            F.lit(name).alias("stage"),
-            F.count("*").alias("n_docs"),
-            F.sum("bpe_tokens").alias("n_bpe_tokens"),
-        )
-
-    return (
-        stage(feats, "0_all")
-        .unionByName(stage(s1, "1_quality"))
-        .unionByName(stage(s2, "2_exact_dedup"))
-        .unionByName(stage(s3, "3_budget"))
-        .unionByName(stage(s4, "4_train"))
+        F.lit(True).alias("in0"),
+        (F.col("quality") >= QUALITY_MIN).alias("in1"),
+    )
+    first = F.min(F.when(F.col("in1"), F.col("doc_id"))).over(
+        Window.partitionBy("content_hash")
+    )
+    deduped = feats.withColumn("in2", F.col("in1") & (F.col("doc_id") == first))
+    budget = budget_select_docs(
+        deduped.filter("in2").select("doc_id", "qb", "bpe_tokens")
+    ).select("doc_id", F.lit(True).alias("in3"))
+    flags = deduped.join(budget, "doc_id", "left").withColumn(
+        "in4", F.col("in3") & (_split_bucket(F.col("doc_id")) < TRAIN_PCT)
+    )
+    return stage_counts(
+        flags,
+        ("0_all", "1_quality", "2_exact_dedup", "3_budget", "4_train"),
+        "n_docs",
+        "bpe_tokens",
+        "n_bpe_tokens",
     )
 
 
-from .pipeline import QUALITY_MIN as _QMIN  # noqa: E402
-
 DATASET_BUILD_AUDIT_ORACLE = f"""
 WITH {features_sql()},
-s1 AS (SELECT * FROM feats WHERE quality >= {_QMIN}),
+s1 AS (SELECT * FROM feats WHERE quality >= {QUALITY_MIN}),
 s2 AS (
   SELECT * FROM s1
   WHERE doc_id IN (SELECT min(doc_id) FROM s1 GROUP BY content_hash)
@@ -649,21 +650,16 @@ def dataset_publish_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scratch: per-application overwrite-in-place
     (``sources.tables._artifact_dir``), rewritten every call.
     """
+    from ..sources.sinks import write_parquet_partitioned
     from ..sources.tables import _artifact_dir
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source", "n_chars"
     )
-    b = _split_bucket(F.col("doc_id"))
-    split = (
-        F.when(b < TRAIN_PCT, F.lit("train"))
-        .when(b < TRAIN_PCT + VAL_PCT, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
     d = _artifact_dir(spark, sf_dir, "published_dataset")
-    docs.withColumn("split", split).write.mode("overwrite").partitionBy(
-        "split", "source"
-    ).parquet(d)
+    write_parquet_partitioned(
+        docs.withColumn("split", _split_label()), d, ["split", "source"]
+    )
     back = spark.read.parquet(d)
     doc_hash = F.conv(
         F.substring(

@@ -24,6 +24,8 @@ exact-dup min-per-hash window, the join to the near-dup pair list
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -97,10 +99,10 @@ def corpus_clean_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`_features`, ``in3`` keeps an ``in2`` doc that is the min
     ``in2`` doc_id of its content hash (a window, not a join), and
     ``in4`` keeps an ``in3`` doc with no match in a left join to the
-    distinct ``doc_b`` of ``winnow_neardup``. One aggregate then counts
-    every stage and ``inline`` emits the five rows. A stage no document
-    reaches has ``n_docs`` 0 and a NULL ``n_bpe_tokens``, as SQL's
-    ``sum`` over no rows.
+    distinct ``doc_b`` of ``winnow_neardup``. :func:`stage_counts`
+    counts every stage in one aggregate. A stage no document reaches
+    has ``n_docs`` 0 and a NULL ``n_bpe_tokens``, as SQL's ``sum``
+    over no rows.
     """
     stages = ("0_all", "1_lang", "2_quality", "3_exact_dedup", "4_neardup")
     feats = _features(spark, sf_dir)
@@ -118,30 +120,50 @@ def corpus_clean_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(dropped, "doc_id", "left")
         .withColumn("in4", F.col("in3") & F.col("near").isNull())
     )
-    counts = flags.agg(
+    return stage_counts(flags, stages, "n_docs", "bpe_tokens", "n_bpe_tokens")
+
+
+def stage_counts(
+    flags: DataFrame,
+    stages: Sequence[str],
+    n_name: str,
+    measure: str,
+    sum_name: str,
+    by: Sequence[str] = (),
+) -> DataFrame:
+    """(stage, *by, n_name, sum_name) from per-row stage flags ``in0``
+    .. ``in<k>``: stage k counts the rows whose flag is true (NULL
+    counts as false) and sums ``measure`` over them, all stages in ONE
+    ``groupBy(*by).agg`` whose columns ``inline`` turns into rows.
+    Ungrouped, a stage no row reaches reads (0, NULL) as SQL's
+    ``count``/``sum`` over no rows; grouped, its row is dropped, as the
+    SQL twin's GROUP BY has no row for an empty group."""
+    counts = flags.groupBy(*by).agg(
         *[
             agg
             for k in range(len(stages))
             for agg in (
                 F.count_if(f"in{k}").alias(f"n{k}"),
-                F.sum(F.when(F.col(f"in{k}"), F.col("bpe_tokens"))).alias(f"t{k}"),
+                F.sum(F.when(F.col(f"in{k}"), F.col(measure))).alias(f"t{k}"),
             )
         ]
     )
-    return counts.select(
+    rows = counts.select(
         F.inline(
             F.array(
                 *[
                     F.struct(
                         F.lit(name).alias("stage"),
-                        F.col(f"n{k}").alias("n_docs"),
-                        F.col(f"t{k}").alias("n_bpe_tokens"),
+                        *by,
+                        F.col(f"n{k}").alias(n_name),
+                        F.col(f"t{k}").alias(sum_name),
                     )
                     for k, name in enumerate(stages)
                 ]
             )
         )
     )
+    return rows.filter(F.col(n_name) > 0) if by else rows
 
 
 def features_sql() -> str:
@@ -368,8 +390,9 @@ def sample_exact_k(df, k: int, key: str = "doc_id", seed: str = SAMPLE_SEED):
 # pass yields the audio quality AND dedup signals from a single RIFF
 # walk, and the image dHash already IS both (quality = its popcount).
 # Downstream of the decode maps every item is (doc_id, 8-byte fp), so
-# the cluster/keep joins move ~10^-5 of the pixel bytes; per-stage
-# budgets are filter + per-kind aggregates on the persisted frames.
+# the cluster/keep joins move ~10^-5 of the pixel bytes; each stage
+# is a per-item flag from a left join to its kept ids, and one
+# per-kind aggregate (stage_counts) counts every stage.
 # Thresholds are corpus-calibrated (measured at sf0.001/0.01/0.1:
 # the clip filter drops ~half the clips, the gradient filter ~8% of
 # images) so every stage does real work at driver scales.
@@ -381,8 +404,8 @@ MEDIA_IMG_MIN_GRADIENTS = 10  # keep bit_count(dHash) >= this
 def media_clean_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(stage, media_type, n_items, n_bytes) per funnel stage and
     media kind — the multimodal curation capstone (section comment
-    above). Library surface in r11 with a pre-verified oracle; the
-    planned occupant of an r12+ registry slot."""
+    above). The decoded media and both fingerprint frames are
+    persisted: each decode runs once for all of their consumers."""
     from pyspark.storagelevel import StorageLevel
 
     from .multimodal import (
@@ -409,36 +432,32 @@ def media_clean_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).select("doc_id")
         )
     )
-    s1 = media.join(keep1, "doc_id")
     # corpus-level cluster arbiter: audio and image label spaces are
     # doc_ids of disjoint residues (doc_id % 3), so the union is safe
     clusters = fp_clusters(ifp).unionByName(
         fp_clusters(afp.select("doc_id", "fingerprint"))
     )
+    return _media_funnel_counts(media, keep1, clusters, by=("media_type",))
+
+
+def _media_funnel_counts(
+    media: DataFrame, keep1: DataFrame, clusters: DataFrame, by: Sequence[str] = ()
+) -> DataFrame:
+    """The media funnels' stage report over ``media``: ``in1`` marks
+    the ids in ``keep1``, ``in2`` the min doc_id of each cluster among
+    them (both NULL elsewhere)."""
     keep2 = (
-        s1.join(clusters, "doc_id")
+        keep1.join(clusters, "doc_id")
         .groupBy("cluster")
         .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
     )
-    s2 = s1.join(keep2, "doc_id")
-
-    def stage(df: DataFrame, name: str) -> DataFrame:
-        return (
-            df.groupBy("media_type")
-            .agg(
-                F.count("*").alias("n_items"),
-                F.sum("n_bytes").alias("n_bytes"),
-            )
-            .select(
-                F.lit(name).alias("stage"), "media_type", "n_items", "n_bytes"
-            )
-        )
-
-    return (
-        stage(media, "0_all")
-        .unionByName(stage(s1, "1_quality"))
-        .unionByName(stage(s2, "2_dedup"))
+    flags = (
+        media.withColumn("in0", F.lit(True))
+        .join(keep1.withColumn("in1", F.lit(True)), "doc_id", "left")
+        .join(keep2.select("doc_id", F.lit(True).alias("in2")), "doc_id", "left")
+    )
+    return stage_counts(
+        flags, ("0_all", "1_quality", "2_dedup"), "n_items", "n_bytes", "n_bytes", by
     )
 
 
@@ -538,8 +557,8 @@ def media_video_clean_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from the CORPUS-level fingerprint graph (the
     media_clean_funnel / corpus_clean_funnel order-independent
     arbiter convention), through the shared pair-free
-    :func:`~..operators.multimodal.fp_clusters`. Library surface r13;
-    queues with the video block for r15 registration."""
+    :func:`~..operators.multimodal.fp_clusters`; the stages are
+    counted as in :func:`media_clean_funnel`."""
     from pyspark.storagelevel import StorageLevel
 
     from .multimodal import fp_clusters, media_avi_table, video_fingerprints
@@ -551,26 +570,7 @@ def media_video_clean_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep1 = vfp.filter(
         F.bit_count("fingerprint") >= MEDIA_VIDEO_MIN_GRADIENTS
     ).select("doc_id")
-    s1 = media.join(keep1, "doc_id")
-    keep2 = (
-        s1.join(fp_clusters(vfp), "doc_id")
-        .groupBy("cluster")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    s2 = s1.join(keep2, "doc_id")
-
-    def stage(df: DataFrame, name: str) -> DataFrame:
-        return df.agg(
-            F.count("*").alias("n_items"),
-            F.sum("n_bytes").alias("n_bytes"),
-        ).select(F.lit(name).alias("stage"), "n_items", "n_bytes")
-
-    return (
-        stage(media, "0_all")
-        .unionByName(stage(s1, "1_quality"))
-        .unionByName(stage(s2, "2_dedup"))
-    )
+    return _media_funnel_counts(media, keep1, fp_clusters(vfp))
 
 
 def _video_funnel_oracle() -> str:

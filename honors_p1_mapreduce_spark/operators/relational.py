@@ -980,6 +980,7 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import re
 
+    from ..sources.sinks import write_bucketed_table
     from ..sources.tables import _artifact_dir, corpus_path_token
 
     # table names carry the same full-path corpus token as the data
@@ -1005,18 +1006,17 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     for tbl, df, key in sides:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        (
+        write_bucketed_table(
             # repartition on the key with n == bucket count uses the
             # same murmur3-pmod layout as the bucket spec, so each
             # task holds exactly one bucket -> one file per bucket and
             # the bucket-side sort is a cheap single-run sort at read
-            df.repartition(BUCKETED_JOIN_BUCKETS, F.col(key))
-            .write.mode("overwrite")
-            .option("path", _artifact_dir(spark, sf_dir, tbl))
-            .bucketBy(BUCKETED_JOIN_BUCKETS, key)
-            .sortBy(key)
-            .format("parquet")
-            .saveAsTable(tbl)
+            df.repartition(BUCKETED_JOIN_BUCKETS, F.col(key)),
+            tbl,
+            [key],
+            BUCKETED_JOIN_BUCKETS,
+            _artifact_dir(spark, sf_dir, tbl),
+            sort_cols=[key],
         )
     li = spark.table(sides[0][0])
     orders = spark.table(sides[1][0])

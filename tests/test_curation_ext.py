@@ -7,12 +7,18 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from honors_p1_mapreduce_spark import registry
 from honors_p1_mapreduce_spark.operators import curation_ext as cx
 from honors_p1_mapreduce_spark.operators import relational_ext as rx
-from honors_p1_mapreduce_spark.operators.pipeline import _features
+from honors_p1_mapreduce_spark.operators.pipeline import (
+    CORPUS_CLEAN_FUNNEL_ORACLE,
+    _features,
+    corpus_clean_funnel,
+    stage_counts,
+)
 from honors_p1_mapreduce_spark.sources.tables import load_table
 
 from .oracle import compare_query
@@ -63,17 +69,29 @@ def test_source_profile_dup_mass_matches_exact_dedup(spark, sf_dir):
     assert total_dups == n_docs - n_distinct
 
 
-def test_corpus_clean_funnel_empty_stages_keep_null_sums(spark, sf_dir, tmp_path):
-    """No document passes quality, so stages 2-4 count 0 documents and
-    their token sums stay NULL, as the DuckDB twin's sum over no rows."""
+@pytest.mark.parametrize(
+    "fn, oracle, expect",
+    [
+        (
+            corpus_clean_funnel,
+            CORPUS_CLEAN_FUNNEL_ORACLE,
+            {"0_all": 4, "1_lang": 2, "2_quality": 0, "3_exact_dedup": 0, "4_neardup": 0},
+        ),
+        (
+            cx.dataset_build_audit,
+            cx.DATASET_BUILD_AUDIT_ORACLE,
+            {"0_all": 4, "1_quality": 0, "2_exact_dedup": 0, "3_budget": 0, "4_train": 0},
+        ),
+    ],
+    ids=["corpus_clean_funnel", "dataset_build_audit"],
+)
+def test_funnel_empty_stages_keep_null_sums(spark, sf_dir, tmp_path, fn, oracle, expect):
+    """No document passes quality, so every stage from the quality gate
+    on counts 0 documents and its token sum stays NULL, as the DuckDB
+    twin's sum over no rows."""
     import os
 
     import pandas as pd
-
-    from honors_p1_mapreduce_spark.operators.pipeline import (
-        CORPUS_CLEAN_FUNNEL_ORACLE,
-        corpus_clean_funnel,
-    )
 
     corpus = tmp_path / "lowq"
     corpus.mkdir()
@@ -97,11 +115,34 @@ def test_corpus_clean_funnel_empty_stages_keep_null_sums(spark, sf_dir, tmp_path
     ).to_parquet(corpus / "documents.parquet")
     rows = {
         r["stage"]: (r["n_docs"], r["n_bpe_tokens"])
-        for r in corpus_clean_funnel(spark, str(corpus)).collect()
+        for r in fn(spark, str(corpus)).collect()
     }
-    assert rows["0_all"][0] == 4 and rows["1_lang"][0] == 2
-    assert rows["2_quality"] == rows["3_exact_dedup"] == rows["4_neardup"] == (0, None)
-    compare_query(spark, str(corpus), corpus_clean_funnel, CORPUS_CLEAN_FUNNEL_ORACLE)
+    assert {stage: n for stage, (n, _) in rows.items()} == expect
+    assert rows["0_all"][1] == 9
+    assert all(t is None for n, t in rows.values() if n == 0)
+    compare_query(spark, str(corpus), fn, oracle)
+
+
+def test_stage_counts_drops_empty_groups_only(spark):
+    """Ungrouped, a stage no row reaches reads (0, NULL); grouped, a
+    (stage, group) pair with no rows emits no row."""
+    flags = spark.createDataFrame(
+        [("a", 5, True, True, False), ("a", 7, True, False, False), ("b", 2, True, False, False)],
+        "g string, m bigint, in0 boolean, in1 boolean, in2 boolean",
+    )
+    stages = ("0_all", "1_kept", "2_none")
+    assert sorted(map(tuple, stage_counts(flags, stages, "n", "m", "s").collect())) == [
+        ("0_all", 3, 14),
+        ("1_kept", 1, 5),
+        ("2_none", 0, None),
+    ]
+    grouped = stage_counts(flags, stages, "n", "m", "s", by=("g",))
+    assert grouped.columns == ["stage", "g", "n", "s"]
+    assert sorted(map(tuple, grouped.collect())) == [
+        ("0_all", "a", 2, 12),
+        ("0_all", "b", 1, 2),
+        ("1_kept", "a", 1, 5),
+    ]
 
 
 def test_token_budget_select_maximal_prefix(spark, sf_dir):

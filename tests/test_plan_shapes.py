@@ -414,6 +414,16 @@ def test_corpus_clean_funnel_is_one_aggregate_without_cache(spark, sf_dir):
     assert plan.count("InMemoryTableScan") == neardup.count("InMemoryTableScan")
 
 
+def test_dataset_build_audit_caches_and_unions_only_in_budget_select(spark, sf_dir):
+    # the audit's five stages are flags counted by one aggregate: its
+    # only cached relations and unions are budget_select_docs' own,
+    # which token_budget_select runs as well
+    plan = _plan(registry.QUERIES["dataset_build_audit"](spark, sf_dir))
+    budget = _plan(registry.QUERIES["token_budget_select"](spark, sf_dir))
+    for node in ("InMemoryTableScan", "Union"):
+        assert plan.count(node) <= budget.count(node), node
+
+
 @pytest.mark.parametrize("name", ["dedup_minhash", "dedup_minhash_portable"])
 def test_minhash_signatures_are_not_cached(spark, sf_dir, name):
     # the band self-join and the signature join-backs reuse the one
