@@ -147,14 +147,7 @@ def _contamination_tail(
         .agg(F.count("*").alias("n_overlap"))
         .filter(F.col("n_overlap") >= min_overlap)
     )
-    return overlap.join(F.broadcast(ev_sizes), "eval_doc").select(
-        "train_doc",
-        "eval_doc",
-        "n_overlap",
-        (F.col("n_overlap").cast("double") / F.col("n_ev").cast("double")).alias(
-            "coverage"
-        ),
-    )
+    return _with_coverage(overlap, ev_sizes)
 
 
 def contamination_check_from(
@@ -328,17 +321,38 @@ def contamination_from_index(
     docs = load_table(spark, sf_dir, "documents")
     train, _ = _contam_doc_shingles(docs, n)
     ev_good = spark.read.parquet(f"{index_dir}/eval_shingles")
-    ev_sizes = ev_good.groupBy("eval_doc").agg(F.count("*").alias("n_ev"))
-    # ONE broadcast join: ev_good is already the good-key-filtered
-    # registry, so a prefilter against its distinct keys would remove
-    # exactly nothing (r15 review — the streaming twin's micro-batch
-    # is the same single-join shape)
+    return _contam_from_registry(
+        train, ev_good, _contam_eval_sizes(ev_good), min_overlap
+    )
+
+
+def _contam_eval_sizes(ev_good: DataFrame) -> DataFrame:
+    """(eval_doc, n_ev): informative shingles per eval doc, read off
+    the stored registry."""
+    return ev_good.groupBy("eval_doc").agg(F.count("*").alias("n_ev"))
+
+
+def _contam_from_registry(
+    train: DataFrame, ev_good: DataFrame, ev_sizes: DataFrame, min_overlap: int
+) -> DataFrame:
+    """The overlap-and-coverage tail of the stored-registry scan, over
+    a (train_doc, sh) frame. Per train doc, so the streaming twin
+    runs it per micro-batch against its snapshot of the registry.
+    ONE broadcast join: ev_good is already the good-key-filtered
+    registry, so a prefilter against its distinct keys would remove
+    exactly nothing (r15 review)."""
     overlap = (
         train.join(F.broadcast(ev_good), "sh")
         .groupBy("train_doc", "eval_doc")
         .agg(F.count("*").alias("n_overlap"))
         .filter(F.col("n_overlap") >= min_overlap)
     )
+    return _with_coverage(overlap, ev_sizes)
+
+
+def _with_coverage(overlap: DataFrame, ev_sizes: DataFrame) -> DataFrame:
+    """(train_doc, eval_doc, n_overlap, coverage): each overlap as a
+    share of its eval doc's informative shingles."""
     return overlap.join(F.broadcast(ev_sizes), "eval_doc").select(
         "train_doc",
         "eval_doc",

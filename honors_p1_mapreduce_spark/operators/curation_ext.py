@@ -699,7 +699,7 @@ GROUP BY 1, 2
 
 
 # ---------------------------------------------- corpus snapshot diff
-# r16 library surface (queue r19): recrawl delta attribution. A
+# Library surface: recrawl delta attribution. A
 # production corpus is re-snapshotted continuously (crawl N vs crawl
 # N+1), and every downstream artifact (dedup indexes, LM counts, PQ
 # codes) wants the DELTA, not a full rebuild — the first question is
@@ -762,7 +762,8 @@ def _rotated_text() -> F.Column:
 
 
 def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered query: diff the two deterministic snapshots of the
+    """Library function, gated by its oracle test (not in
+    ``registry.QUERIES``): diff the two deterministic snapshots of the
     documents table (see the section comment for the derivation) via
     :func:`snapshot_diff`. Output (doc_id, status), one row per
     added/removed/changed doc. Snapshot derivation shared with the
@@ -803,47 +804,55 @@ def _snapshot_frames(
     old_docs = docs.filter(
         F.col("doc_id") % SNAP_OLD_MOD != SNAP_OLD_RESIDUE
     ).select("doc_id", "text")
-    new_text = F.when(
-        F.col("doc_id") % SNAP_CHANGE_MOD == 0, _rotated_text()
-    ).otherwise(F.col("text"))
-    new_docs = docs.filter(
-        F.col("doc_id") % SNAP_NEW_MOD != SNAP_NEW_RESIDUE
-    ).select("doc_id", new_text.alias("text"))
-    # Total content hash: coalesce to '' so h is never NULL — the
-    # batch/streaming diff paths then agree by construction on a
-    # NULL-text doc (batch would otherwise read a NULL new-hash as
-    # 'removed' while the streaming filter's three-valued != drops
-    # the row; r16 advisor). The SQL oracles coalesce identically.
-    old_h = old_docs.select(
-        "doc_id", F.md5(F.coalesce("text", F.lit(""))).alias("h")
-    )
-    new_h = new_docs.select(
-        "doc_id", F.md5(F.coalesce("text", F.lit(""))).alias("h")
-    )
+    new_docs = _new_snapshot_docs(docs)
+    old_h = old_docs.select("doc_id", _content_hash().alias("h"))
+    new_h = new_docs.select("doc_id", _content_hash().alias("h"))
     return old_docs, new_docs, old_h, new_h
 
 
+def _new_snapshot_docs(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) of the NEW snapshot, rotated text included —
+    shared with the streaming recrawl twins, which derive it per
+    micro-batch."""
+    new_text = F.when(
+        F.col("doc_id") % SNAP_CHANGE_MOD == 0, _rotated_text()
+    ).otherwise(F.col("text"))
+    return docs.filter(
+        F.col("doc_id") % SNAP_NEW_MOD != SNAP_NEW_RESIDUE
+    ).select("doc_id", new_text.alias("text"))
+
+
+def _content_hash() -> F.Column:
+    """Total content hash of ``text``: coalesce to '' so h is never
+    NULL — the batch/streaming diff paths then agree by construction
+    on a NULL-text doc (batch would otherwise read a NULL new-hash as
+    'removed' while the streaming filter's three-valued != drops the
+    row; r16 advisor). The SQL oracles coalesce identically."""
+    return F.md5(F.coalesce("text", F.lit("")))
+
+
 def winnow_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered query (r16 library surface, queue r19): the stored
-    fingerprint index maintained by SNAPSHOT DELTA instead of full
-    rebuild — the operation :func:`corpus_snapshot_diff` exists to
-    drive. A recrawl lands as the NEW snapshot; rather than
-    re-fingerprinting the whole corpus, the refresh (a) drops the
-    index rows of removed/changed docs (anti-join row deletion, the
-    winnow_retract_index shape — the artifact is row-keyed per doc),
-    (b) fingerprints ONLY the added/changed docs against their NEW
-    text (the only extraction work, O(churn) — at a 100 TB corpus
-    with a 2 % daily churn this is the difference between a 2 TB and
-    a 100 TB tokenize pass), and (c) unions and ships the refreshed
-    index, then serves decontamination from it.
+    """Library function, gated by its oracle test (not in
+    ``registry.QUERIES``): the stored fingerprint index maintained by
+    SNAPSHOT DELTA instead of full rebuild — the operation
+    :func:`corpus_snapshot_diff` exists to drive. A recrawl lands as
+    the NEW snapshot; rather than re-fingerprinting the whole corpus,
+    the refresh (a) drops the index rows of removed/changed docs
+    (anti-join row deletion, the winnow_retract_index shape — the
+    artifact is row-keyed per doc), (b) fingerprints ONLY the
+    added/changed docs against their NEW text (the only extraction
+    work, O(churn) — at a 100 TB corpus with a 2 % daily churn this is
+    the difference between a 2 TB and a 100 TB tokenize pass), and (c)
+    unions and ships the refreshed index, then serves decontamination
+    from it.
 
     refresh(index(old), diff) == index(new) holds bit-for-bit because
     fingerprint extraction is deterministic per (doc_id, text) and
     unchanged docs have unchanged text by definition of the
     content-hash diff; pinned frame-for-frame by pytest and
-    hash-gated by the oracle, which re-derives decontamination from
-    the NEW snapshot corpus — the winnow_index_retract proof pattern
-    applied to the full add/remove/change lifecycle."""
+    hash-gated by the oracle test, which re-derives decontamination
+    from the NEW snapshot corpus — the winnow_index_retract proof
+    pattern applied to the full add/remove/change lifecycle."""
     from ..sources.tables import _artifact_dir
     from .winnow import (
         decontaminate_from_index,
@@ -970,12 +979,13 @@ def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
 
 
 def winnow_index_refresh_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered twin of :func:`winnow_index_refresh` following the
-    family's ``*_stored`` convention (r16 verdict #3 + advisor): the
-    OLD snapshot's fingerprint index is a PRE-SHIPPED artifact —
-    built once per (application, corpus) and reused, not rebuilt
-    inside every call — so the measured cost of this query is what
-    the operator means: O(churn) maintenance (tombstones + delta
+    """Library function, gated by its oracle test (not in
+    ``registry.QUERIES``): the twin of :func:`winnow_index_refresh`
+    following the family's ``*_stored`` convention (r16 verdict #3 +
+    advisor): the OLD snapshot's fingerprint index is a PRE-SHIPPED
+    artifact — built once per (application, corpus) and reused, not
+    rebuilt inside every call — so the measured cost of this query is
+    what the operator means: O(churn) maintenance (tombstones + delta
     write, merge-on-read) plus the serve. The self-contained sibling
     keeps rebuilding its precondition every call for a fully
     self-checking oracle run; this twin is the production shape.

@@ -14,7 +14,7 @@ touched.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum_col, dsum_expr, dsum_sql
@@ -467,28 +467,41 @@ def events_multi_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (grain, bucket_start, event_type, n_events, sum_value).
     """
-    ev = load_table(spark, sf_dir, "events")
-    minute = (
-        ev.groupBy(
-            F.date_trunc("minute", "ts").alias("bucket_start"), "event_type"
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(24,6)")).alias("sdec"),
-        )
-        .persist()
+    return _rollup_cascade(_minute_partials(load_table(spark, sf_dir, "events")))
+
+
+def _minute_partials(ev: DataFrame) -> DataFrame:
+    """(bucket_start, event_type, n_events, sdec): per-minute counts
+    and EXACT decimal sums of raw events — the one fact-table pass of
+    the rollup family, and what the incremental-rollup stream stores
+    per micro-batch (``streaming.windows``)."""
+    return ev.groupBy(
+        F.date_trunc("minute", "ts").alias("bucket_start"), "event_type"
+    ).agg(
+        F.count("*").alias("n_events"),
+        F.sum(F.col("value").cast("decimal(24,6)")).alias("sdec"),
     )
-    hour = (
-        minute.groupBy(
-            F.date_trunc("hour", "bucket_start").alias("bucket_start"),
-            "event_type",
-        )
-        .agg(F.sum("n_events").alias("n_events"), F.sum("sdec").alias("sdec"))
-        .persist()
+
+
+def _regroup_partials(partials: DataFrame, bucket: Column) -> DataFrame:
+    """Re-add (n_events, sdec) partials per (``bucket``, event_type):
+    counts and decimal sums are re-addable, so a coarser grain, a
+    merge of stored micro-batch partials and a compaction are all
+    this one aggregation."""
+    return partials.groupBy(bucket.alias("bucket_start"), "event_type").agg(
+        F.sum("n_events").alias("n_events"), F.sum("sdec").alias("sdec")
     )
-    day = hour.groupBy(
-        F.date_trunc("day", "bucket_start").alias("bucket_start"), "event_type"
-    ).agg(F.sum("n_events").alias("n_events"), F.sum("sdec").alias("sdec"))
+
+
+def _rollup_cascade(minute: DataFrame) -> DataFrame:
+    """The minute -> hour -> day cascade over minute partials, each
+    grain cast to double once per output row. Shared by the batch
+    operator and the rollup store reader."""
+    minute = minute.persist()
+    hour = _regroup_partials(
+        minute, F.date_trunc("hour", "bucket_start")
+    ).persist()
+    day = _regroup_partials(hour, F.date_trunc("day", "bucket_start"))
 
     def out(df: DataFrame, grain: str) -> DataFrame:
         return df.select(
@@ -535,18 +548,14 @@ def events_moving_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     moving sum re-adds exact decimal partials, so the final double is
     engine-identical.
     """
+    return _moving_stats(_minute_partials(load_table(spark, sf_dir, "events")))
+
+
+def _moving_stats(minute: DataFrame) -> DataFrame:
+    """The trailing range window over minute partials — shared by the
+    batch operator and the rollup store reader."""
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    minute = (
-        ev.groupBy(
-            F.date_trunc("minute", "ts").alias("bucket_start"), "event_type"
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(24,6)")).alias("sdec"),
-        )
-    )
     w = (
         Window.partitionBy("event_type")
         .orderBy(F.unix_timestamp("bucket_start"))

@@ -494,7 +494,7 @@ def _retract_pred_sql() -> str:
 LM_MODEL_RETRACT_ORACLE = _lm_interp_oracle(pred=_retract_pred_sql())
 
 
-# ------------------- snapshot-driven count refresh (r17, queue r21)
+# ------------------------------------- snapshot-driven count refresh
 
 # The LM member of the snapshot-delta lifecycle (r16 verdict #6
 # completed across all three artifact families: winnow index r16-17,
@@ -509,7 +509,7 @@ LM_MODEL_RETRACT_ORACLE = _lm_interp_oracle(pred=_retract_pred_sql())
 # corpus retrain. refresh == retrain-on-NEW bit-for-bit because the
 # arithmetic is exact and unchanged docs contribute identical counts
 # to both sides; the oracle retrains from the NEW snapshot corpus so
-# the driver hash-gates exactly that claim.
+# its oracle test hash-gates exactly that claim.
 
 
 def merge_counts(
@@ -534,23 +534,24 @@ def merge_counts(
 
 
 def lm_model_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered query (r17 library surface, queue r21): the full
-    snapshot-refresh cycle for the LM count store — persist the OLD
-    snapshot's count artifact (the pre-existing artifact; on disk
-    from the previous cycle in production), diff the snapshots
+    """Library function, gated by its oracle test (not in
+    ``registry.QUERIES``): the full snapshot-refresh cycle for the LM
+    count store — persist the OLD snapshot's count artifact (the
+    pre-existing artifact; on disk from the previous cycle in
+    production), diff the snapshots
     (:func:`..curation_ext.snapshot_diff` on content hashes),
-    delta-count the LEAVING docs under their OLD text and the
-    ENTERING docs under their NEW text (both churn-sized tokenize
-    passes — a changed doc leaves under its old text and re-enters
-    under its new text), subtract/add against the stored counts
-    (vocab-sized joins, the retract machinery plus its additive
-    mirror), re-derive the score table, and score the NEW snapshot.
+    delta-count the LEAVING docs under their OLD text and the ENTERING
+    docs under their NEW text (both churn-sized tokenize passes — a
+    changed doc leaves under its old text and re-enters under its new
+    text), subtract/add against the stored counts (vocab-sized joins,
+    the retract machinery plus its additive mirror), re-derive the
+    score table, and score the NEW snapshot.
 
     The oracle retrains the interpolated model from the NEW snapshot
     corpus from scratch (the winnow/PQ refresh proof pattern), so the
-    driver hash-gates refresh == retrain; pytest additionally pins
-    the reconciled count frames against a from-scratch recount of the
-    NEW snapshot."""
+    oracle test hash-gates refresh == retrain; pytest additionally
+    pins the reconciled count frames against a from-scratch recount
+    of the NEW snapshot."""
     from ..sources.tables import _artifact_dir
     from .curation_ext import _snapshot_frames, snapshot_diff
 

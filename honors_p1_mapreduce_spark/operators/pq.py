@@ -1024,7 +1024,7 @@ def pq_retract_index(
     ).parquet(f"{out_dir}/cents")
 
 
-# ------------------- snapshot-driven index refresh (r17, queue r20)
+# ------------------------------------- snapshot-driven index refresh
 
 # The ANN member of the snapshot-delta lifecycle (r16 verdict #6):
 # write/read-back (r8) -> append (r9) -> retract (r10) -> REFRESH —
@@ -1095,14 +1095,14 @@ def pq_index_refresh(
     n_cells: int = PQ_CELLS,
     n_iter: int = PQ_ITER,
 ) -> DataFrame:
-    """Registered query (r17 library surface, queue r20): the full
-    snapshot-refresh cycle — build + persist the OLD snapshot's PQ
-    index (the pre-existing artifact; in production it is on disk
-    from the last cycle), diff the snapshots, retract removed/changed
-    code rows, encode added/changed vectors against the FROZEN stored
-    codebooks, write the refreshed generation, and serve the
-    two-stage ADC + exact-re-rank search from it over the NEW
-    snapshot.
+    """Library function, gated by its oracle test (not in
+    ``registry.QUERIES``): the full snapshot-refresh cycle — build +
+    persist the OLD snapshot's PQ index (the pre-existing artifact; in
+    production it is on disk from the last cycle), diff the snapshots,
+    retract removed/changed code rows, encode added/changed vectors
+    against the FROZEN stored codebooks, write the refreshed
+    generation, and serve the two-stage ADC + exact-re-rank search
+    from it over the NEW snapshot.
 
     refresh(index(old), diff) == rebuild-with-frozen-codebooks(new)
     holds bit-for-bit because code assignment is per-vector and
@@ -1110,7 +1110,7 @@ def pq_index_refresh(
     definition of the content-hash diff — pinned frame-for-frame by
     pytest; the oracle re-derives the search end-to-end with training
     on the OLD snapshot and codes/ADC/re-rank over the NEW one
-    (_pq_chain_sql's split train_src/encode_src), so the driver
+    (_pq_chain_sql's split train_src/encode_src), so the oracle test
     hash-gates the whole cycle. Scratch: per-application
     overwrite-in-place (``sources.tables._artifact_dir``)."""
     from ..sources.tables import _artifact_dir

@@ -1142,20 +1142,25 @@ def quantile_daily_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row window.
     """
     ev = load_table(spark, sf_dir, "events")
-    rows = ev.select(
+    return quantiles_from_grid(_merge_grids(_daily_grid(ev)))
+
+
+def _daily_grid(ev: DataFrame) -> DataFrame:
+    """(event_type, day, bucket, cnt): the stored artifact, one tiny
+    bucket grid per (type, day) — also what each micro-batch of the
+    streaming twin contributes (``streaming.curation``)."""
+    return ev.select(
         "event_type",
         F.to_date("ts").cast("string").alias("day"),
         _qsk_bucket(F.col("value")).alias("bucket"),
-    )
-    # the stored artifact: one tiny bucket grid per (type, day)...
-    daily = rows.groupBy("event_type", "day", "bucket").agg(
-        F.count("*").alias("cnt")
-    )
-    # ...and the additive merge answering global questions
-    merged = daily.groupBy("event_type", "bucket").agg(
-        F.sum("cnt").alias("cnt")
-    )
-    return quantiles_from_grid(merged)
+    ).groupBy("event_type", "day", "bucket").agg(F.count("*").alias("cnt"))
+
+
+def _merge_grids(grids: DataFrame) -> DataFrame:
+    """The additive merge answering global questions: bucket-wise sums
+    over any set of (event_type, bucket, cnt) partial grids, whether
+    days of one batch or micro-batches of a stream."""
+    return grids.groupBy("event_type", "bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 QUANTILE_DAILY_MERGE_ORACLE = f"""

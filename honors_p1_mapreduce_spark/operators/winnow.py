@@ -660,12 +660,7 @@ def dedup_incremental(
     # df-cap from the INDEX side only: the stored corpus defines what
     # is boilerplate; a small batch cannot (and in production the hot
     # set ships with the index, not recomputed per batch)
-    hot = (
-        index.groupBy("fp_hash")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > df_cap)
-        .select("fp_hash")
-    )
+    hot = _hot_fps(index, df_cap)
     index = index.join(F.broadcast(hot), "fp_hash", "left_anti")
     batch = batch.join(F.broadcast(hot), "fp_hash", "left_anti")
     # No broadcast hint on the batch side: a true daily batch is small
@@ -674,9 +669,36 @@ def dedup_incremental(
     # forced hint would grow linearly with the corpus and OOM at scale
     # (r8 judge finding). The only forced broadcasts are the df-capped
     # hot set (bounded by the count of >df_cap fingerprints).
+    return _best_matches(
+        batch,
+        index.select(F.col("doc_id").alias("dup_of"), "fp_hash"),
+        min_shared,
+    )
+
+
+def _hot_fps(index: DataFrame, df_cap: int) -> DataFrame:
+    """(fp_hash) of the index fingerprints held by more than
+    ``df_cap`` index docs — the boilerplate both sides drop before
+    matching. Shared with the streaming twin, which builds it once
+    per drain from the stored index."""
+    return (
+        index.groupBy("fp_hash")
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") > df_cap)
+        .select("fp_hash")
+    )
+
+
+def _best_matches(
+    batch: DataFrame, index: DataFrame, min_shared: int
+) -> DataFrame:
+    """(doc_id, dup_of, shared_fps): each ``batch`` (doc_id, fp_hash)
+    doc's best ``index`` (dup_of, fp_hash) doc — most shared
+    fingerprints, at least ``min_shared``, ties to the smallest
+    dup_of. Per-doc, so the streaming twin runs it per micro-batch
+    and gets the batch answer."""
     pairs = (
-        batch
-        .join(index.select(F.col("doc_id").alias("dup_of"), "fp_hash"), "fp_hash")
+        batch.join(index, "fp_hash")
         .groupBy("doc_id", "dup_of")
         .agg(F.count("*").alias("shared_fps"))
         .filter(F.col("shared_fps") >= min_shared)

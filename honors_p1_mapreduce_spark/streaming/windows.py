@@ -13,6 +13,13 @@ passes its end (late data beyond the delay is dropped), which is the
 state-bounding contract a 100 TB streaming job needs; the
 batch-equivalence test runs complete mode where every window is
 re-emitted each trigger.
+
+The incremental rollup runs the one drain (:func:`.drain.drain`):
+each micro-batch stores the batch rollup's own minute partials
+(``events._minute_partials``), and the store readers and the
+compaction job merge them with the batch operator's re-aggregation,
+cascade and range window (``_regroup_partials``, ``_rollup_cascade``,
+``_moving_stats``), never a copy of them.
 """
 
 from __future__ import annotations
@@ -21,7 +28,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.events import tumbling_counts
+from ..operators.events import (
+    _minute_partials,
+    _moving_stats,
+    _regroup_partials,
+    _rollup_cascade,
+    tumbling_counts,
+)
+from .drain import _parquet_stream, drain
 
 
 def stream_events(
@@ -33,15 +47,7 @@ def stream_events(
     read as raw nanos and converted losslessly to a timestamp."""
     if spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") != "true":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.option("pathGlobFilter", glob).parquet(sf_dir).schema
-    # the file stream source requires a directory path; select just the
-    # events file(s) out of the shared sf dir with a glob filter
-    df = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", glob)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(sf_dir)
-    )
+    df = _parquet_stream(spark, sf_dir, glob)
     if isinstance(df.schema["ts"].dataType, T.LongType):
         # streaming keeps tz-aware TIMESTAMP (watermarks reject NTZ:
         # EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE); the engine session is
@@ -129,28 +135,17 @@ def streaming_incremental_rollup(
     values are derived from the directory name on read, so the
     partials themselves carry no batch_id column.)
     """
-
-    def _merge_batch(batch: DataFrame, batch_id: int) -> None:
-        (
-            batch.groupBy(
-                F.date_trunc("minute", "ts").alias("bucket_start"), "event_type"
-            )
-            .agg(
-                F.count("*").alias("n_events"),
-                F.sum(F.col("value").cast("decimal(24,6)")).alias("sdec"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{store_dir}/batch_id={batch_id}")
-        )
-
-    q = (
-        stream_events(spark, sf_dir, glob=glob)
-        .writeStream.foreachBatch(_merge_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", store_dir + "_ckpt")
-        .start()
+    drain(
+        stream_events(spark, sf_dir, glob=glob),
+        lambda batch: {store_dir: _minute_partials(batch)},
+        store_dir + "_ckpt",
     )
-    q.awaitTermination()
+
+
+def _merged_partials(spark: SparkSession, store_dir: str) -> DataFrame:
+    """One (bucket_start, event_type, n_events, sdec) row per minute
+    from the stored partials, whatever batches they came from."""
+    return _regroup_partials(spark.read.parquet(store_dir), F.col("bucket_start"))
 
 
 def compact_rollup_store(
@@ -190,11 +185,7 @@ def compact_rollup_store(
     files_before = [f for f in p.rglob("*.parquet") if f.is_file()]
     total_bytes = sum(f.stat().st_size for f in files_before)
     n_out = max(1, math.ceil(total_bytes / target_file_bytes))
-    merged = (
-        spark.read.parquet(store_dir)
-        .groupBy("bucket_start", "event_type")
-        .agg(F.sum("n_events").alias("n_events"), F.sum("sdec").alias("sdec"))
-    )
+    merged = _merged_partials(spark, store_dir)
     tmp = str(p) + ".compact"
     # repartition (not coalesce): the merge is already a shuffle, and
     # the output count must not be chained to the input split count
@@ -208,68 +199,20 @@ def compact_rollup_store(
 
 def read_rollup_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """Serve the cascaded (grain, bucket_start, event_type, n_events,
-    sum_value) frame from the partial-aggregate store — the same
-    cascade (and the same exact-decimal carry) as the batch
-    ``events_multi_rollup``, re-aggregating stored partials instead of
-    raw events."""
-    minute = (
-        spark.read.parquet(store_dir)
-        .groupBy("bucket_start", "event_type")
-        .agg(F.sum("n_events").alias("n_events"), F.sum("sdec").alias("sdec"))
-        .persist()
-    )
-    hour = (
-        minute.groupBy(
-            F.date_trunc("hour", "bucket_start").alias("bucket_start"),
-            "event_type",
-        )
-        .agg(F.sum("n_events").alias("n_events"), F.sum("sdec").alias("sdec"))
-        .persist()
-    )
-    day = hour.groupBy(
-        F.date_trunc("day", "bucket_start").alias("bucket_start"), "event_type"
-    ).agg(F.sum("n_events").alias("n_events"), F.sum("sdec").alias("sdec"))
-
-    def out(df: DataFrame, grain: str) -> DataFrame:
-        return df.select(
-            F.lit(grain).alias("grain"),
-            "bucket_start",
-            "event_type",
-            "n_events",
-            F.col("sdec").cast("double").alias("sum_value"),
-        )
-
-    return out(minute, "minute").union(out(hour, "hour")).union(out(day, "day"))
+    sum_value) frame from the partial-aggregate store — the batch
+    ``events_multi_rollup`` cascade (and its exact-decimal carry),
+    re-aggregating stored partials instead of raw events."""
+    return _rollup_cascade(_merged_partials(spark, store_dir))
 
 
 def read_rollup_moving(spark: SparkSession, store_dir: str) -> DataFrame:
     """Serve the trailing 10-minute moving stats (the exact
     ``operators.events.events_moving_stats`` frame) from the
     incremental rollup STORE instead of raw events — the
-    streaming-materialized serving path: the foreachBatch job keeps
-    appending minute partials, this reader merges partials and runs
-    the same range window over them, so a dashboard query never
+    streaming-materialized serving path: the drain keeps appending
+    minute partials, this reader merges partials and runs the batch
+    operator's range window over them, so a dashboard query never
     rescans an event. Batch/stream equivalence is pinned by
     tests/test_streaming.py against events_moving_stats on the same
     data."""
-    from pyspark.sql import Window
-
-    from ..operators.events import MOVING_WINDOW_S
-
-    minute = (
-        spark.read.parquet(store_dir)
-        .groupBy("bucket_start", "event_type")
-        .agg(F.sum("n_events").alias("n_events"), F.sum("sdec").alias("sdec"))
-    )
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy(F.unix_timestamp("bucket_start"))
-        .rangeBetween(-MOVING_WINDOW_S, 0)
-    )
-    return minute.select(
-        "bucket_start",
-        "event_type",
-        "n_events",
-        F.sum("n_events").over(w).alias("mov_events"),
-        F.sum("sdec").over(w).cast("double").alias("mov_sum"),
-    )
+    return _moving_stats(_merged_partials(spark, store_dir))

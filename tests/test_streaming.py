@@ -235,7 +235,7 @@ def test_foreachbatch_store_replay_is_idempotent(spark, tmp_path):
     retried micro-batch must not double-count. The batch_id-keyed
     overwrite sink converges to the same store content when a batch
     fires twice, including a replay after a PARTIAL first write."""
-    from honors_p1_mapreduce_spark.streaming.curation import (
+    from honors_p1_mapreduce_spark.streaming.drain import (
         _write_batch_partition,
     )
 
@@ -267,6 +267,75 @@ def test_foreachbatch_store_replay_is_idempotent(spark, tmp_path):
         ("click", "2024-01-01", 3, 7),
         ("view", "2024-01-02", 1, 5),
     ]
+
+
+def _released(df) -> bool:
+    from pyspark import StorageLevel
+
+    return not df.is_cached and df.storageLevel == StorageLevel.NONE
+
+
+def test_drain_releases_snapshots_when_a_batch_raises(spark, tmp_path):
+    """The drain's release rule: a micro-batch body that raises makes
+    the drain re-raise, and every snapshot — cached while the batch
+    ran — is unpersisted afterwards."""
+    import pytest
+
+    from honors_p1_mapreduce_spark.streaming.drain import (
+        _parquet_stream,
+        drain,
+    )
+
+    src = tmp_path / "src"
+    spark.range(4).toDF("doc_id").write.parquet(str(src))
+    snaps = (spark.range(3).toDF("a"), spark.range(5).toDF("b"))
+    seen = []
+
+    def per_batch(bdf):
+        seen.append([s.storageLevel.useMemory for s in snaps])
+        raise RuntimeError("drain-body-boom")
+
+    with pytest.raises(Exception, match="drain-body-boom"):
+        drain(
+            _parquet_stream(spark, str(src), "*.parquet"),
+            per_batch,
+            str(tmp_path / "ckpt"),
+            snaps,
+        )
+    assert seen == [[True, True]]  # the body ran against cached snapshots
+    assert all(_released(s) for s in snaps)
+
+
+def test_drain_releases_a_snapshot_whose_materialization_raises(
+    spark, tmp_path
+):
+    """A snapshot that fails while materializing (after an earlier
+    one is already cached) is released too, and the stream never
+    starts."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from honors_p1_mapreduce_spark.streaming.drain import (
+        _parquet_stream,
+        drain,
+    )
+
+    src = tmp_path / "src"
+    spark.range(4).toDF("doc_id").write.parquet(str(src))
+    good = spark.range(3).toDF("a")
+    bad = spark.range(3).filter(
+        F.assert_true(F.col("id") < 0, "snapshot-boom").isNull()
+    )
+    ran = []
+    with pytest.raises(Exception, match="snapshot-boom"):
+        drain(
+            _parquet_stream(spark, str(src), "*.parquet"),
+            lambda bdf: ran.append(bdf) or {},
+            str(tmp_path / "ckpt"),
+            (good, bad),
+        )
+    assert not ran
+    assert _released(good) and _released(bad)
 
 
 def test_streaming_media_features_matches_batch(spark, sf_dir, tmp_path):
