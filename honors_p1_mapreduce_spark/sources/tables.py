@@ -9,6 +9,9 @@ pushdown + column pruning for free, with text ingestion kept in
 
 from __future__ import annotations
 
+import atexit
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -30,6 +33,9 @@ TABLES: tuple[str, ...] = (
 
 # Small dimension tables a planner should broadcast in joins at any scale.
 BROADCAST_TABLES: frozenset[str] = frozenset({"region", "nation", "supplier", "part"})
+
+# applications whose artifact directory (_artifact_dir) is removed at exit
+_ARTIFACT_APPS: set[str] = set()
 
 # (application, corpus dir, corpus token, table) -> the schema Spark
 # infers for that table's parquet
@@ -123,9 +129,16 @@ def _artifact_dir(spark: SparkSession, sf_dir: str, kind: str) -> str:
     artifact before reading it back (unlike the in-session memos,
     which trust :func:`memo.corpus_token` to notice a rewritten corpus).
     Distinct corpora NEVER share a path, even with equal basenames
-    (:func:`corpus_path_token`)."""
-    token = corpus_path_token(sf_dir)
-    return f"/tmp/spark_graft_artifacts/{spark.sparkContext.applicationId}/{kind}_{token}"
+    (:func:`corpus_path_token`). The application's directory is removed
+    when this Python process exits: the removal is registered the first
+    time an application's directory is named here."""
+    app = spark.sparkContext.applicationId
+    app_dir = f"/tmp/spark_graft_artifacts/{app}"
+    if app not in _ARTIFACT_APPS:
+        # two threads racing here register the removal twice: harmless
+        _ARTIFACT_APPS.add(app)
+        atexit.register(shutil.rmtree, app_dir, ignore_errors=True)
+    return f"{app_dir}/{kind}_{corpus_path_token(sf_dir)}"
 
 
 def load_table(

@@ -20,24 +20,26 @@ def test_cli_submit_results_roundtrip(spark, tmp_path, capsys):
     (tmp_path / "mr.py").write_text(MAPPER_SRC + REDUCER_SRC)
     inp = tmp_path / "input.txt"
     inp.write_text("apple banana apple\nbanana apple\n")
-    out = tmp_path / "out"
 
-    main(
-        [
-            "submit",
-            "--input", str(inp),
-            "--mapper", f"{tmp_path}/mr.py:wc_map",
-            "--reducer", f"{tmp_path}/mr.py:wc_reduce",
-            "--output", str(out),
-            "--num-reduces", "2",
-        ]
-    )
-    capsys.readouterr()
-    main(["results", str(out)])
-    got = dict(
-        line.split("\t") for line in capsys.readouterr().out.strip().splitlines()
-    )
-    assert got == {"apple": "3", "banana": "2"}
+    # default num_maps/num_reduces (one task), then a shuffled job
+    for i, extra in enumerate(([], ["--num-reduces", "2"])):
+        out = tmp_path / f"out{i}"
+        main(
+            [
+                "submit",
+                "--input", str(inp),
+                "--mapper", f"{tmp_path}/mr.py:wc_map",
+                "--reducer", f"{tmp_path}/mr.py:wc_reduce",
+                "--output", str(out),
+                *extra,
+            ]
+        )
+        capsys.readouterr()
+        main(["results", str(out)])
+        got = dict(
+            line.split("\t") for line in capsys.readouterr().out.strip().splitlines()
+        )
+        assert got == {"apple": "3", "banana": "2"}
 
 
 def test_cli_query_list_and_run(sf_dir, spark, capsys):

@@ -126,6 +126,43 @@ def test_load_table_schema_follows_a_corpus_rewritten_in_place(spark, tmp_path):
     assert df.collect()[0]["lang"] == "en"
 
 
+def test_artifact_dir_is_removed_when_the_process_exits(tmp_path):
+    # a stored-artifact query's scratch files go with the Python process
+    # that wrote them; a fake session keeps this test free of a JVM
+    import os
+    import shutil
+    import subprocess
+    import sys
+    import uuid
+    from pathlib import Path
+
+    app = f"test-exit-{uuid.uuid4().hex}"
+    script = f"""
+import os, types
+from honors_p1_mapreduce_spark.sources.tables import _artifact_dir
+spark = types.SimpleNamespace(sparkContext=types.SimpleNamespace(applicationId={app!r}))
+for kind in ("a", "b"):
+    d = _artifact_dir(spark, {str(tmp_path)!r}, kind)
+    os.makedirs(d)
+    open(os.path.join(d, "part-0"), "w").close()
+print(os.path.dirname(d))
+"""
+    repo = Path(__file__).resolve().parent.parent
+    app_dir = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        check=True,
+        timeout=120,
+    ).stdout.strip()
+    try:
+        assert os.path.basename(app_dir) == app
+        assert not os.path.exists(app_dir)
+    finally:
+        shutil.rmtree(app_dir, ignore_errors=True)
+
+
 def test_read_text_lines_min_partitions(spark, tmp_path):
     # E2: num_maps analog — the input split honors the hint
     p = tmp_path / "many_lines.txt"

@@ -6,6 +6,11 @@ callables with the documented contract (mr/documentation.md:687-721)
 and run through ``map_reduce``; outputs must match the native
 Catalyst-expression operators on the same data. Also covers the
 contract's error-tolerance semantics and the run_job TSV round trip.
+
+``map_reduce`` runs a one-partition input as one task and anything else
+as two stages around a shuffle, so each semantics test runs on its input
+as it is (several partitions) and on ``.coalesce(1)`` (one partition, no
+exchange) through :func:`_shapes`.
 """
 
 from __future__ import annotations
@@ -74,6 +79,13 @@ def ii_reduce(key, values):
 # ------------------------------------------------------- differentials
 
 
+def _shapes(lines):
+    """The input as it is and as one partition: on a multi-core session
+    a small ``createDataFrame`` is one partition per core, so these are
+    the two-stage and the one-task shape of ``map_reduce``."""
+    return [lines, lines.coalesce(1)]
+
+
 def _doc_lines(spark, sf_dir):
     return load_table(spark, sf_dir, "documents").select("text")
 
@@ -109,13 +121,14 @@ def test_inverted_index_differential(spark):
         ],
         ["value"],
     )
-    generic = {
-        (r.key, r.value) for r in map_reduce(lines, ii_map, ii_reduce).collect()
-    }
     native = {
         (r.word, r.doc_ids) for r in inverted_index_from_lines(spark, lines).collect()
     }
-    assert generic == native
+    for shaped in _shapes(lines):
+        generic = {
+            (r.key, r.value) for r in map_reduce(shaped, ii_map, ii_reduce).collect()
+        }
+        assert generic == native
 
 
 # --------------------------------------------------- contract semantics
@@ -129,8 +142,9 @@ def test_mapper_error_skips_line_only(spark):
             raise ValueError("bad record")
         yield from wc_map(line)
 
-    out = {(r.key, r.value) for r in map_reduce(lines, mapper, wc_reduce).collect()}
-    assert out == {("good", "2"), ("a", "1"), ("b", "1")}
+    for shaped in _shapes(lines):
+        out = {(r.key, r.value) for r in map_reduce(shaped, mapper, wc_reduce).collect()}
+        assert out == {("good", "2"), ("a", "1"), ("b", "1")}
 
 
 def test_mapper_error_drops_pairs_already_yielded(spark):
@@ -141,17 +155,17 @@ def test_mapper_error_drops_pairs_already_yielded(spark):
         if "BOOM" in line:
             raise ValueError("bad record")
 
-    out = {(r.key, r.value) for r in map_reduce(lines, mapper, wc_reduce).collect()}
-    assert out == {("a", "2")}
+    for shaped in _shapes(lines):
+        out = {(r.key, r.value) for r in map_reduce(shaped, mapper, wc_reduce).collect()}
+        assert out == {("a", "2")}
 
 
-def test_key_runs_split_across_batches_and_map_tasks(spark):
-    # two records per Arrow batch on both sides: "common" and "k0".."k2"
-    # arrive as many grouped rows from several map tasks and batches, so
-    # their runs cross reduce batch boundaries
-    rows = [(f"common k{i % 3} w{i}",) for i in range(40)]
-    lines = spark.createDataFrame(rows, ["value"]).repartition(4)
-    assert lines.rdd.getNumPartitions() >= 2
+_KEY_RUN_ROWS = [(f"common k{i % 3} w{i}",) for i in range(40)]
+
+
+def _key_runs_two_per_batch(spark, lines):
+    """Run ``lines`` with two records per Arrow batch and a reducer
+    that raises on "k1"; check every other key's full count."""
 
     def reducer(key, values):
         if key == "k1":
@@ -173,6 +187,23 @@ def test_key_runs_split_across_batches_and_map_tasks(spark):
     assert out == expected
 
 
+def test_key_runs_split_across_batches_and_map_tasks(spark):
+    # two records per Arrow batch on both sides: "common" and "k0".."k2"
+    # arrive as many grouped rows from several map tasks and batches, so
+    # their runs cross reduce batch boundaries
+    lines = spark.createDataFrame(_KEY_RUN_ROWS, ["value"]).repartition(4)
+    assert lines.rdd.getNumPartitions() >= 2
+    _key_runs_two_per_batch(spark, lines)
+
+
+def test_key_runs_split_across_batches_in_one_task(spark):
+    # one partition, so one task maps and reduces: every key's values
+    # come from 20 Arrow batches and are grouped across all of them
+    lines = spark.createDataFrame(_KEY_RUN_ROWS, ["value"]).coalesce(1)
+    assert lines.rdd.getNumPartitions() == 1
+    _key_runs_two_per_batch(spark, lines)
+
+
 def test_reducer_error_skips_key_only(spark):
     lines = spark.createDataFrame([("a b",), ("a c",)], ["value"])
 
@@ -181,8 +212,9 @@ def test_reducer_error_skips_key_only(spark):
             raise ValueError("bad key")
         yield key, sum(int(v) for v in values)
 
-    out = {(r.key, r.value) for r in map_reduce(lines, wc_map, reducer).collect()}
-    assert out == {("b", "1"), ("c", "1")}
+    for shaped in _shapes(lines):
+        out = {(r.key, r.value) for r in map_reduce(shaped, wc_map, reducer).collect()}
+        assert out == {("b", "1"), ("c", "1")}
 
 
 def test_values_are_strings_and_multiset(spark):
@@ -193,37 +225,35 @@ def test_values_are_strings_and_multiset(spark):
         assert all(isinstance(v, str) for v in values)
         yield key, len(values)
 
-    out = dict(
-        (r.key, r.value)
-        for r in map_reduce(lines, wc_map, reducer).collect()
-    )
-    assert out == {"x": "2"}
+    for shaped in _shapes(lines):
+        out = dict(
+            (r.key, r.value)
+            for r in map_reduce(shaped, wc_map, reducer).collect()
+        )
+        assert out == {"x": "2"}
 
 
 def test_empty_input_completes(spark):
     empty = spark.createDataFrame([], "value string")
-    assert map_reduce(empty, wc_map, wc_reduce).count() == 0
+    for shaped in _shapes(empty):
+        assert map_reduce(shaped, wc_map, wc_reduce).count() == 0
 
 
 def test_run_job_tsv_round_trip(spark, tmp_path):
-    src = tmp_path / "in.txt"
-    src.write_text("hello world\nhello spark\n")
-    out_dir = str(tmp_path / "out")
-    df = run_job(
-        spark, str(src), wc_map, wc_reduce, out_dir, num_maps=2, num_reduces=2
-    )
-    assert {(r.key, r.value) for r in df.collect()} == {
-        ("hello", "2"),
-        ("world", "1"),
-        ("spark", "1"),
-    }
     from honors_p1_mapreduce_spark.sources.text import read_tsv_results
 
-    back = read_tsv_results(spark, out_dir)
-    assert {(r[0], r[1]) for r in back.collect()} == {
-        ("hello", "2"),
-        ("world", "1"),
-        ("spark", "1"),
-    }
-    # results --limit N analog (mr/client/client.py:137-140)
-    assert read_tsv_results(spark, out_dir, limit=2).count() == 2
+    src = tmp_path / "in.txt"
+    src.write_text("hello world\nhello spark\n")
+    want = {("hello", "2"), ("world", "1"), ("spark", "1")}
+    # defaults: one split, one task; 2 and 2: the shuffled shape
+    for maps, reduces in ((None, None), (2, 2)):
+        out_dir = str(tmp_path / f"out_{maps}_{reduces}")
+        df = run_job(
+            spark, str(src), wc_map, wc_reduce, out_dir,
+            num_maps=maps, num_reduces=reduces,
+        )
+        assert {(r.key, r.value) for r in df.collect()} == want
+        back = read_tsv_results(spark, out_dir)
+        assert {(r[0], r[1]) for r in back.collect()} == want
+        # results --limit N analog (mr/client/client.py:137-140)
+        assert read_tsv_results(spark, out_dir, limit=2).count() == 2

@@ -19,6 +19,8 @@ from honors_p1_mapreduce_spark.operators.relational import (
 )
 from honors_p1_mapreduce_spark.operators.wordcount import wordcount
 
+from .test_engine_runtime import _jobs_of
+
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -74,11 +76,23 @@ def test_map_reduce_single_shuffle_arrow_only(spark):
     assert "MapInPandas" not in plan
 
 
-def test_run_job_writes_the_reduce_partitions_as_they_are(
-    spark, tmp_path, monkeypatch
-):
-    # with num_reduces the sink keeps map_reduce's key partitioning:
-    # the written plan has the one job shuffle, not a second for the sink
+def test_map_reduce_on_an_exchange_input_runs_no_job_before_an_action(spark):
+    # the one-task shape needs the input's partition count; counting an
+    # input with an exchange would make AQE run that stage as a job
+    df = spark.createDataFrame([("a b",), ("b c",)], ["value"]).repartition(4)
+    built = _jobs_of(
+        spark,
+        lambda: map_reduce(
+            df,
+            lambda line: ((w, 1) for w in line.split()),
+            lambda key, values: [(key, len(values))],
+        ),
+    )
+    assert built == 0
+
+
+def _record_written_plans(monkeypatch) -> list[str]:
+    """The executed plan of every frame written as CSV from now on."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     written, csv = [], DataFrameWriter.csv
@@ -88,6 +102,39 @@ def test_run_job_writes_the_reduce_partitions_as_they_are(
         return csv(self, path, *args, **kwargs)
 
     monkeypatch.setattr(DataFrameWriter, "csv", record)
+    return written
+
+
+def test_run_job_on_one_split_is_one_task_without_exchange(
+    spark, tmp_path, monkeypatch
+):
+    # a one-split file with default num_maps/num_reduces: one mapInArrow
+    # task maps and reduces, so the job is one Spark job with no shuffle
+    written = _record_written_plans(monkeypatch)
+    src = tmp_path / "in.txt"
+    src.write_text("a b\nb c\n")
+    jobs = _jobs_of(
+        spark,
+        lambda: run_job(
+            spark,
+            str(src),
+            lambda line: ((w, 1) for w in line.split()),
+            lambda key, values: [(key, len(values))],
+            str(tmp_path / "out"),
+        ),
+    )
+    assert jobs == 1
+    assert len(written) == 1
+    assert "Exchange" not in written[0], written[0]
+    assert written[0].count("MapInArrow") == 1, written[0]
+
+
+def test_run_job_writes_the_reduce_partitions_as_they_are(
+    spark, tmp_path, monkeypatch
+):
+    # with num_reduces the sink keeps map_reduce's key partitioning:
+    # the written plan has the one job shuffle, not a second for the sink
+    written = _record_written_plans(monkeypatch)
     src = tmp_path / "in.txt"
     src.write_text("a b\nb c\n")
     run_job(

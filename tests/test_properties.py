@@ -86,12 +86,14 @@ def test_map_reduce_wordcount_matches_python(spark, lines):
         yield key, sum(int(v) for v in values)
 
     df = spark.createDataFrame([(ln,) for ln in lines], "value string")
-    got = {
-        (r.key, r.value)
-        for r in map_reduce(df, mapper, reducer, num_partitions=2).collect()
-    }
     want = Counter(t for ln in lines for t in _py_tokens(ln))
-    assert got == {(k, str(v)) for k, v in want.items()}
+    # two shuffled partitions, and one partition run as one task
+    for shaped, n in ((df, 2), (df.coalesce(1), None)):
+        got = {
+            (r.key, r.value)
+            for r in map_reduce(shaped, mapper, reducer, num_partitions=n).collect()
+        }
+        assert got == {(k, str(v)) for k, v in want.items()}
 
 
 EDGES = st.lists(
