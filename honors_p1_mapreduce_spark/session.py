@@ -9,14 +9,27 @@ configuration rather than code (SURVEY.md §2.2 R1, §4.2):
 - ``num_reduces`` -> ``spark.sql.shuffle.partitions``.
 
 Everything else (AQE, Arrow, UTC session timezone) is 100TB-scale /
-oracle-parity hygiene.
+oracle-parity hygiene, plus two settings for the Python workers:
+
+- ``spark.python.daemon.module`` -> :mod:`.worker_daemon`, which
+  drops ``pyspark.zip``, the py4j zip and Spark's jar from the
+  workers' import path when the installed pyspark is the same version,
+  then runs pyspark's own daemon;
+- ``spark.executorEnv.PYTHONPATH`` starts with this package's root
+  directory, so workers import the package (that daemon module, and
+  the functions cloudpickle pickles by reference) whatever directory
+  the driver runs in.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+# the directory that holds this package, for the workers' PYTHONPATH
+_PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
 
 
 def default_cpus() -> int:
@@ -44,10 +57,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a local SparkSession tuned for this engine.
 
-    ``shuffle_partitions`` defaults to the core count: at local scale
-    200 partitions over-parallelizes tiny shuffles; on a real cluster
-    this knob is set per-deployment (AQE coalesces the excess either
-    way).
+    ``shuffle_partitions`` defaults to the core count, but never fewer
+    than 8: at local scale 200 partitions over-parallelizes tiny
+    shuffles; on a real cluster this knob is set per-deployment (AQE
+    coalesces the excess either way).
+
+    A ``spark.executorEnv.PYTHONPATH`` in ``extra_conf`` follows the
+    package's root directory, which always comes first.
     """
     if cpus is None:
         cpus = default_cpus()
@@ -68,6 +84,8 @@ def get_spark(
         .config("spark.speculation.quantile", "0.25")
         # Arrow for the pandas-UDF slow path
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # workers import pyspark from site-packages, not the zips (above)
+        .config("spark.python.daemon.module", "honors_p1_mapreduce_spark.worker_daemon")
         # deterministic timestamps vs the DuckDB oracle
         .config("spark.sql.session.timeZone", "UTC")
         # driver parquet carries TIMESTAMP(NANOS) (events.ts): read as
@@ -97,7 +115,11 @@ def get_spark(
         # it on the FIRST session they create.
         .config("spark.sql.codegen.cache.maxEntries", "20000")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        filter(None, (_PACKAGE_ROOT, conf.get("spark.executorEnv.PYTHONPATH")))
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
